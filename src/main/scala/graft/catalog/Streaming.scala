@@ -1,13 +1,13 @@
 package graft.catalog
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, StructType}
 
 import graft.core.QueryDef
+import graft.kafka.{KafkaStubBroker, KafkaStubCluster, SchemaRegistryStub}
 import graft.streaming.{DeltaUpsertStore, EsHttpStore, EsStub, Ingest,
-  RoutedAppendStore, UpsertParquetStore}
+  RoutedAppendStore, Service, UpsertParquetStore}
 
 /** End-to-end Structured Streaming queries: each runs a REAL streaming
   * query (file-stream source standing in for the Kafka topic →
@@ -24,21 +24,77 @@ object Streaming {
     java.nio.file.Files.createTempDirectory(p, prefix).toString
   }
 
+  // The ingest oracle every wire variant of q_stream_ingest_json
+  // shares: the codec, broker layout or failure drill must be invisible
+  // in the decoded rows.
+  private val IngestOracle =
+    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
+      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
+      |FROM events ORDER BY event_id""".stripMargin
+
+  /** The consumer-side decode matching [[IngestOracle]]: the JSON wire
+    * flattened, with `prop_k` parsed out of `props`.
+    */
+  private def decodeIngest(wire: DataFrame): DataFrame =
+    Ingest.decodeJsonWire(wire)
+      .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
+        col("value"),
+        from_json(col("props"), StructType.fromDDL("k INT")).getField("k")
+          .as("prop_k"))
+
+  // Last write per user wins: the oracle every keyed-upsert sink
+  // shares, whatever its storage or wire.
+  private val LatestPerUserOracle =
+    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
+      |  value AS last_value
+      |FROM (SELECT *, row_number() OVER
+      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+      |      FROM events) t
+      |WHERE rn = 1 ORDER BY user_id""".stripMargin
+
+  // LatestPerUserOracle after the GDPR delete of every 7th user at the
+  // 2024-01-20 cutoff (users with a later event survive).
+  private val LatestAfterDeleteOracle =
+    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
+      |  value AS last_value
+      |FROM (SELECT *, row_number() OVER
+      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
+      |      FROM events) t
+      |WHERE rn = 1
+      |  AND NOT (user_id % 7 = 0 AND ts <= TIMESTAMP '2024-01-20 00:00:00')
+      |ORDER BY user_id""".stripMargin
+
+  /** Land `waves` one at a time as parquet files of a fresh directory
+    * and, after each lands, call `pass` with a file stream (schema
+    * `ddl`) over the directory: a scheduled job that finds the files
+    * added since its last run. `pass` resumes one shared checkpoint.
+    */
+  private def inWaves(s: SparkSession, ddl: String, waves: DataFrame*)(
+      pass: DataFrame => Unit): Unit = {
+    val root = uniqueDir("waves_")
+    waves.zipWithIndex.foreach { case (wave, i) =>
+      val stage = s"$root/stage_b$i"
+      wave.coalesce(1).write.parquet(stage)
+      val part = new java.io.File(stage).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.move(part.toPath, java.nio.file.Paths.get(root, s"b$i.parquet"))
+      pass(s.readStream.schema(StructType.fromDDL(ddl))
+        .option("pathGlobFilter", "b*.parquet").parquet(root))
+    }
+  }
+
+  /** A keyed store's rows in the shape of [[LatestPerUserOracle]]. */
+  private def lastPerUser(store: DataFrame): DataFrame =
+    store.select(col("user_id"), col("event_id").as("last_event_id"),
+        col("event_type").as("last_event_type"), col("value").as("last_value"))
+      .orderBy("user_id")
+
   // T1-T3 + F5/F6/P4: the reference's core streaming query — wire
   // encode (producer, F7) → Kafka-style (key, value) → CAST → from_json
   // → flatten (consumer) — through real micro-batch execution.
-  val streamIngestJson: QueryDef = QueryDef.sql("q_stream_ingest_json")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+  val streamIngestJson: QueryDef = QueryDef.sql("q_stream_ingest_json")(IngestOracle) { (s, dir) =>
     val wire = Ingest.toJsonWire(Ingest.eventsStream(s, dir), "event_id")
-    val decoded = Ingest.decodeJsonWire(wire)
-      .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-        col("value"),
-        from_json(col("props"),
-          org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-          .as("prop_k"))
-    Ingest.runToMemory(decoded).orderBy("event_id")
+    Ingest.runToMemory(decodeIngest(wire)).orderBy("event_id")
   }
 
   // DSV codec round-trip through the stream (F4 + from_csv), with the
@@ -76,26 +132,11 @@ object Streaming {
   // K3 + K5: upsert-by-key sink semantics (`es.mapping.id`, last write
   // per key wins) — the stream drains into the keyed store, and the
   // final store contents must equal the batch last-write-wins answer.
-  val sinkUpsert: QueryDef = QueryDef.sql("q_sink_upsert")(
-    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-      |  value AS last_value
-      |FROM (SELECT *, row_number() OVER
-      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |      FROM events) t
-      |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
+  val sinkUpsert: QueryDef = QueryDef.sql("q_sink_upsert")(LatestPerUserOracle) { (s, dir) =>
     val store = new UpsertParquetStore(uniqueDir("upsert_"), "user_id", Seq("ts", "event_id"))
     require(store.healthCheck(), "sink preflight failed")  // K5
-    val q = Ingest.eventsStream(s, dir).writeStream
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        store.upsert(b.toDF(), id))
-      .option("checkpointLocation", uniqueDir("chk_upsert_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.read(s)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"), col("value").as("last_value"))
-      .orderBy("user_id")
+    Ingest.drainBatches(Ingest.eventsStream(s, dir))(store.upsert)
+    lastPerUser(store.read(s))
   }
 
   // K3 maintenance at scale: the MINOR-compaction twin of
@@ -119,16 +160,11 @@ object Streaming {
       Seq("ts", "event_id"))
     require(store.healthCheck(), "sink preflight failed") // K5
     var first = true
-    val q = Ingest.eventsStream(s, dir).writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        store.upsert(b.toDF(), id)
-        if (first) { store.compact(b.sparkSession); first = false }
-        else store.compactDeltas(b.sparkSession)
-      }
-      .option("checkpointLocation", uniqueDir("chk_delta_minor_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Ingest.drainBatches(Ingest.eventsStream(s, dir)) { (b, id) =>
+      store.upsert(b, id)
+      if (first) { store.compact(b.sparkSession); first = false }
+      else store.compactDeltas(b.sparkSession)
+    }
     // delete one key band AS OF after the feed, then fold the deltas:
     // the tombstones must survive the fold and keep hiding base rows
     val doomed = store.read(s).filter(col("user_id") % 10 === 3)
@@ -137,10 +173,7 @@ object Streaming {
         (col("event_id") + 1).as("event_id"))
     store.delete(doomed, 999L)
     store.compactDeltas(s)
-    store.read(s)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"), col("value").as("last_value"))
-      .orderBy("user_id")
+    lastPerUser(store.read(s))
   }
 
   // K3 at scale: the log-structured upsert store — per-batch delta
@@ -150,29 +183,16 @@ object Streaming {
   // mid-stream (every odd batch) and at the end, proving readers see an
   // equivalent merged view at any compaction boundary.
   val sinkUpsertDelta: QueryDef = QueryDef.sql("q_sink_upsert_delta")(
-    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-      |  value AS last_value
-      |FROM (SELECT *, row_number() OVER
-      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |      FROM events) t
-      |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
+    LatestPerUserOracle) { (s, dir) =>
     val store = new DeltaUpsertStore(uniqueDir("upsert_delta_"), "user_id",
       Seq("ts", "event_id"))
     require(store.healthCheck(), "sink preflight failed")  // K5
-    val q = Ingest.eventsStream(s, dir).writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        store.upsert(b.toDF(), id)
-        if (id % 2 == 1) store.compact(b.sparkSession)
-      }
-      .option("checkpointLocation", uniqueDir("chk_upsert_delta_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Ingest.drainBatches(Ingest.eventsStream(s, dir)) { (b, id) =>
+      store.upsert(b, id)
+      if (id % 2 == 1) store.compact(b.sparkSession)
+    }
     store.compact(s)
-    store.read(s)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"), col("value").as("last_value"))
-      .orderBy("user_id")
+    lastPerUser(store.read(s))
   }
 
   // Time travel over the log-structured upsert store: two upsert
@@ -195,10 +215,7 @@ object Streaming {
     val ev = graft.core.Tables.events(s, dir)
     store.upsert(ev.filter(col("event_id") % 2 === 0), 0)
     store.upsert(ev.filter(col("event_id") % 2 =!= 0), 1)
-    store.readAt(s, 1)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"), col("value").as("last_value"))
-      .orderBy("user_id")
+    lastPerUser(store.readAt(s, 1))
   }
 
   // Data skipping over the log-structured store: three range-batched
@@ -250,14 +267,7 @@ object Streaming {
   // the delete shape that works: tombstone append + deferred compaction,
   // never a synchronous scan-and-rewrite of the corpus.
   val sinkUpsertDeltaDelete: QueryDef = QueryDef.sql("q_sink_upsert_delta_delete")(
-    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-      |  value AS last_value
-      |FROM (SELECT *, row_number() OVER
-      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |      FROM events) t
-      |WHERE rn = 1
-      |  AND NOT (user_id % 7 = 0 AND ts <= TIMESTAMP '2024-01-20 00:00:00')
-      |ORDER BY user_id""".stripMargin) { (s, dir) =>
+    LatestAfterDeleteOracle) { (s, dir) =>
     val store = new DeltaUpsertStore(uniqueDir("upsert_del_"), "user_id",
       Seq("ts", "event_id"))
     require(store.healthCheck(), "sink preflight failed")  // K5
@@ -270,10 +280,7 @@ object Streaming {
       // tombstone out-orders any event at the cutoff instant itself
       .withColumn("event_id", lit(Long.MaxValue)), 1)
     store.compact(s)
-    store.read(s)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"), col("value").as("last_value"))
-      .orderBy("user_id")
+    lastPerUser(store.read(s))
   }
 
   // Streaming windowed TOP-K: the "trending event types per hour"
@@ -318,36 +325,18 @@ object Streaming {
   // latest-per-key reduction bounds what crosses the wire to O(keys).
   // (The feed has no (user, ts_us) ties; a tie would 409 the later
   // event_id, the real engine's strictly-greater rule.)
-  val sinkUpsertEs: QueryDef = QueryDef.sql("q_sink_upsert_es")(
-    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-      |  value AS last_value
-      |FROM (SELECT *, row_number() OVER
-      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |      FROM events) t
-      |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-    val stub = new EsStub()
-    stub.start()
-    try {
-      val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
+  val sinkUpsertEs: QueryDef = QueryDef.sql("q_sink_upsert_es")(LatestPerUserOracle) { (s, dir) =>
+    Service.using(new EsStub()) { stub =>
+      val docSchema = StructType.fromDDL(
         "user_id BIGINT, event_id BIGINT, event_type STRING, value DOUBLE")
       val store = new EsHttpStore(stub.baseUrl, "events", "user_id",
         Seq("ts", "event_id"), "_ver", docSchema)
       require(store.healthCheck(), "sink preflight failed") // K5 over the wire
-      val q = Ingest.eventsStream(s, dir)
-        .withColumn("_ver", unix_micros(col("ts")))
-        .writeStream
-        .foreachBatch((b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-          store.upsert(b.toDF(), id))
-        .option("checkpointLocation", uniqueDir("chk_upsert_es_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val out = store.read(s)
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_event_type"), col("value").as("last_value"))
-        .orderBy("user_id")
+      Ingest.drainBatches(Ingest.eventsStream(s, dir)
+        .withColumn("_ver", unix_micros(col("ts"))))(store.upsert)
+      val out = lastPerUser(store.read(s))
       graft.core.Spill.materialize(out)(())
-    } finally stub.stop()
+    }
   }
 
   // The GDPR delete over the REAL wire: external-versioned `_bulk`
@@ -360,18 +349,9 @@ object Streaming {
   // engine's optimistic concurrency rule instead of a merge window.
   // O(keys) delete actions cross the wire from the executors.
   val sinkUpsertEsDelete: QueryDef = QueryDef.sql("q_sink_upsert_es_delete")(
-    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-      |  value AS last_value
-      |FROM (SELECT *, row_number() OVER
-      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |      FROM events) t
-      |WHERE rn = 1
-      |  AND NOT (user_id % 7 = 0 AND ts <= TIMESTAMP '2024-01-20 00:00:00')
-      |ORDER BY user_id""".stripMargin) { (s, dir) =>
-    val stub = new EsStub()
-    stub.start()
-    try {
-      val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    LatestAfterDeleteOracle) { (s, dir) =>
+    Service.using(new EsStub()) { stub =>
+      val docSchema = StructType.fromDDL(
         "user_id BIGINT, event_id BIGINT, event_type STRING, value DOUBLE")
       val store = new EsHttpStore(stub.baseUrl, "events", "user_id",
         Seq("_ver"), "_ver", docSchema)
@@ -383,12 +363,9 @@ object Streaming {
       store.delete(ev.select("user_id").distinct()
         .filter(col("user_id") % 7 === 0)
         .withColumn("_ver", unix_micros(cutoff)), 1)
-      val out = store.read(s)
-        .select(col("user_id"), col("event_id").as("last_event_id"),
-          col("event_type").as("last_event_type"), col("value").as("last_value"))
-        .orderBy("user_id")
+      val out = lastPerUser(store.read(s))
       graft.core.Spill.materialize(out)(())
-    } finally stub.stop()
+    }
   }
 
   // K4 over the REAL wire: dynamic per-row index routing
@@ -400,29 +377,21 @@ object Streaming {
   val sinkRouteEs: QueryDef = QueryDef.sql("q_sink_route_es")(
     """SELECT 'type-' || event_type AS idx, COUNT(*) AS n
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val stub = new EsStub()
-    stub.start()
-    try {
-      val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    Service.using(new EsStub()) { stub =>
+      val docSchema = StructType.fromDDL(
         "event_id BIGINT, user_id BIGINT, value DOUBLE")
       val store = new EsHttpStore(stub.baseUrl, "", "event_id", Seq("event_id"),
         "event_id", docSchema)
       require(store.healthCheck(), "sink preflight failed") // K5
       val routed = Ingest.eventsStream(s, dir)
         .withColumn("route", concat(lit("type-"), col("event_type")))
-      val q = routed.writeStream
-        .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-          store.appendRouted(b.toDF(), "route"))
-        .option("checkpointLocation", uniqueDir("chk_route_es_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Ingest.drainBatches(routed)((b, _) => store.appendRouted(b, "route"))
       val out = store.readRouted(s)
         .groupBy(col("es_index").as("idx"))
         .agg(count(lit(1)).as("n"))
         .orderBy("idx")
       graft.core.Spill.materialize(out)(())
-    } finally stub.stop()
+    }
   }
 
   // K4: append sink with dynamic per-key index routing
@@ -434,13 +403,7 @@ object Streaming {
     require(store.healthCheck(), "sink preflight failed")  // K5
     val routed = Ingest.eventsStream(s, dir)
       .withColumn("route", concat(lit("type-"), col("event_type")))
-    val q = routed.writeStream
-      .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        store.append(b.toDF(), "route"))
-      .option("checkpointLocation", uniqueDir("chk_route_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Ingest.drainBatches(routed)((b, _) => store.append(b, "route"))
     store.read(s)
       .groupBy(col("index").cast("string").as("idx"))
       .agg(count(lit(1)).as("n"))
@@ -551,25 +514,19 @@ object Streaming {
       |        FROM events) t WHERE rn = 1) l
       |  ON s.user_id = l.user_id
       |ORDER BY s.user_id""".stripMargin) { (s, dir) =>
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val out = Ingest.runToMemory(
-        graft.streaming.Stateful.userSummaries(Ingest.eventsStream(s, dir)).toDF(),
-        mode = "update")
-      // update-mode memory sink APPENDS each batch's emissions; under a
-      // paced multi-batch source a key re-emits per touching batch.
-      // n_events is strictly monotone per key, so the struct max IS the
-      // final emission — batching-invariant, like q_stream_mapstate_counts.
-      out.groupBy("user_id")
-        .agg(max(struct(col("n_events"), col("max_value"), col("last_event_id"))).as("m"))
-        .select(col("user_id"), col("m.n_events").as("n_events"),
-          col("m.max_value").as("max_value"),
-          col("m.last_event_id").as("last_event_id"))
-        .orderBy("user_id")
-    } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    val out = Ingest.runToMemory(
+      graft.streaming.Stateful.userSummaries(Ingest.eventsStream(s, dir)).toDF(),
+      mode = "update", rocksDb = true)
+    // update-mode memory sink APPENDS each batch's emissions; under a
+    // paced multi-batch source a key re-emits per touching batch.
+    // n_events is strictly monotone per key, so the struct max IS the
+    // final emission — batching-invariant, like q_stream_mapstate_counts.
+    out.groupBy("user_id")
+      .agg(max(struct(col("n_events"), col("max_value"), col("last_event_id"))).as("m"))
+      .select(col("user_id"), col("m.n_events").as("n_events"),
+        col("m.max_value").as("max_value"),
+        col("m.last_event_id").as("last_event_id"))
+      .orderBy("user_id")
   }
 
   // Stream-stream LEFT OUTER join: matches emit eagerly like the inner
@@ -733,43 +690,20 @@ object Streaming {
     val maxUs = ev.agg(max(unix_micros(col("ts")))).head.getLong(0)
     val isLate = unix_micros(col("ts")) < maxUs - 3L * 3600000000L &&
       col("event_id") % 7 === 0
-    val root = uniqueDir("late_")
     val outDir = uniqueDir("late_out_")
     val chk = uniqueDir("late_chk_")
-    def writeBatch(df: DataFrame, name: String): Unit = {
-      val stage = s"$root/stage_$name"
-      df.coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(root, s"$name.parquet"))
-    }
-    def runPass(): Unit = {
-      val src = s.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE"))
-        .option("pathGlobFilter", "b*.parquet")
-        .parquet(root)
+    // pass 1 commits with watermark = max - 1h and closed windows emit;
+    // pass 2 must drop every late row and emit nothing new
+    inWaves(s, "event_id BIGINT, ts TIMESTAMP, user_id BIGINT, event_type STRING, value DOUBLE",
+        ev.filter(!isLate), ev.filter(isLate)) { src =>
       val agg = src.withWatermark("ts", "1 hour")
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n"))
         .select(unix_timestamp(col("window.start")).as("win_start"),
           col("event_type"), col("n"))
-      Ingest.withStatePartitions(s) {
-        val q = agg.writeStream
-          .foreachBatch((b: org.apache.spark.sql.Dataset[Row], _: Long) =>
-            b.write.mode("append").parquet(outDir))
-          .outputMode("append")
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      Ingest.drainBatches(agg, checkpoint = chk, statePartitions = true)(
+        (b, _) => b.write.mode("append").parquet(outDir))
     }
-    writeBatch(ev.filter(!isLate), "b0")
-    runPass()  // commits with watermark = max - 1h; closed windows emit
-    writeBatch(ev.filter(isLate), "b1")
-    runPass()  // every late row must be dropped; nothing new may emit
     s.read.parquet(outDir).orderBy("win_start", "event_type")
   }
 
@@ -800,15 +734,10 @@ object Streaming {
   // two-algorithms-one-oracle pattern from the CC dedup pair.
   val streamSessionTimers: QueryDef =
     QueryDef.sql("q_stream_session_timers")(streamSessionWindow.oracle.get) { (s, dir) =>
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        Ingest.runToMemory(
-          graft.streaming.Stateful.sessionsViaTimers(Ingest.eventsStream(s, dir)).toDF())
-          .orderBy("user_id", "session_start")
-      } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+      Ingest.runToMemory(
+        graft.streaming.Stateful.sessionsViaTimers(Ingest.eventsStream(s, dir)).toDF(),
+        rocksDb = true)
+        .orderBy("user_id", "session_start")
     }
 
   // Streaming AS-OF join — the temporal join Structured Streaming lacks
@@ -833,15 +762,10 @@ object Streaming {
       |   ORDER BY c.c_us DESC, c.click_id DESC LIMIT 1) AS click_id
       |FROM p, wm WHERE p.p_us <= wm.wm_us
       |ORDER BY purchase_id""".stripMargin) { (s, dir) =>
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      Ingest.runToMemory(
-        graft.streaming.Stateful.asOfViaTimers(Ingest.eventsStream(s, dir)).toDF())
-        .orderBy("purchase_id")
-    } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+    Ingest.runToMemory(
+      graft.streaming.Stateful.asOfViaTimers(Ingest.eventsStream(s, dir)).toDF(),
+      rocksDb = true)
+      .orderBy("purchase_id")
   }
 
   // MapState (third typed-state kind, completing the
@@ -851,23 +775,17 @@ object Streaming {
     QueryDef.sql("q_stream_mapstate_counts")(
       """SELECT user_id, event_type, CAST(COUNT(*) AS BIGINT) AS n
         |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prev = s.conf.getOption(key)
-      s.conf.set(key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        // update-mode memory sink APPENDS each batch's emissions; with
-        // more than one micro-batch (maxFilesPerTrigger, a second file
-        // matching the glob) intermediate counts land as extra rows. The
-        // counts are monotone per key, so last-emission == max(n) —
-        // reduce to it instead of assuming a single-batch source.
-        Ingest.runToMemory(
-          graft.streaming.Stateful.userTypeCounts(Ingest.eventsStream(s, dir)).toDF(),
-          mode = "update")
-          .groupBy("user_id", "event_type")
-          .agg(max(col("n")).as("n"))
-          .orderBy("user_id", "event_type")
-      } finally prev.fold(s.conf.unset(key))(s.conf.set(key, _))
+      // update-mode memory sink APPENDS each batch's emissions; with
+      // more than one micro-batch (maxFilesPerTrigger, a second file
+      // matching the glob) intermediate counts land as extra rows. The
+      // counts are monotone per key, so last-emission == max(n) —
+      // reduce to it instead of assuming a single-batch source.
+      Ingest.runToMemory(
+        graft.streaming.Stateful.userTypeCounts(Ingest.eventsStream(s, dir)).toDF(),
+        mode = "update", rocksDb = true)
+        .groupBy("user_id", "event_type")
+        .agg(max(col("n")).as("n"))
+        .orderBy("user_id", "event_type")
     }
 
   // Incremental processing across RUNS — the production cadence of a
@@ -897,47 +815,25 @@ object Streaming {
     val split = ev
       .agg(expr("(min(unix_micros(ts)) + 2 * max(unix_micros(ts))) div 3"))
       .first().getLong(0)
-    val root = uniqueDir("incr_")
     val store = uniqueDir("incr_store_")
     val chk = uniqueDir("incr_chk_")
-    def writeBatch(df: DataFrame, name: String): Unit = {
-      val stage = s"$root/stage_$name"
-      df.coalesce(1).write.parquet(stage)
-      val part = new java.io.File(stage).listFiles()
-        .filter(_.getName.endsWith(".parquet")).head
-      java.nio.file.Files.move(part.toPath,
-        java.nio.file.Paths.get(root, s"$name.parquet"))
-    }
-    def runPass(): Unit = {
-      val src = s.readStream
-        .schema(org.apache.spark.sql.types.StructType.fromDDL(
-          "event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE"))
-        .option("pathGlobFilter", "b*.parquet")
-        .parquet(root)
+    // history (batch 0 from a fresh checkpoint), then the delta, whose
+    // strictly later batch ids upsert over batch 0
+    inWaves(s, "event_id BIGINT, ts TIMESTAMP, event_type STRING, value DOUBLE",
+        ev.filter(unix_micros(col("ts")) < split),
+        ev.filter(unix_micros(col("ts")) >= split)) { src =>
       val agg = src
         .groupBy(col("event_type"),
           expr("unix_micros(ts) div 86400000000").as("day"))
         .agg(count(lit(1)).as("n"),
           sum(col("value").cast(DecimalType(18, 2))).as("sum_dec"))
-      Ingest.withStatePartitions(s) {
-        val q = agg.writeStream
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-            // update mode emits only the keys this batch changed; the
-            // store append is the upsert journal (last batch id wins)
-            if (!b.isEmpty)
-              b.withColumn("bid", lit(id)).write.mode("append").parquet(store)
-          }
-          .outputMode("update")
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+      Ingest.drainBatches(agg, "update", chk, statePartitions = true) { (b, id) =>
+        // update mode emits only the keys this batch changed; the
+        // store append is the upsert journal (last batch id wins)
+        if (!b.isEmpty)
+          b.withColumn("bid", lit(id)).write.mode("append").parquet(store)
       }
     }
-    writeBatch(ev.filter(unix_micros(col("ts")) < split), "b0")
-    runPass()  // history: batch 0 from a fresh checkpoint
-    writeBatch(ev.filter(unix_micros(col("ts")) >= split), "b1")
-    runPass()  // delta: strictly later batch ids upsert over batch 0
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("event_type", "day")
     s.read.parquet(store)
@@ -991,27 +887,17 @@ object Streaming {
   // Executors produce key-partitioned batches and consume one Spark
   // partition per Kafka partition; the result must hash-match the same
   // batch oracle as the file-wire twin.
-  val kafkaWireIngest: QueryDef = QueryDef.sql("q_kafka_wire_ingest")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+  val kafkaWireIngest: QueryDef = QueryDef.sql("q_kafka_wire_ingest")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port)
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
       exchange.publish(wire,
         graft.replay.Replay.ReplayConfig(input = "", topic = "events"))
-      val decoded = Ingest.decodeJsonWire(exchange.read(s, "events"))
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
+      val decoded = decodeIngest(exchange.read(s, "events"))
         .orderBy("event_id")
       // materialize before the broker dies: the consumer scan is lazy
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   // The exactly-once produce leg: the SAME double-publish as
@@ -1026,9 +912,7 @@ object Streaming {
   val kafkaWireIdempotent: QueryDef = QueryDef.sql("q_kafka_wire_idempotent")(
     """SELECT event_id, user_id, event_type, value
       |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port,
         idempotent = true)
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
@@ -1039,7 +923,7 @@ object Streaming {
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   // The TRANSACTIONAL produce leg (KIP-98 EOS half, beyond-parity —
@@ -1058,9 +942,7 @@ object Streaming {
   val kafkaWireTxn: QueryDef = QueryDef.sql("q_kafka_wire_txn")(
     """SELECT event_id, user_id, event_type, value
       |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port,
         transactionalId = Some("graft-eos"))
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
@@ -1078,7 +960,7 @@ object Streaming {
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   // The CONSUMER-GROUP leg of the wire (beyond-parity — the reference
@@ -1104,9 +986,7 @@ object Streaming {
   val kafkaWireGroupResume: QueryDef = QueryDef.sql("q_kafka_wire_group_resume")(
     """SELECT event_id, user_id, event_type, value
       |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val topic = "events-group"
       val group = "graft-handover"
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port)
@@ -1151,7 +1031,7 @@ object Streaming {
         graft.core.Spill.materialize(
           wave1.union(wave2).dropDuplicates("event_id").orderBy("event_id"))(())
       } finally admin.close()
-    } finally broker.stop()
+    }
   }
 
   // MULTI-TOPIC subscription over the wire (stock-connector parity:
@@ -1168,9 +1048,7 @@ object Streaming {
     """SELECT event_id, user_id, event_type, value
       |FROM events WHERE event_type IN ('click', 'purchase')
       |ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val events = graft.core.Tables.events(s, dir)
       Seq("click", "purchase").foreach { t =>
         Ingest.toJsonWire(events.filter(col("event_type") === t), "event_id")
@@ -1196,7 +1074,7 @@ object Streaming {
         "a row surfaced from the wrong topic")
       graft.core.Spill.materialize(
         out.drop("__topic").orderBy("event_id"))(())
-    } finally broker.stop()
+    }
   }
 
   // TOPIC-COLUMN routing + PATTERN subscription, both under the oracle
@@ -1212,9 +1090,7 @@ object Streaming {
     """SELECT event_id, user_id, event_type, value
       |FROM events WHERE event_type IN ('click', 'purchase')
       |ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val routed = graft.core.Tables.events(s, dir)
         .filter(col("event_type").isin("click", "purchase"))
       val payload = routed.withColumn("ts_us", unix_micros(col("ts"))).drop("ts")
@@ -1240,7 +1116,7 @@ object Streaming {
         "a row surfaced from the wrong topic")
       graft.core.Spill.materialize(
         decoded.drop("__topic").orderBy("event_id"))(())
-    } finally broker.stop()
+    }
   }
 
   // The MULTI-BROKER leg of the wire: the same produce→consume
@@ -1253,13 +1129,8 @@ object Streaming {
   // each broker holds bytes ONLY for partitions it leads — and the
   // result must hash-match the same single-broker ingest oracle: the
   // cluster must be invisible in the rows.
-  val kafkaWireCluster: QueryDef = QueryDef.sql("q_kafka_wire_cluster")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val cluster = new graft.kafka.KafkaStubCluster(3, 3)
-    cluster.start()
-    try {
+  val kafkaWireCluster: QueryDef = QueryDef.sql("q_kafka_wire_cluster")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubCluster(3, 3)) { cluster =>
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
       wire.write.format("kafka-wire")
         .option("host", "127.0.0.1")
@@ -1278,15 +1149,10 @@ object Streaming {
         .option("port", cluster.bootstrapPort.toString)
         .option("topic", "events-dist")
         .load()
-      val decoded = Ingest.decodeJsonWire(consumed)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
+      val decoded = decodeIngest(consumed)
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally cluster.stop()
+    }
   }
 
   // The AUTHENTICATED leg of the wire: the same DSv2 produce→consume
@@ -1299,14 +1165,9 @@ object Streaming {
   // invisible in the rows. An unauthenticated socket on this listener
   // is disconnected at its first data request (pinned in
   // KafkaSaslSpec), so a hash-green result proves every hop authed.
-  val kafkaWireSasl: QueryDef = QueryDef.sql("q_kafka_wire_sasl")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3,
-      saslUsers = Map("pipeline" -> "s3cret"))
-    broker.start()
-    try {
+  val kafkaWireSasl: QueryDef = QueryDef.sql("q_kafka_wire_sasl")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubBroker(3,
+        saslUsers = Map("pipeline" -> "s3cret"))) { broker =>
       val jaas = "org.apache.kafka.common.security.plain.PlainLoginModule " +
         "required username=\"pipeline\" password=\"s3cret\";"
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
@@ -1322,15 +1183,10 @@ object Streaming {
         .option("kafka.sasl.mechanism", "PLAIN")
         .option("kafka.sasl.jaas.config", jaas)
         .load()
-      val decoded = Ingest.decodeJsonWire(consumed)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
+      val decoded = decodeIngest(consumed)
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   // The FAILOVER leg of the wire — a full ROLLING-RESTART drill (r15,
@@ -1352,12 +1208,8 @@ object Streaming {
   // diverged replica in the ISR. This is the rolling-restart-under-
   // load contract a 1000-executor pipeline assumes of a real cluster.
   val kafkaWireFailover: QueryDef = QueryDef.sql("q_kafka_wire_failover")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val cluster = new graft.kafka.KafkaStubCluster(3, 3, replicationFactor = 2)
-    cluster.start()
-    try {
+    IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubCluster(3, 3, replicationFactor = 2)) { cluster =>
       val deadPort = cluster.brokers(0).port
       val events = graft.core.Tables.events(s, dir)
       def produceWave(which: Column, bootstrap: String): Unit =
@@ -1381,15 +1233,10 @@ object Streaming {
             s"127.0.0.1:${cluster.brokers(0).port}")
         .option("topic", "events-fo")
         .load()
-      val decoded = Ingest.decodeJsonWire(consumed)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
+      val decoded = decodeIngest(consumed)
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally cluster.stop()
+    }
   }
 
   // The REPLICATION-LAG leg of the wire: the full feed produced into a
@@ -1407,14 +1254,9 @@ object Streaming {
   // tolerance silently becomes data loss at the first failover. This
   // is the ISR contract a 1000-executor pipeline assumes when a
   // follower falls behind under production load.
-  val kafkaWireIsrLag: QueryDef = QueryDef.sql("q_kafka_wire_isr_lag")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val cluster = new graft.kafka.KafkaStubCluster(3, 3,
-      replicationFactor = 3, asyncLagMs = Some(250))
-    cluster.start()
-    try {
+  val kafkaWireIsrLag: QueryDef = QueryDef.sql("q_kafka_wire_isr_lag")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubCluster(3, 3,
+        replicationFactor = 3, asyncLagMs = Some(250))) { cluster =>
       cluster.pauseReplication(1)
       val deadPort = cluster.brokers(0).port
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
@@ -1437,15 +1279,10 @@ object Streaming {
           s"127.0.0.1:$deadPort,127.0.0.1:${cluster.brokers(1).port}")
         .option("topic", "events-lag")
         .load()
-      val decoded = Ingest.decodeJsonWire(consumed)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
+      val decoded = decodeIngest(consumed)
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally cluster.stop()
+    }
   }
 
   // STREAMING failover MID-STREAM: q_kafka_wire_isr_lag proves a
@@ -1465,13 +1302,9 @@ object Streaming {
   // once — a duplicate, a lost record, or an offset gap at promotion
   // all break the hash against the single-broker ingest oracle.
   val streamKafkaFailover: QueryDef = QueryDef.sql("q_stream_kafka_failover")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val cluster = new graft.kafka.KafkaStubCluster(3, 3,
-      replicationFactor = 3, asyncLagMs = Some(250))
-    cluster.start()
-    try {
+    IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubCluster(3, 3,
+        replicationFactor = 3, asyncLagMs = Some(250))) { cluster =>
       val deadPort = cluster.brokers(0).port
       val events = graft.core.Tables.events(s, dir)
       def produce(wave: DataFrame): Unit =
@@ -1481,18 +1314,13 @@ object Streaming {
       val chk = uniqueDir("chk_kwsfo_")
       val outDir = uniqueDir("out_kwsfo_")
       def drain(bootstrap: String): Unit = {
-        val q = s.readStream.format("kafka-wire")
+        val wire = s.readStream.format("kafka-wire")
           .option("kafka.bootstrap.servers", bootstrap)
           .option("topic", "events-sfo")
           .option("minPartitions", "12")
           .load()
-          .writeStream
-          .foreachBatch((b: DataFrame, _: Long) =>
-            b.write.mode("append").parquet(outDir))
-          .option("checkpointLocation", chk)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        Ingest.drainBatches(wire, checkpoint = chk)(
+          (b, _) => b.write.mode("append").parquet(outDir))
       }
       produce(events.filter(col("event_id") % 2 === 0))
       drain(s"127.0.0.1:$deadPort")
@@ -1504,15 +1332,10 @@ object Streaming {
       require(cluster.awaitCaughtUp(1, 60000), "follower never caught up")
       cluster.failBroker(0) // promotes broker 1 — the chased follower
       drain(s"127.0.0.1:$deadPort,127.0.0.1:${cluster.brokers(1).port}")
-      val decoded = Ingest.decodeJsonWire(s.read.parquet(outDir))
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
+      val decoded = decodeIngest(s.read.parquet(outDir))
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally cluster.stop()
+    }
   }
 
   // The REBALANCE-PROTOCOL leg of the wire (round 13 — the last wire
@@ -1536,13 +1359,9 @@ object Streaming {
   // single-consumer ingest oracle: the protocol's split must cover the
   // topic exactly once, or the hash breaks.
   val kafkaWireRebalance: QueryDef = QueryDef.sql("q_kafka_wire_rebalance")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+    IngestOracle) { (s, dir) =>
     import graft.kafka.{KafkaCodec, KafkaWireClient}
-    val cluster = new graft.kafka.KafkaStubCluster(3, 3, replicationFactor = 2)
-    cluster.start()
-    try {
+    Service.using(new KafkaStubCluster(3, 3, replicationFactor = 2)) { cluster =>
       val bootstrap = s"127.0.0.1:${cluster.bootstrapPort}"
       val topic = "events-reb"
       val group = "grp-reb"
@@ -1641,12 +1460,7 @@ object Streaming {
             .option("assign", s"""{"$topic": [${ps.mkString(", ")}]}""")
             .load()
           val union = readAssigned(leaderAssign).unionAll(readAssigned(followerAssign))
-          val decoded = Ingest.decodeJsonWire(union)
-            .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-              col("value"),
-              from_json(col("props"),
-                org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-                .as("prop_k"))
+          val decoded = decodeIngest(union)
             .orderBy("event_id")
           val out = graft.core.Spill.materialize(decoded)(())
           // members commit their end positions under the live generation
@@ -1695,7 +1509,7 @@ object Streaming {
           out
         } finally hbs.values.foreach(_.close())
       } finally { a.close(); b.close() }
-    } finally cluster.stop()
+    }
   }
 
   // The SECURED-CLUSTER capstone: every wire feature composed in ONE
@@ -1715,15 +1529,11 @@ object Streaming {
   // one-by-one elsewhere must also compose, which is where real
   // systems break.
   val kafkaWireSecuredE2e: QueryDef = QueryDef.sql("q_kafka_wire_secured_e2e")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+    IngestOracle) { (s, dir) =>
     val (ks, ts, pw) = graft.kafka.Tls.ensureKeyMaterial()
-    val cluster = new graft.kafka.KafkaStubCluster(3, 3,
-      saslUsers = Map("svc" -> "pw"), replicationFactor = 2,
-      tlsKeystore = Some((ks, pw)))
-    cluster.start()
-    try {
+    Service.using(new KafkaStubCluster(3, 3,
+        saslUsers = Map("svc" -> "pw"), replicationFactor = 2,
+        tlsKeystore = Some((ks, pw)))) { cluster =>
       val jaas = "org.apache.kafka.common.security.plain.PlainLoginModule " +
         "required username=\"svc\" password=\"pw\";"
       val deadPort = cluster.brokers(0).port
@@ -1750,15 +1560,10 @@ object Streaming {
         .option("kafka.sasl.jaas.config", jaas)
         .option("kafka.isolation.level", "read_committed")
         .load()
-      val decoded = Ingest.decodeJsonWire(consumed)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
+      val decoded = decodeIngest(consumed)
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally cluster.stop()
+    }
   }
 
   // The SCHEMA-REGISTRY leg of the wire: one topic carrying records
@@ -1782,11 +1587,7 @@ object Streaming {
       |       ELSE CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER)
       |  END AS prop_k
       |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val registry = new graft.kafka.SchemaRegistryStub
-    registry.start()
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new SchemaRegistryStub, new KafkaStubBroker(3)) { (registry, broker) =>
       val client = new graft.kafka.SchemaRegistryClient(registry.baseUrl)
       val events = graft.core.Tables.events(s, dir)
       val id1 = client.register("events-value",
@@ -1812,9 +1613,6 @@ object Streaming {
           graft.kafka.RegistryAvro.EventSchemaV2Json, registry.baseUrl)
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally {
-      broker.stop()
-      registry.stop()
     }
   }
 
@@ -1826,13 +1624,8 @@ object Streaming {
   // the connector surface are all 8-bit clean, not UTF-8-string-typed.
   // Same oracle as the JSON twin: the codec swap must be invisible in
   // the decoded result.
-  val kafkaWireAvro: QueryDef = QueryDef.sql("q_kafka_wire_avro")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+  val kafkaWireAvro: QueryDef = QueryDef.sql("q_kafka_wire_avro")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port)
       val wire = graft.core.AvroCodec.encodeEvents(graft.core.Tables.events(s, dir))
       exchange.publish(wire,
@@ -1845,7 +1638,7 @@ object Streaming {
         .orderBy("event_id")
       // materialize before the broker dies: the consumer scan is lazy
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   // At-least-once replay discipline over the real wire: publish TWICE
@@ -1855,9 +1648,7 @@ object Streaming {
   val kafkaWireRedelivery: QueryDef = QueryDef.sql("q_kafka_wire_redelivery")(
     """SELECT event_id, user_id, event_type, value
       |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port)
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
       exchange.publish(wire,
@@ -1868,7 +1659,7 @@ object Streaming {
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   // S5 as a REAL Structured Streaming source: the DSv2 micro-batch
@@ -1879,13 +1670,8 @@ object Streaming {
   // q_kafka_wire_ingest's consumer is a batch RDD drain. Same decode
   // chain, same oracle: the reference's `readStream.format("kafka")`
   // pipeline with only the wire implementation swapped.
-  val streamKafkaWire: QueryDef = QueryDef.sql("q_stream_kafka_wire")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+  val streamKafkaWire: QueryDef = QueryDef.sql("q_stream_kafka_wire")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port)
       val wire = Ingest.toJsonWire(graft.core.Tables.events(s, dir), "event_id")
       exchange.publish(wire,
@@ -1899,17 +1685,11 @@ object Streaming {
         // sized to the executor core count, not the topic layout)
         .option("minPartitions", "12")
         .load()
-      val decoded = Ingest.decodeJsonWire(stream)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
-      val out = Ingest.runToMemory(decoded).orderBy("event_id")
+      val out = Ingest.runToMemory(decodeIngest(stream)).orderBy("event_id")
       // materialize before the broker dies: the memory-sink table read
       // is eager, but keep the same discipline as the batch wire twins
       graft.core.Spill.materialize(out)(())
-    } finally broker.stop()
+    }
   }
 
   // K2 as a REAL writeStream sink: the reference producer's role
@@ -1920,35 +1700,20 @@ object Streaming {
   // oracle. The write is at-least-once (non-transactional, like the
   // stock connector); this single-run pipeline is duplicate-free by
   // construction, and q_kafka_wire_redelivery pins the replay story.
-  val streamKafkaSink: QueryDef = QueryDef.sql("q_stream_kafka_sink")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+  val streamKafkaSink: QueryDef = QueryDef.sql("q_stream_kafka_sink")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val wire = Ingest.toJsonWire(Ingest.eventsStream(s, dir), "event_id")
-      val q = wire.writeStream.format("kafka-wire")
+      Ingest.drain(wire)(_.format("kafka-wire")
         .option("host", "127.0.0.1").option("port", broker.port.toString)
-        .option("topic", "events")
-        .option("checkpointLocation", uniqueDir("chk_kwsink_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("topic", "events"))
       val consumed = s.read.format("kafka-wire")
         .option("host", "127.0.0.1").option("port", broker.port.toString)
         .option("topic", "events")
         .load()
-      val decoded = Ingest.decodeJsonWire(consumed)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
-        .orderBy("event_id")
+      val decoded = decodeIngest(consumed).orderBy("event_id")
       // materialize before the broker dies: the batch wire scan is lazy
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   // The gzip wire under the correctness gate: same pipeline as
@@ -1958,34 +1723,19 @@ object Streaming {
   // fetch responses so the consumer must inflate from the batch
   // attribute bits. Shares the ingest oracle: identical rows through
   // compressed bytes or the hash breaks.
-  val streamKafkaGzip: QueryDef = QueryDef.sql("q_stream_kafka_gzip")(
-    """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value,
-      |  CAST(regexp_extract(props, '"k": (-?\d+)', 1) AS INTEGER) AS prop_k
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3, compressionType = "gzip")
-    broker.start()
-    try {
+  val streamKafkaGzip: QueryDef = QueryDef.sql("q_stream_kafka_gzip")(IngestOracle) { (s, dir) =>
+    Service.using(new KafkaStubBroker(3, compressionType = "gzip")) { broker =>
       val wire = Ingest.toJsonWire(Ingest.eventsStream(s, dir), "event_id")
-      val q = wire.writeStream.format("kafka-wire")
+      Ingest.drain(wire)(_.format("kafka-wire")
         .option("host", "127.0.0.1").option("port", broker.port.toString)
         .option("topic", "events")
-        .option("compression.type", "gzip")
-        .option("checkpointLocation", uniqueDir("chk_kwgz_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("compression.type", "gzip"))
       val consumed = s.read.format("kafka-wire")
         .option("host", "127.0.0.1").option("port", broker.port.toString)
         .option("topic", "events")
         .load()
-      val decoded = Ingest.decodeJsonWire(consumed)
-        .select(col("event_id"), col("ts_us"), col("user_id"), col("event_type"),
-          col("value"),
-          from_json(col("props"),
-            org.apache.spark.sql.types.StructType.fromDDL("k INT")).getField("k")
-            .as("prop_k"))
-      graft.core.Spill.materialize(decoded.orderBy("event_id"))(())
-    } finally broker.stop()
+      graft.core.Spill.materialize(decodeIngest(consumed).orderBy("event_id"))(())
+    }
   }
 
   // CAPSTONE — the reference's entire topology in ONE executed chain
@@ -2014,11 +1764,7 @@ object Streaming {
       |  event_type, COUNT(*) AS n,
       |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
       |FROM events GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    val stub = new EsStub()
-    stub.start()
-    try {
+    Service.using(new KafkaStubBroker(3), new EsStub()) { (broker, stub) =>
       val events = graft.core.Tables.events(s, dir)
       // parquet footer count (metadata-only): size the cap for ~6
       // capped micro-batches at ANY scale factor
@@ -2045,37 +1791,22 @@ object Streaming {
         .withColumn("doc_key",
           concat(col("hour_epoch"), lit(":"), col("event_type")))
 
-      val docSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      val docSchema = StructType.fromDDL(
         "hour_epoch BIGINT, event_type STRING, n BIGINT, sum_value DOUBLE")
       val store = new EsHttpStore(stub.baseUrl, "hourly", "doc_key",
         Seq("n"), "n", docSchema)
       require(store.healthCheck(), "sink preflight failed") // K5
-      // state-sized shuffle partitions (see Ingest.withStatePartitions):
-      // this is the one stateful query that starts its stream directly
-      // instead of through runToMemory, so before r18 it planned the
-      // windowed aggregation with the BATCH partition count — 32
+      // state-sized shuffle partitions (see Ingest.drain): with the
+      // batch partition count the windowed aggregation pays 32
       // state-store opens/commits per micro-batch for hours×types of
       // state (the r17 profile put the residual wall here). The batch
-      // upserts inside foreachBatch see the same override, which is the
+      // upserts inside foreachBatch plan at the same count, which is the
       // right shape for their per-batch row volume too.
-      val q = Ingest.withStatePartitions(s) {
-        val started = agg.writeStream
-          .outputMode("update")
-          .foreachBatch((b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-            store.upsert(b.toDF(), id))
-          .option("checkpointLocation", uniqueDir("chk_e2e_"))
-          .trigger(Trigger.AvailableNow())
-          .start()
-        started.awaitTermination()
-        started
-      }
+      Ingest.drainBatches(agg, mode = "update", statePartitions = true)(store.upsert)
       val out = store.read(s)
         .select("hour_epoch", "event_type", "n", "sum_value")
         .orderBy("hour_epoch", "event_type")
       graft.core.Spill.materialize(out)(())
-    } finally {
-      broker.stop()
-      stub.stop()
     }
   }
 
@@ -2101,9 +1832,7 @@ object Streaming {
     """SELECT event_id, epoch_us(ts) AS ts_us, user_id, event_type, value
       |FROM events WHERE event_type IN ('purchase', 'signup')
       |ORDER BY event_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val events = graft.core.Tables.events(s, dir)
       val cap = math.max(1L, events.count() / 4L + 1L)
       Ingest.toJsonWire(events, "event_id")
@@ -2121,14 +1850,10 @@ object Streaming {
         .select(col("user_id").cast("string").as("key"),
           to_json(struct(col("event_id"), col("ts_us"), col("user_id"),
             col("event_type"), col("value"))).as("value"))
-      val q = transformed.writeStream.format("kafka-wire")
+      Ingest.drain(transformed)(_.format("kafka-wire")
         .option("host", "127.0.0.1").option("port", broker.port.toString)
         .option("topic", "curated")
-        .option("kafka.transactional.id", "t2t")
-        .option("checkpointLocation", uniqueDir("chk_t2t_"))
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+        .option("kafka.transactional.id", "t2t"))
 
       val out = s.read.format("kafka-wire")
         .option("host", "127.0.0.1").option("port", broker.port.toString)
@@ -2137,13 +1862,13 @@ object Streaming {
         .load()
         .selectExpr("CAST(value AS STRING) AS json")
         .select(from_json(col("json"),
-          org.apache.spark.sql.types.StructType.fromDDL(
+          StructType.fromDDL(
             "event_id BIGINT, ts_us BIGINT, user_id BIGINT, event_type STRING, value DOUBLE"))
           .as("d"))
         .select(col("d.*"))
         .orderBy("event_id")
       graft.core.Spill.materialize(out)(())
-    } finally broker.stop()
+    }
   }
 
   // Conditional MERGE INTO over the log-structured store (the Delta/
@@ -2199,10 +1924,7 @@ object Streaming {
       whenMatchedDelete = Some(col("user_id") % 7 === 0),
       whenMatchedUpdate = Some(col("user_id") % 5 === 0),
       whenNotMatchedInsert = Some(lit(true)))
-    store.read(s)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"), col("value").as("last_value"))
-      .orderBy("user_id")
+    lastPerUser(store.read(s))
   }
 
   // Change data feed over the log-structured store (Delta CDF): three
@@ -2270,31 +1992,18 @@ object Streaming {
   // per batch it costs one key-partitioned join against the merged view
   // plus an O(batch) append.
   val streamCdcApply: QueryDef = QueryDef.sql("q_stream_cdc_apply")(
-    """SELECT user_id, event_id AS last_event_id, event_type AS last_event_type,
-      |  value AS last_value
-      |FROM (SELECT *, row_number() OVER
-      |        (PARTITION BY user_id ORDER BY ts DESC, event_id DESC) AS rn
-      |      FROM events) t
-      |WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
+    LatestPerUserOracle) { (s, dir) =>
     val store = new DeltaUpsertStore(uniqueDir("cdc_"), "user_id",
       Seq("ts", "event_id"))
     require(store.healthCheck(), "sink preflight failed")  // K5
-    val q = Ingest.eventsStream(s, dir).writeStream
-      .foreachBatch { (b: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        store.merge(b.toDF(),
-          whenMatchedUpdate = Some(
-            struct(col("ts"), col("event_id")) >
-              struct(col("__target.ts"), col("__target.event_id"))),
-          whenNotMatchedInsert = Some(lit(true)))
-      }
-      .option("checkpointLocation", uniqueDir("chk_cdc_"))
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    store.read(s)
-      .select(col("user_id"), col("event_id").as("last_event_id"),
-        col("event_type").as("last_event_type"), col("value").as("last_value"))
-      .orderBy("user_id")
+    Ingest.drainBatches(Ingest.eventsStream(s, dir)) { (b, _) =>
+      store.merge(b,
+        whenMatchedUpdate = Some(
+          struct(col("ts"), col("event_id")) >
+            struct(col("__target.ts"), col("__target.event_id"))),
+        whenNotMatchedInsert = Some(lit(true)))
+    }
+    lastPerUser(store.read(s))
   }
 
   // Compacted topic (cleanup.policy=compact) — the state-topic
@@ -2315,9 +2024,7 @@ object Streaming {
       |  FROM events)
       |SELECT user_id, event_id, event_type, value
       |FROM latest WHERE rn = 1 ORDER BY user_id""".stripMargin) { (s, dir) =>
-    val broker = new graft.kafka.KafkaStubBroker(3)
-    broker.start()
-    try {
+    Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port)
       val ev = graft.core.Tables.events(s, dir)
         .repartition(6, col("user_id"))
@@ -2330,7 +2037,7 @@ object Streaming {
         .orderBy("user_id")
       // materialize before the broker dies: the consumer scan is lazy
       graft.core.Spill.materialize(decoded)(())
-    } finally broker.stop()
+    }
   }
 
   val all: Seq[QueryDef] = Seq(

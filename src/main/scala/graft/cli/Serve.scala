@@ -35,10 +35,17 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * Scale note: a serving endpoint returns dashboard tiles, not exports —
   * the `limit` cap bounds the driver-side collect to tile-sized results
   * (`toJSON.take(n)` limits BEFORE collecting). Heavy queries still run
-  * distributed; only the final ≤10k rows funnel to the endpoint. This is
-  * a dashboard stand-in, not a concurrency-hardened gateway: requests
-  * serialize through one SparkSession the way one Kibana panel refresh
-  * does.
+  * distributed; only the final ≤10k rows funnel to the endpoint.
+  *
+  * Concurrency: requests run on a 4-thread pool over ONE shared
+  * SparkSession. Catalog queries do not write that session's conf — a
+  * streaming query's overrides (state-sized shuffle partitions, the
+  * RocksDB state store) live on a child session the query owns
+  * (`Ingest.drain`) — so concurrent requests plan as they would alone.
+  * The one session write left is the events readers' idempotent
+  * `spark.sql.legacy.parquet.nanosAsLong=true`. Still a dashboard
+  * stand-in, not a hardened gateway: no admission control or
+  * per-request timeout.
   */
 final class QueryServer(spark: SparkSession, sfDir: String, bindPort: Int = 0) {
 

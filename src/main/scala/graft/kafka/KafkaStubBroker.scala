@@ -60,7 +60,8 @@ final class KafkaStubBroker(val numPartitions: Int = 3,
     val brokerId: Int = 0,
     cluster: KafkaStubCluster = null,
     saslUsers: Map[String, String] = Map.empty,
-    tlsKeystore: Option[(String, String)] = None) {
+    tlsKeystore: Option[(String, String)] = None)
+    extends graft.streaming.Service {
   require(compressionType == "none" || compressionType == "gzip",
     s"unsupported compression.type '$compressionType' (none|gzip)")
   private val fetchGzip = compressionType == "gzip"
@@ -1797,7 +1798,8 @@ final class KafkaStubCluster(nBrokers: Int, numPartitions: Int = 3,
     saslUsers: Map[String, String] = Map.empty,
     replicationFactor: Int = 1,
     tlsKeystore: Option[(String, String)] = None,
-    asyncLagMs: Option[Long] = None) {
+    asyncLagMs: Option[Long] = None)
+    extends graft.streaming.Service {
   require(nBrokers >= 1, s"nBrokers must be >= 1, got $nBrokers")
   require(replicationFactor >= 1 && replicationFactor <= nBrokers,
     s"replicationFactor must be in [1, $nBrokers], got $replicationFactor")

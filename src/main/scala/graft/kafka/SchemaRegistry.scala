@@ -37,7 +37,7 @@ import org.apache.spark.sql.functions._
   *   - `GET /subjects/{subject}/versions/latest` — the producer's
   *     "what do I write today" lookup.
   */
-final class SchemaRegistryStub {
+final class SchemaRegistryStub extends graft.streaming.Service {
 
   private val mapper = new ObjectMapper()
   // global id space: canonical schema text -> id (ids immutable, dense)

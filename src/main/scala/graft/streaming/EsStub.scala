@@ -43,7 +43,7 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   * 429 (client retry path); [[bulkRequests]] counts accepted bulk
   * POSTs (chunking assertions).
   */
-final class EsStub {
+final class EsStub extends Service {
 
   // deleted = tombstone: invisible to search/snapshot, but the version
   // still gates later external-versioned writes (real ES keeps deleted

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** The reference streaming job (`spark_streaming_kafka.py`,
@@ -134,59 +134,83 @@ object Ingest {
       .withColumn("ts", timestamp_micros(col("ts_us")))
 
   /** Run a (bounded) streaming DataFrame to completion into a memory
-    * sink and return the collected result as a batch DataFrame.
-    * `AvailableNow` processes everything present, then stops — the
-    * deterministic harness mode for catalog/oracle runs.
+    * sink and return the collected result as a batch DataFrame on
+    * `df`'s own session, so work on the result plans at the batch
+    * partition count. The drain itself runs at the state-sized count
+    * (see [[drain]]); `rocksDb` selects the RocksDB state store, which
+    * transformWithState requires.
     */
-  def runToMemory(df: DataFrame, mode: String = "append"): DataFrame = {
-    val spark = df.sparkSession
+  def runToMemory(df: DataFrame, mode: String = "append",
+      rocksDb: Boolean = false): DataFrame = {
     val name = "mem_" + java.util.UUID.randomUUID.toString.replace("-", "")
-    val chkRoot = java.nio.file.Paths.get("target", "checkpoints")
-    java.nio.file.Files.createDirectories(chkRoot)  // cwd-independent
-    val chk = java.nio.file.Files.createTempDirectory(chkRoot, "chk_").toString
-    // State sizing: every stateful operator keeps one state store per
-    // shuffle partition PER STORE KIND (a stream-stream join holds four
-    // per partition), and each micro-batch pays a commit + maintenance
-    // round per store. The batch default (one partition per core) is
-    // the wrong shape for that fixed cost at this state volume, so
-    // streaming queries plan with a state-sized partition count and the
-    // batch value is restored after the run. The count is pinned into
-    // the query's checkpoint at creation (state is not repartitionable),
-    // so resumed runs — e.g. q_stream_late_drop's second wave — keep it
-    // automatically. A deployment sizes this to state volume via
-    // spark.graft.stream.statePartitions.
-    withStatePartitions(spark) {
-      val q = df.writeStream
-        .format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .option("checkpointLocation", chk)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(name)
+    val q = drain(df, mode, statePartitions = true, rocksDb = rocksDb)(
+      _.format("memory").queryName(name))
+    GraftBridge.ofRows(df.sparkSession,
+      GraftBridge.logicalPlan(q.sparkSession.table(name)))
   }
 
-  /** Run `body` (a streaming query start + awaitTermination) with
-    * `spark.sql.shuffle.partitions` set to the streaming state size,
-    * restoring the batch value after — see the sizing note in
-    * [[runToMemory]].
+  /** Run the streaming `df` to completion with `Trigger.AvailableNow`
+    * (everything present, then stop — the deterministic harness mode
+    * for catalog/oracle runs) into the sink `sink` configures, and
+    * return the terminated query.
     *
-    * NOT thread-safe with concurrent planning: the override mutates the
-    * session-global conf for the duration of `body`, so a batch query
-    * planned on the SAME SparkSession from another thread during that
-    * window would silently pick up the streaming partition count. The
-    * catalog/verify/bench harness is strictly sequential, which is the
-    * assumption here; a shared-session deployment should instead run
-    * its streaming queries on `spark.newSession()` (same SparkContext,
-    * isolated conf) and set the partition count there.
+    * The query runs on a private child session (`newSession()`) that
+    * carries the caller's runtime conf and streaming listeners plus
+    * this query's own overrides, so no override is ever visible to, or
+    * raced by, other work on the caller's session:
+    *  - `statePartitions`: every stateful operator keeps one state
+    *    store per shuffle partition PER STORE KIND (a stream-stream
+    *    join holds four), and each micro-batch pays a commit +
+    *    maintenance round per store. The batch default (one partition
+    *    per core) is the wrong shape for that fixed cost at this state
+    *    volume, so stateful queries plan with
+    *    `spark.graft.stream.statePartitions` (default 8) instead. The
+    *    count is pinned into the checkpoint at creation (state is not
+    *    repartitionable), so a resumed run keeps it. `foreachBatch`
+    *    bodies plan their batch work at the same count.
+    *  - `rocksDb`: the RocksDB state store provider.
+    *
+    * The child's memory-sink views die with it (Spark keeps each
+    * session's small streaming listener bus registered for the life of
+    * the SparkContext). `checkpoint` defaults to a fresh directory.
     */
-  def withStatePartitions[T](spark: SparkSession)(body: => T): T = {
-    val batchParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("8"))
-    try body
-    finally spark.conf.set("spark.sql.shuffle.partitions", batchParts)
+  def drain(df: DataFrame, mode: String = "append",
+      checkpoint: String = newCheckpointDir(),
+      statePartitions: Boolean = false, rocksDb: Boolean = false)(
+      sink: DataStreamWriter[Row] => DataStreamWriter[Row]): StreamingQuery = {
+    val spark = df.sparkSession
+    val child = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      if (!child.conf.getOption(k).contains(v)) child.conf.set(k, v)
+    }
+    if (statePartitions)
+      child.conf.set("spark.sql.shuffle.partitions",
+        spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("8"))
+    if (rocksDb)
+      child.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.streams.listListeners().foreach(child.streams.addListener)
+    val q = sink(GraftBridge.ofRows(child, GraftBridge.logicalPlan(df)).writeStream)
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    q
+  }
+
+  /** [[drain]] through `foreachBatch`: `f` gets each micro-batch and
+    * its batch id.
+    */
+  def drainBatches(df: DataFrame, mode: String = "append",
+      checkpoint: String = newCheckpointDir(),
+      statePartitions: Boolean = false)(f: (DataFrame, Long) => Unit): Unit =
+    drain(df, mode, checkpoint, statePartitions)(
+      _.foreachBatch((b: Dataset[Row], id: Long) => f(b, id)))
+
+  private def newCheckpointDir(): String = {
+    val root = java.nio.file.Paths.get("target", "checkpoints")
+    java.nio.file.Files.createDirectories(root)  // the cwd may lack target/
+    java.nio.file.Files.createTempDirectory(root, "chk_").toString
   }
 }

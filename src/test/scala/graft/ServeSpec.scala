@@ -2,6 +2,10 @@ package graft
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -107,6 +111,26 @@ class ServeSpec extends AnyFunSuite {
       // an unknown interval is a clean client error, not a 500 with a scan
       val (bad, _) = get(s"${srv.baseUrl}/histogram?interval=fortnight")
       assert(bad == 500)
+    }
+  }
+
+  test("concurrent streaming and batch requests: serial results, session conf untouched") {
+    withServer { srv =>
+      val names = Seq("q_stream_window_hourly", "q_stream_mapstate_counts",
+        "q_hourly_stats")
+      def run(name: String) = get(s"${srv.baseUrl}/query/$name?limit=10000")
+      val serial = names.map(n => n -> run(n)).toMap
+      assert(serial.values.forall(_._1 == 200), serial.values.map(_._2.take(200)))
+      val conf = spark.conf.getAll
+      val requests = Seq.tabulate(9)(i => names(i % names.size))
+      val clients = Executors.newFixedThreadPool(requests.size)
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(clients)
+      try {
+        val responses = Await.result(
+          Future.traverse(requests)(n => Future(n -> run(n))), 10.minutes)
+        responses.foreach { case (n, r) => assert(r == serial(n), n) }
+      } finally clients.shutdown()
+      assert(spark.conf.getAll == conf)
     }
   }
 }

@@ -85,36 +85,25 @@ class StreamAsOfSpec extends AnyFunSuite {
           timestamp_seconds(col("t")).as("ts"))
         .coalesce(1).write.parquet(s"$src/batch_$b")
     }
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val chk = tmp("asofgc_chk_")
-      val stream = spark.readStream
-        .schema("user_id LONG, event_id LONG, event_type STRING, ts TIMESTAMP")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/*")
-      val q = graft.streaming.Ingest.withStatePartitions(spark) {
-        val q0 = Stateful.asOfViaTimers(stream).toDF().writeStream
-          .format("memory").queryName("asof_gc")
-          .option("checkpointLocation", chk)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q0.awaitTermination(); q0
-      }
-      assert(spark.table("asof_gc").count() == 0) // no purchases → no output
-      val clickState = spark.read.format("statestore")
-        .option("path", chk)
-        .option("stateVarName", "clicks")
-        .load()
-      val perKey = clickState.groupBy(col("key.value").as("uid")).count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      // user 1: five clicks arrived, all at-or-below the final
-      // watermark — GC must have collapsed them to the single latest
-      assert(perKey(1L) == 1L, s"user-1 clicks not GC'd: $perKey")
-      // user 9's lone click is above the watermark and remains in play
-      assert(perKey(9L) == 1L)
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val chk = tmp("asofgc_chk_")
+    val stream = spark.readStream
+      .schema("user_id LONG, event_id LONG, event_type STRING, ts TIMESTAMP")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$src/*")
+    val q = Ingest.drain(Stateful.asOfViaTimers(stream).toDF(), checkpoint = chk,
+      statePartitions = true, rocksDb = true)(_.format("memory").queryName("asof_gc"))
+    // no purchases → no output
+    assert(q.sparkSession.table("asof_gc").count() == 0)
+    val clickState = spark.read.format("statestore")
+      .option("path", chk)
+      .option("stateVarName", "clicks")
+      .load()
+    val perKey = clickState.groupBy(col("key.value").as("uid")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // user 1: five clicks arrived, all at-or-below the final
+    // watermark — GC must have collapsed them to the single latest
+    assert(perKey(1L) == 1L, s"user-1 clicks not GC'd: $perKey")
+    // user 9's lone click is above the watermark and remains in play
+    assert(perKey(9L) == 1L)
   }
 }

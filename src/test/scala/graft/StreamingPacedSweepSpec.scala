@@ -1,7 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQueryListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Multi-batch contract sweep: EVERY stateful memory-sink streaming
@@ -18,6 +20,11 @@ import org.scalatest.funsuite.AnyFunSuite
   * watermark is pinned separately with hand-built feeds in
   * SessionTimersSpec / StreamAsOfSpec, and late-data EVICTION in
   * q_stream_late_drop's two-wave oracle.
+  *
+  * The same queries scope their conf overrides to sessions they own:
+  * state-sized shuffle partitions and the RocksDB state store must
+  * never show on the session that built them, not even mid-run —
+  * another thread planning on that session would pick them up.
   */
 class StreamingPacedSweepSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -61,17 +68,72 @@ class StreamingPacedSweepSpec extends AnyFunSuite {
     "q_stream_asof_join", "q_stream_mapstate_counts", "q_stream_semi_join",
     "q_stream_static_join")
 
+  /** Counts the micro-batches that read input, across the streaming
+    * queries started while it is registered on the caller's session.
+    */
+  private final class BatchCounter extends StreamingQueryListener {
+    val started, terminated, nonEmpty = new AtomicInteger
+    override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+      started.incrementAndGet()
+    override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+      if (e.progress.numInputRows > 0) nonEmpty.incrementAndGet()
+    override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+      terminated.incrementAndGet()
+
+    /** Wait for the asynchronous progress events of every started query. */
+    def settle(): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while ((started.get() == 0 || terminated.get() < started.get()) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(20)
+    }
+  }
+
   sweep.foreach { name =>
     test(s"$name: paced 3-batch run equals single-batch run") {
       val qd = SparkEntry.catalog.find(_.name == name)
         .getOrElse(fail(s"$name not in catalog"))
       val single = qd.build(spark, sf).collect().map(_.toSeq).toSeq
+      val batches = new BatchCounter
+      spark.streams.addListener(batches)
       spark.conf.set("spark.graft.stream.maxFilesPerTrigger", "1")
       val paced =
         try qd.build(spark, pacedDir).collect().map(_.toSeq).toSeq
-        finally spark.conf.unset("spark.graft.stream.maxFilesPerTrigger")
+        finally {
+          spark.conf.unset("spark.graft.stream.maxFilesPerTrigger")
+          batches.settle()
+          spark.streams.removeListener(batches)
+        }
       assert(paced.nonEmpty, s"$name produced no rows")
+      assert(batches.nonEmpty.get >= 2,
+        s"$name read its input in ${batches.nonEmpty.get} micro-batch(es): not paced")
       assert(paced == single, s"$name diverges under paced micro-batches")
     }
+  }
+
+  test("q_stream_tws_summary never writes its caller's session conf") {
+    val keys = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.streaming.stateStore.providerClass")
+    def snapshot(): Seq[Option[String]] = keys.map(spark.conf.getOption)
+    val before = snapshot()
+    var seen = Set.empty[Seq[Option[String]]]
+    var polls = 0
+    val done = new AtomicBoolean(false)
+    val poller = new Thread(() => while (!done.get()) {
+      seen += snapshot()
+      polls += 1
+      Thread.sleep(1)
+    })
+    poller.start()
+    try {
+      val qd = SparkEntry.catalog.find(_.name == "q_stream_tws_summary").get
+      qd.build(spark, sf).write.format("noop").mode("overwrite").save()
+    } finally {
+      done.set(true)
+      poller.join()
+    }
+    assert(polls > 100, s"poller ran only $polls times")
+    assert(seen == Set(before),
+      s"caller conf changed mid-run: ${(seen - before).mkString(", ")}")
   }
 }
