@@ -1,12 +1,10 @@
 package graft.cli
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
 
 import org.apache.spark.sql.SparkSession
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 /** The serving layer the reference delegates to Kibana (its
   * `README.md:187-195` points users at Kibana dashboards over the ES
@@ -49,30 +47,21 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   */
 final class QueryServer(spark: SparkSession, sfDir: String, bindPort: Int = 0) {
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", bindPort), 0)
-  private val pool = Executors.newFixedThreadPool(4, r => {
-    val t = new Thread(r, "graft-serve")
-    t.setDaemon(true)
-    t
-  })
-  server.setExecutor(pool)
-
-  def port: Int = server.getAddress.getPort
-  def baseUrl: String = s"http://127.0.0.1:$port"
-
-  def start(): Unit = server.start()
-  def stop(): Unit = { server.stop(0); pool.shutdown() }
-
-  private val MaxLimit = 10000
-
-  server.createContext("/", (ex: HttpExchange) => {
+  private val http = new graft.streaming.HttpService("graft-serve", 4, bindPort)(ex =>
     try handle(ex)
     catch {
       case e: Exception =>
         respond(ex, 500,
           s"""{"error":${jsonString(s"${e.getClass.getSimpleName}: ${e.getMessage}")}}""")
-    } finally ex.close()
-  })
+    } finally ex.close())
+
+  def port: Int = http.port
+  def baseUrl: String = http.baseUrl
+
+  def start(): Unit = http.start()
+  def stop(): Unit = http.stop()
+
+  private val MaxLimit = 10000
 
   /** Decoded query-string parameters (last occurrence wins). */
   private def params(ex: HttpExchange): Map[String, String] =

@@ -828,8 +828,10 @@ final class KafkaStubBroker(val numPartitions: Int = 3,
             budget -= encoded.length
             i = j
           }
-          FetchPart(topic, partition, Err.None, hw, lso, aborted,
-            batches.flatten.toArray)
+          // one presized bulk copy; a generic `flatten` boxes every byte
+          val joined = ByteBuffer.allocate(batches.map(_.length).sum)
+          batches.foreach(b => joined.put(b))
+          FetchPart(topic, partition, Err.None, hw, lso, aborted, joined.array())
         }
       }
     }

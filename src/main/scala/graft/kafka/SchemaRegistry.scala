@@ -1,14 +1,12 @@
 package graft.kafka
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.Executors
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
@@ -48,26 +46,13 @@ final class SchemaRegistryStub extends graft.streaming.Service {
     new java.util.concurrent.ConcurrentHashMap[String, List[Int]]()
   private val nextId = new java.util.concurrent.atomic.AtomicInteger(0)
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-  private val pool = Executors.newFixedThreadPool(4, r => {
-    val t = new Thread(r, "schema-registry-stub")
-    t.setDaemon(true)
-    t
-  })
-  server.setExecutor(pool)
+  private val http = new graft.streaming.HttpService("schema-registry-stub", 4)(handle)
 
-  def port: Int = server.getAddress.getPort
-  def baseUrl: String = s"http://127.0.0.1:$port"
+  def port: Int = http.port
+  def baseUrl: String = http.baseUrl
 
-  def start(): Unit = {
-    server.createContext("/", handle _)
-    server.start()
-  }
-
-  def stop(): Unit = {
-    server.stop(0)
-    pool.shutdownNow(): Unit
-  }
+  def start(): Unit = http.start()
+  def stop(): Unit = http.stop()
 
   private def respond(ex: HttpExchange, status: Int, body: String): Unit = {
     val bytes = body.getBytes(StandardCharsets.UTF_8)

@@ -3,8 +3,10 @@ package graft.streaming
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.time.Duration
+import java.util.concurrent.{CompletableFuture, ExecutionException}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
@@ -38,9 +40,15 @@ import org.apache.spark.sql.types.StructType
 final case class EsDoc(index: String, id: Option[String],
     version: Option[Long], source: String, delete: Boolean = false)
 
-final case class EsBulkStats(indexed: Long, conflicts: Long, requests: Long) {
+/** What one `bulk()` call did: docs indexed (or deleted), 409 version
+  * conflicts, accepted bulk requests, and re-sends of a request after a
+  * retryable failure (429/502/503/504 or a connect error).
+  */
+final case class EsBulkStats(indexed: Long, conflicts: Long, requests: Long,
+    retries: Long = 0L) {
   def +(o: EsBulkStats): EsBulkStats =
-    EsBulkStats(indexed + o.indexed, conflicts + o.conflicts, requests + o.requests)
+    EsBulkStats(indexed + o.indexed, conflicts + o.conflicts,
+      requests + o.requests, retries + o.retries)
 }
 
 /** Elasticsearch `_bulk` wire-protocol client — JDK `java.net.http`
@@ -57,6 +65,16 @@ final case class EsBulkStats(indexed: Long, conflicts: Long, requests: Long) {
   * of funnelling through the driver (reference: `kafka_to_es.py`
   * indexes row-at-a-time from one process — the documented
   * anti-pattern this replaces).
+  *
+  * One request in flight: while chunk N is on the wire, `bulk` pulls
+  * and encodes chunk N+1 from its iterator — inside `foreachPartition`
+  * that pull is the upstream work (Kafka fetch, JSON decode and
+  * encode) — and sends chunk N+1 only once chunk N's response is
+  * accepted, retries included. At most one request is outstanding per
+  * call, so chunks reach the server in iterator order and
+  * last-write-wins, 409 and 404 outcomes are those of a lockstep
+  * client. If the iterator throws, the chunk in flight is still
+  * completed before the exception propagates.
   */
 final class EsBulkClient(baseUrl: String, maxDocsPerRequest: Int = 1000,
     maxRetries: Int = 4) extends Serializable {
@@ -75,11 +93,35 @@ final class EsBulkClient(baseUrl: String, maxDocsPerRequest: Int = 1000,
       }
     } catch { case _: Exception => false }
 
-  /** Stream `docs` to the bulk endpoint in chunks. */
-  def bulk(docs: Iterator[EsDoc]): EsBulkStats =
-    docs.grouped(maxDocsPerRequest).map(postChunk).foldLeft(EsBulkStats(0, 0, 0))(_ + _)
+  /** Stream `docs` to the bulk endpoint in chunks, one request in flight. */
+  def bulk(docs: Iterator[EsDoc]): EsBulkStats = {
+    val chunks = docs.grouped(maxDocsPerRequest)
+    var stats = EsBulkStats(0, 0, 0)
+    var inFlight: Option[InFlight] = None
+    def await(): Unit = inFlight.foreach { f => inFlight = None; stats += complete(f) }
+    try {
+      while (chunks.hasNext) {
+        val next = request(chunks.next())
+        await()
+        inFlight = Some(InFlight(next, sendAsync(next)))
+      }
+      await()
+      stats
+    } catch {
+      case NonFatal(e) =>
+        // the iterator failed with a request on the wire: finish it, so
+        // none is outstanding once bulk() returns
+        inFlight.foreach { f =>
+          try complete(f) catch { case NonFatal(s) => e.addSuppressed(s) }
+        }
+        throw e
+    }
+  }
 
-  private def postChunk(chunk: Seq[EsDoc]): EsBulkStats = {
+  private final case class InFlight(req: HttpRequest,
+      response: CompletableFuture[HttpResponse[String]])
+
+  private def request(chunk: Seq[EsDoc]): HttpRequest = {
     val body = new StringBuilder
     chunk.foreach { d =>
       val meta = mapper.createObjectNode()
@@ -95,16 +137,26 @@ final class EsBulkClient(baseUrl: String, maxDocsPerRequest: Int = 1000,
       body.append(mapper.writeValueAsString(meta)).append('\n')
       if (!d.delete) body.append(d.source).append('\n')
     }
-    val req = HttpRequest.newBuilder(URI.create(s"$baseUrl/_bulk"))
+    HttpRequest.newBuilder(URI.create(s"$baseUrl/_bulk"))
       .timeout(Duration.ofSeconds(60))
       .header("Content-Type", "application/x-ndjson")
       .POST(HttpRequest.BodyPublishers.ofString(body.toString))
       .build()
+  }
+
+  /** Await `f`'s response, re-sending its request on retryable failures. */
+  private def complete(f: InFlight): EsBulkStats = {
     var attempt = 0
+    var sent = f.response
     while (true) {
       val resp =
-        try Some(send(req))
-        catch { case _: java.io.IOException => None }
+        try Some(sent.get())
+        catch {
+          case e: ExecutionException => e.getCause match {
+            case _: java.io.IOException => None
+            case cause => throw cause
+          }
+        }
       resp match {
         case Some(r) if r.statusCode() == 200 =>
           var indexed = 0L
@@ -120,7 +172,7 @@ final class EsBulkClient(baseUrl: String, maxDocsPerRequest: Int = 1000,
             else throw new IllegalStateException(
               s"bulk item failed (status $status): ${op.toString.take(500)}")
           }
-          return EsBulkStats(indexed, conflicts, 1)
+          return EsBulkStats(indexed, conflicts, 1, attempt.toLong)
         case other =>
           // connect failure or retryable HTTP status → backoff and retry the
           // whole request. Replays are safe: versioned docs collapse to 409s,
@@ -133,6 +185,7 @@ final class EsBulkClient(baseUrl: String, maxDocsPerRequest: Int = 1000,
             throw new IllegalStateException(
               s"bulk request failed after $attempt attempts (last status $code)")
           Thread.sleep(50L << math.min(attempt, 5))
+          sent = sendAsync(f.req)
       }
     }
     sys.error("unreachable")
@@ -200,6 +253,9 @@ final class EsBulkClient(baseUrl: String, maxDocsPerRequest: Int = 1000,
 
   private def send(req: HttpRequest): HttpResponse[String] =
     http.send(req, HttpResponse.BodyHandlers.ofString())
+
+  private def sendAsync(req: HttpRequest): CompletableFuture[HttpResponse[String]] =
+    http.sendAsync(req, HttpResponse.BodyHandlers.ofString())
 }
 
 object EsBulkClient {

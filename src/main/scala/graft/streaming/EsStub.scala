@@ -1,15 +1,14 @@
 package graft.streaming
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
-import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
-import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import com.sun.net.httpserver.HttpExchange
 
 /** In-process Elasticsearch stand-in for the zero-egress sandbox —
   * implements the slice of the REST surface the engine's sink layer
@@ -39,9 +38,16 @@ import com.sun.net.httpserver.{HttpExchange, HttpServer}
   *  - no version: unconditional overwrite (arrival order wins).
   *  - no `_id`: server-assigned sequential id (append).
   *
+  * Responses go out with TCP_NODELAY ([[HttpService]]), as real
+  * Elasticsearch sends them (`http.tcp.no_delay`, on by default).
+  * Without it every small response waits out the client's delayed ACK,
+  * about 40 ms per request on a Linux loopback.
+  *
   * Test hooks: [[failNextBulks]] makes the next N bulk requests return
-  * 429 (client retry path); [[bulkRequests]] counts accepted bulk
-  * POSTs (chunking assertions).
+  * 429 (client retry path); [[holdBulks]], while set, holds each bulk
+  * request until the latch opens (at most 30 s) before applying it
+  * (overlap assertions); [[bulkRequests]] counts accepted bulk POSTs
+  * (chunking assertions).
   */
 final class EsStub extends Service {
 
@@ -56,6 +62,7 @@ final class EsStub extends Service {
   private val autoId = new AtomicLong(0L)
   val bulkRequests = new AtomicLong(0L)
   @volatile var failNextBulks: Int = 0
+  @volatile var holdBulks: CountDownLatch = null
 
   /** index.max_result_window — the real engine's one-page cap. */
   val MaxResultWindow = 10000
@@ -86,36 +93,25 @@ final class EsStub extends Service {
     if (failNextBulks > 0) { failNextBulks -= 1; true } else false
   }
 
-  private val server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
-  // daemon threads + explicit shutdown in stop(): a leaked stub must
-  // never pin the JVM open after the owning query finishes
-  private val pool = Executors.newFixedThreadPool(8, r => {
-    val t = new Thread(r, "es-stub")
-    t.setDaemon(true)
-    t
-  })
-  server.setExecutor(pool)
+  private val http = new HttpService("es-stub", 8)(ex =>
+    try handle(ex)
+    catch {
+      case e: Exception =>
+        System.err.println(s"[EsStub] ${e.getClass.getName}: ${e.getMessage}")
+        respond(ex, 500, s"""{"error":"${e.getClass.getSimpleName}"}""")
+    } finally ex.close())
 
-  def port: Int = server.getAddress.getPort
-  def baseUrl: String = s"http://127.0.0.1:$port"
+  def port: Int = http.port
+  def baseUrl: String = http.baseUrl
 
-  def start(): Unit = server.start()
-  def stop(): Unit = { server.stop(0); pool.shutdown() }
+  def start(): Unit = http.start()
+  def stop(): Unit = http.stop()
 
   /** Docs currently held for `index` ("" = all): (index, id, source). */
   def snapshot(index: String): Seq[(String, String, String)] =
     docs.asScala.toSeq
       .filter { case ((i, _), e) => !e.deleted && (index.isEmpty || i == index) }
       .map { case ((i, id), e) => (i, id, e.source) }
-
-  server.createContext("/", (ex: HttpExchange) => {
-    try handle(ex)
-    catch {
-      case e: Exception =>
-        System.err.println(s"[EsStub] ${e.getClass.getName}: ${e.getMessage}")
-        respond(ex, 500, s"""{"error":"${e.getClass.getSimpleName}"}""")
-    } finally ex.close()
-  })
 
   private def handle(ex: HttpExchange): Unit = {
     val path = ex.getRequestURI.getPath.stripPrefix("/").stripSuffix("/")
@@ -126,6 +122,8 @@ final class EsStub extends Service {
         if (claimInjectedFailure()) {
           respond(ex, 429, """{"error":"rejected_execution_exception"}""")
         } else {
+          val hold = holdBulks
+          if (hold != null) hold.await(30, TimeUnit.SECONDS): Unit
           bulkRequests.incrementAndGet()
           val body = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
           respond(ex, 200, applyBulk(body))

@@ -106,8 +106,81 @@ class EsBulkSpec extends AnyFunSuite {
       val stats = c.bulk(docs)
       assert(stats.indexed == 250 && stats.conflicts == 0)
       // 3 accepted chunks (100+100+50); the 429'd attempt is not counted
+      // as a request but as a retry
       assert(stub.bulkRequests.get() == 3)
+      assert(stats.requests == 3 && stats.retries == 1)
       assert(stub.snapshot("chunks").size == 250)
+    }
+  }
+
+  private def docs(index: String, n: Int)(source: Int => String): Iterator[EsDoc] =
+    (1 to n).iterator.map(i => EsDoc(index, Some(i.toString), None, source(i)))
+
+  test("bulk pulls the next chunk while the previous request is in flight") {
+    withStub { stub =>
+      val c = new EsBulkClient(stub.baseUrl, maxDocsPerRequest = 10)
+      // the stub holds every bulk until chunk 2's first doc is pulled: a
+      // client that waits for chunk 1's response before pulling never
+      // gets there
+      val release = new java.util.concurrent.CountDownLatch(1)
+      stub.holdBulks = release
+      val feed = docs("overlap", 30)(i => s"""{"k":$i}""").map { d =>
+        if (d.id.contains("11")) release.countDown()
+        d
+      }
+      val run = new java.util.concurrent.FutureTask(() => c.bulk(feed))
+      new Thread(run).start()
+      try {
+        val stats = run.get(5, java.util.concurrent.TimeUnit.SECONDS)
+        assert(stats == EsBulkStats(30, 0, 3))
+        assert(stub.snapshot("overlap").size == 30)
+      } finally release.countDown()
+    }
+  }
+
+  test("one request in flight keeps arrival order: the last chunk's write of an id wins") {
+    withStub { stub =>
+      val c = new EsBulkClient(stub.baseUrl, maxDocsPerRequest = 10)
+      // unversioned writes of ids 1..10 in each of 5 chunks
+      val feed = (0 until 5).iterator.flatMap(chunk =>
+        docs("order", 10)(i => s"""{"k":$i,"chunk":$chunk}"""))
+      assert(c.bulk(feed) == EsBulkStats(50, 0, 5))
+      val fin = stub.snapshot("order")
+      assert(fin.size == 10)
+      assert(fin.forall(_._3.endsWith(""""chunk":4}""")), fin)
+    }
+  }
+
+  test("retries under one request in flight: exact stats, every doc once") {
+    withStub { stub =>
+      val c = new EsBulkClient(stub.baseUrl, maxDocsPerRequest = 10)
+      stub.failNextBulks = 2
+      val stats = c.bulk(docs("retry", 35)(i => s"""{"k":$i}"""))
+      assert(stats == EsBulkStats(35, 0, 4, 2))
+      assert(stub.bulkRequests.get() == 4)
+      assert(stub.snapshot("retry").map(_._2.toInt).sorted == (1 to 35))
+    }
+  }
+
+  test("an upstream failure propagates from bulk with no request left outstanding") {
+    withStub { stub =>
+      val c = new EsBulkClient(stub.baseUrl, maxDocsPerRequest = 10)
+      // chunk 1 is held on the server until shortly after the feed fails
+      val release = new java.util.concurrent.CountDownLatch(1)
+      stub.holdBulks = release
+      val boom = new IllegalStateException("upstream failed")
+      val feed = docs("broken", 30)(i => s"""{"k":$i}""").map { d =>
+        if (d.id.contains("11")) {
+          new Thread(() => { Thread.sleep(300); release.countDown() }).start()
+          throw boom
+        }
+        d
+      }
+      val thrown = intercept[IllegalStateException](c.bulk(feed))
+      assert(thrown eq boom)
+      // chunk 1 was applied and answered before bulk() returned
+      assert(stub.bulkRequests.get() == 1)
+      assert(stub.snapshot("broken").size == 10)
     }
   }
 
