@@ -884,9 +884,9 @@ object Streaming {
   // record-batch v2 over TCP through the in-process stub broker
   // (`spark_streaming_kafka.py:13-18` / `dataframe_to_kafka.py:85-113`
   // with the connector jar replaced by graft.kafka's own client).
-  // Executors produce key-partitioned batches and consume one Spark
-  // partition per Kafka partition; the result must hash-match the same
-  // batch oracle as the file-wire twin.
+  // Executors produce key-partitioned batches and consume offset-range
+  // slices, both through the kafka-wire connector; the result must
+  // hash-match the same batch oracle as the file-wire twin.
   val kafkaWireIngest: QueryDef = QueryDef.sql("q_kafka_wire_ingest")(IngestOracle) { (s, dir) =>
     Service.using(new KafkaStubBroker(3)) { broker =>
       val exchange = new graft.kafka.KafkaWireExchange("127.0.0.1", broker.port)
@@ -1667,7 +1667,8 @@ object Streaming {
   // reading protocol bytes from the stub broker through planInput-
   // Partitions/PartitionReader — offset tracking, checkpointing and
   // Trigger.AvailableNow admission control all engaged, where
-  // q_kafka_wire_ingest's consumer is a batch RDD drain. Same decode
+  // q_kafka_wire_ingest's consumer is the same connector's batch scan
+  // (`spark.read`, through KafkaWireExchange.read). Same decode
   // chain, same oracle: the reference's `readStream.format("kafka")`
   // pipeline with only the wire implementation swapped.
   val streamKafkaWire: QueryDef = QueryDef.sql("q_stream_kafka_wire")(IngestOracle) { (s, dir) =>

@@ -12,8 +12,9 @@ import KafkaCodec._
   * broker speaks; a real broker with these versions enabled would
   * accept the identical bytes.
   *
-  * Not thread-safe: one client per task/thread (exactly how
-  * [[KafkaWireExchange]] uses it from `foreachPartition`).
+  * Not thread-safe: one client per task/thread (the `kafka-wire`
+  * connector's readers and writers, and [[KafkaWireExchange]]'s
+  * fault-model producers, each open their own).
   */
 final class KafkaWireClient(host: String, port: Int,
     clientId: String = "graft",
@@ -421,29 +422,6 @@ final class KafkaWireClient(host: String, port: Int,
         throw new KafkaWireException(r.errorCode, s"fetch error ${r.errorCode} at $next")
       require(r.nextOffset > next, s"stalled fetch at $next < target $target")
       acc ++= r.records
-      next = r.nextOffset
-    }
-    acc.result().filterNot(_.control)
-  }
-
-  /** Drain exactly `[start, end)` — the offset-range-slice twin of
-    * [[fetchAll]], for parallel consumption of ONE partition by
-    * several tasks (each task owns a disjoint slice; records past the
-    * slice end that a batch-aligned fetch response happens to carry
-    * are cut, so slices never overlap).
-    */
-  def fetchRange(topic: String, partition: Int, start: Long, end: Long,
-      readCommitted: Boolean = false): Seq[WireRecord] = {
-    val acc = Seq.newBuilder[WireRecord]
-    var next = start
-    while (next < end) {
-      val r = fetch(topic, partition, next, readCommitted = readCommitted)
-      if (r.errorCode != Err.None)
-        throw new KafkaWireException(r.errorCode,
-          s"fetch error ${r.errorCode} on $topic/$partition@$next")
-      require(r.nextOffset > next,
-        s"stalled fetch at $next < planned end $end ($topic/$partition)")
-      acc ++= r.records.filter(rec => rec.offset >= next && rec.offset < end)
       next = r.nextOffset
     }
     acc.result().filterNot(_.control)

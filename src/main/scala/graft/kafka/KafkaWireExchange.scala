@@ -1,191 +1,148 @@
 package graft.kafka
 
-import java.nio.charset.StandardCharsets
-
+import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
 
 import graft.replay.Replay.{Exchange, ReplayConfig}
 
 /** The Kafka-backed [[graft.replay.Replay.Exchange]]: real record-batch
-  * bytes over real TCP, produced from the executors and consumed back
-  * one Spark partition per Kafka partition — the executed form of
+  * bytes over real TCP, produced and consumed through the `kafka-wire`
+  * DataSource ([[KafkaWireSourceProvider]]) — the executed form of
   * S5/K2 that `FileExchange` only stands in for.
   *
-  * Scale shape: `publish` opens ONE client per Spark task and groups
-  * rows by the default-partitioner placement (murmur2 of the key, the
-  * contract `dataframe_to_kafka.py:94-100` relies on for per-key
-  * ordering), so a 1000-executor produce fans out naturally and no
-  * data crosses the driver. `read` maps Kafka partitions 1:1 onto
-  * Spark partitions — the same parallelism a real connector plans.
+  * Scale shape: the producer is the connector's writer (one producer
+  * socket per Spark task, rows placed by the default partitioner —
+  * murmur2 of the key, the contract `dataframe_to_kafka.py:94-100`
+  * relies on for per-key ordering — so no data crosses the driver);
+  * the consumer is the connector's batch scan, split into offset-range
+  * slices so the decode after it is not pinned to the partition count.
   *
   * Delivery is at-least-once, exactly like the reference's producer:
   * a re-run appends again (no file-marker idempotence — that is the
-  * FileExchange twin's exactly-once variant).
+  * FileExchange twin's exactly-once variant). `idempotent` and
+  * `transactionalId` swap in the two KIP-98 fault models instead
+  * (see [[publishFenced]]).
   */
 final class KafkaWireExchange(host: String, port: Int,
     idempotent: Boolean = false,
     transactionalId: Option[String] = None) extends Exchange {
-  import KafkaWireExchange.bytes
 
-  /** Producer: key-partitioned, chunked produce requests from each
-    * task. Null keys fall back to the task's partition index (sticky
-    * round-robin, the modern default partitioner's behavior per batch).
+  /** Producer: `cfg.repeat` at-least-once passes of a `kafka-wire`
+    * write, each followed by the `afterWrite` seam, a progress line and
+    * the `batchSleepMs` pacing — unless a fault model is configured.
     */
   override def publish(wire: DataFrame, cfg: ReplayConfig,
-      afterWrite: Int => Unit = _ => ()): Unit = {
-    val t0 = System.nanoTime()
-    val (h, p, topic) = (host, port, cfg.topic)
-    // metadata auto-creates the topic and fixes the partition count
-    // before any executor produces
-    val nParts = {
-      val c = new KafkaWireClient(h, p)
-      try c.metadata(Seq(topic)).head.partitions.size finally c.close()
-    }
-    if (transactionalId.isDefined) {
-      // Transactional (EOS) model — the KIP-98 TRANSACTIONS half. Each
-      // task is one transactional producer with a STABLE id (derived
-      // from the Spark partition, not the attempt), and cfg.repeat
-      // plays ATTEMPTS of the whole publish: attempts 1..repeat-1 are
-      // KILLED after producing (no EndTxn — the crash a task dies from
-      // between its last produce and its commit), the final attempt
-      // commits. Every attempt's InitProducerId returns the same pid
-      // with a bumped epoch, FENCING the previous attempt and aborting
-      // whatever it left open — so the killed attempts' records sit in
-      // aborted ranges on the log and a read_committed consumer sees
-      // EXACTLY ONE copy, with zero consumer-side dedup. (The
-      // idempotent branch below fences duplicate BATCHES of one
-      // attempt; this branch fences whole ATTEMPTS.)
-      val base = transactionalId.get
-      (1 to cfg.repeat).foreach { attempt =>
-        val commit = attempt == cfg.repeat
-        wire.foreachPartition { (rows: Iterator[Row]) =>
-          if (rows.hasNext) {
-            val c = new KafkaWireClient(h, p)
-            try {
-              val taskTxn = s"$base-p${org.apache.spark.TaskContext.getPartitionId()}"
-              val (pid, epoch) = c.initProducerId(taskTxn)
-              val sticky = org.apache.spark.TaskContext.getPartitionId() % nParts
-              val nextSeq = scala.collection.mutable.Map.empty[Int, Int]
-              val added = scala.collection.mutable.Set.empty[Int]
-              rows.grouped(500).foreach { chunk =>
-                chunk
-                  .map { row =>
-                    val k = bytes(row.get(row.fieldIndex("key")))
-                    val v = bytes(row.get(row.fieldIndex("value")))
-                    val part =
-                      if (k == null) sticky else KafkaCodec.partitionFor(k, nParts)
-                    (part, k, v)
-                  }
-                  .groupBy(_._1)
-                  .foreach { case (part, rs) =>
-                    if (!added(part)) {
-                      c.addPartitionsToTxn(taskTxn, pid, epoch, topic, Seq(part))
-                      added += part
-                    }
-                    val recs = rs.map { case (_, k, v) => (0L, k, v) }
-                    val seq = nextSeq.getOrElse(part, 0)
-                    c.produce(topic, part, recs, gzip = false, pid, epoch, seq,
-                      transactionalId = taskTxn)
-                    nextSeq(part) = seq + recs.size
-                  }
-              }
-              // the kill: attempts before the last never commit — their
-              // open transaction is aborted by the next attempt's init
-              if (commit && added.nonEmpty) c.endTxn(taskTxn, pid, epoch, commit = true)
-            } finally c.close()
-          }
-        }
-        afterWrite(attempt)
+      afterWrite: Int => Unit = _ => ()): Unit =
+    if (idempotent || transactionalId.isDefined) publishFenced(wire, cfg, afterWrite)
+    else {
+      val t0 = System.nanoTime()
+      (1 to cfg.repeat).foreach { r =>
+        // CreateTime 0L (no timestamp column): the wire carries event
+        // time in the payload (ts_us), not the broker timestamp
+        wire.write.format("kafka-wire")
+          .option("host", host).option("port", port.toString)
+          .option("topic", cfg.topic)
+          .mode("append").save()
+        afterWrite(r)
+        val elapsed = (System.nanoTime() - t0) / 1e9
+        val eta = elapsed / r * (cfg.repeat - r)
+        // progress, not an error: stdout so sbt tags it [info], not [error]
+        println(
+          f"[replay-kafka] batch $r/${cfg.repeat} (${100.0 * r / cfg.repeat}%.0f%%) eta ${eta}%.1fs")
+        if (cfg.batchSleepMs > 0 && r < cfg.repeat) Thread.sleep(cfg.batchSleepMs)
       }
-    } else if (idempotent) {
-      // enable.idempotence=true model (KIP-98): each task is ONE
-      // producer session — one InitProducerId handshake, monotone
-      // per-partition sequences stamped in each batch header — and
-      // cfg.repeat plays the RETRY loop at BATCH granularity: every
-      // batch is sent repeat times back-to-back with byte-identical
-      // (pid, sequence), the broker re-acks the duplicates and appends
-      // exactly once. Retrying per batch (not the whole task) is the
-      // protocol's own constraint: the broker's producer-state window
-      // holds the last 5 sequence ranges per (pid, partition) — the
-      // very reason Kafka caps max.in.flight at 5 when idempotence is
-      // on — so a duplicate must arrive while its range is still
-      // cached. Streaming chunk-by-chunk, nothing materialized.
-      wire.foreachPartition { (rows: Iterator[Row]) =>
+    }
+
+  /** The KIP-98 fault models, one per-task loop. Each task is ONE
+    * producer session — one InitProducerId handshake, monotone
+    * per-partition sequences stamped in each batch header — and
+    * `cfg.repeat` plays the fault:
+    *
+    *  - idempotent (`enable.idempotence=true`): the RETRY loop at BATCH
+    *    granularity — every batch is sent repeat times back-to-back with
+    *    byte-identical (pid, sequence), the broker re-acks the
+    *    duplicates and appends exactly once. Retrying per batch (not the
+    *    whole task) is the protocol's own constraint: the broker's
+    *    producer-state window holds the last 5 sequence ranges per
+    *    (pid, partition) — the very reason Kafka caps max.in.flight at 5
+    *    when idempotence is on — so a duplicate must arrive while its
+    *    range is still cached. `afterWrite` fires once, for the single
+    *    logical pass.
+    *  - transactional: repeat ATTEMPTS of the whole publish under a
+    *    STABLE per-task id (`<transactionalId>-p<sparkPartition>`, not
+    *    the attempt). Attempts 1..repeat-1 are KILLED after producing
+    *    (no EndTxn — the crash a task dies from between its last produce
+    *    and its commit), the final attempt commits. Every attempt's
+    *    InitProducerId returns the same pid with a bumped epoch, FENCING
+    *    the previous attempt and aborting whatever it left open, so a
+    *    read_committed consumer sees EXACTLY ONE copy with zero
+    *    consumer-side dedup. `afterWrite` fires after each attempt.
+    *
+    * Null keys fall back to the task's partition index (sticky
+    * round-robin, the modern default partitioner's behavior per batch).
+    */
+  private def publishFenced(wire: DataFrame, cfg: ReplayConfig,
+      afterWrite: Int => Unit): Unit = {
+    val (h, p, topic, txn) = (host, port, cfg.topic, transactionalId)
+    val nParts = partitionCount(topic)
+    val (attempts, sends) = if (txn.isDefined) (cfg.repeat, 1) else (1, cfg.repeat)
+    val pairs = wire.select(col("key").cast("binary"), col("value").cast("binary"))
+    (1 to attempts).foreach { attempt =>
+      val commit = attempt == attempts
+      pairs.foreachPartition { (rows: Iterator[Row]) =>
         if (rows.hasNext) {
+          val task = TaskContext.getPartitionId()
+          val taskTxn = txn.map(base => s"$base-p$task").orNull
           val c = new KafkaWireClient(h, p)
           try {
-            val (pid, epoch) = c.initProducerId()
-            val sticky = org.apache.spark.TaskContext.getPartitionId() % nParts
+            val (pid, epoch) = c.initProducerId(taskTxn)
             val nextSeq = scala.collection.mutable.Map.empty[Int, Int]
+            val added = scala.collection.mutable.Set.empty[Int]
             rows.grouped(500).foreach { chunk =>
               chunk
                 .map { row =>
-                  val k = bytes(row.get(row.fieldIndex("key")))
-                  val v = bytes(row.get(row.fieldIndex("value")))
-                  val part =
-                    if (k == null) sticky else KafkaCodec.partitionFor(k, nParts)
-                  (part, k, v)
+                  val k = row.getAs[Array[Byte]](0)
+                  val part = if (k == null) task % nParts else KafkaCodec.partitionFor(k, nParts)
+                  (part, k, row.getAs[Array[Byte]](1))
                 }
                 .groupBy(_._1)
                 .foreach { case (part, rs) =>
+                  if (taskTxn != null && added.add(part))
+                    c.addPartitionsToTxn(taskTxn, pid, epoch, topic, Seq(part))
                   val recs = rs.map { case (_, k, v) => (0L, k, v) }
                   val seq = nextSeq.getOrElse(part, 0)
-                  (1 to cfg.repeat).foreach { _ =>
-                    c.produce(topic, part, recs, gzip = false, pid, epoch, seq)
+                  (1 to sends).foreach { _ =>
+                    c.produce(topic, part, recs, gzip = false, pid, epoch, seq,
+                      transactionalId = taskTxn)
                   }
                   nextSeq(part) = seq + recs.size
                 }
             }
+            // the kill: attempts before the last never commit — their
+            // open transaction is aborted by the next attempt's init
+            if (commit && added.nonEmpty) c.endTxn(taskTxn, pid, epoch, commit = true)
           } finally c.close()
         }
       }
-      // On this path cfg.repeat is a PER-BATCH retry count (every batch
-      // already went out repeat times above), not a pass count, so the
-      // test seam fires once for the single logical pass — crash
-      // injection between passes belongs to the at-least-once branch.
-      afterWrite(1)
-    } else (1 to cfg.repeat).foreach { r =>
-      wire.foreachPartition { (rows: Iterator[Row]) =>
-        if (rows.hasNext) {
-          val c = new KafkaWireClient(h, p)
-          try {
-            val sticky = org.apache.spark.TaskContext.getPartitionId() % nParts
-            rows.grouped(500).foreach { chunk =>
-              chunk
-                .map { row =>
-                  val k = bytes(row.get(row.fieldIndex("key")))
-                  val v = bytes(row.get(row.fieldIndex("value")))
-                  val part =
-                    if (k == null) sticky else KafkaCodec.partitionFor(k, nParts)
-                  (part, k, v)
-                }
-                .groupBy(_._1)
-                .foreach { case (part, rs) =>
-                  // CreateTime 0L: the wire carries event time in the
-                  // payload (ts_us), not the broker timestamp
-                  c.produce(topic, part, rs.map { case (_, k, v) => (0L, k, v) })
-                }
-            }
-          } finally c.close()
-        }
-      }
-      afterWrite(r)
-      val elapsed = (System.nanoTime() - t0) / 1e9
-      val eta = elapsed / r * (cfg.repeat - r)
-      // progress, not an error: stdout so sbt tags it [info], not [error]
-      println(
-        f"[replay-kafka] batch $r/${cfg.repeat} (${100.0 * r / cfg.repeat}%.0f%%) eta ${eta}%.1fs")
-      if (cfg.batchSleepMs > 0 && r < cfg.repeat) Thread.sleep(cfg.batchSleepMs)
+      afterWrite(attempt)
     }
   }
 
-  /** Consumer: earliest→high-watermark drain, one Spark partition per
-    * Kafka partition. Returns the FileExchange-compatible (key, value)
-    * frame plus the Kafka coordinates (partition, offset) so ordering
-    * assertions are expressible downstream.
+  // metadata auto-creates the topic, fixing its partition count before
+  // any executor produces or the scan plans
+  private def partitionCount(topic: String): Int = {
+    val c = new KafkaWireClient(host, port)
+    try c.metadata(Seq(topic)).head.partitions.size finally c.close()
+  }
+
+  /** Consumer: the whole log (earliest → high watermark) as the
+    * FileExchange-compatible (key, value) STRING frame plus the Kafka
+    * coordinates (partition, offset), so ordering assertions are
+    * expressible downstream.
     */
   override def read(spark: SparkSession, topic: String): DataFrame =
-    readIsolation(spark, topic, committed = false)
+    readIsolation(spark, topic, "read_uncommitted")
 
   /** The read_committed twin of [[read]]: only records of COMMITTED
     * transactions (plus plain non-transactional records) come back —
@@ -193,59 +150,25 @@ final class KafkaWireExchange(host: String, port: Int,
     * protocol level, not deduplicated afterwards.
     */
   def readCommitted(spark: SparkSession, topic: String): DataFrame =
-    readIsolation(spark, topic, committed = true)
+    readIsolation(spark, topic, "read_committed")
 
   private def readIsolation(spark: SparkSession, topic: String,
-      committed: Boolean): DataFrame = {
-    val (h, p) = (host, port)
-    // plan offset-range SLICES, not whole partitions: a 3-partition
-    // topic on a 32-core stage would otherwise pin the fetch AND every
-    // downstream projection (JSON decode, the usual next op) to 3
-    // tasks — the measured bottleneck on the 10× scale run. Bounds are
-    // resolved once here (hw, or LSO for read_committed), so the read
-    // is a deterministic snapshot no matter how it's sliced.
-    val slices = {
-      val c = new KafkaWireClient(h, p)
-      try {
-        val parts = c.metadata(Seq(topic)).head.partitions.map(_.partition).sorted
-        val ranges = parts.map { part =>
-          val end = if (committed) c.lastStableOffset(topic, part)
-                    else c.listOffset(topic, part, -1L)
-          (topic, part, 0L, end)
-        }
-        // 4 slices per topic-partition, capped at the stage's core
-        // count: enough that the downstream projection (JSON decode)
-        // is no longer pinned to partition-count tasks, without
-        // putting every core into contention on the same few broker
-        // partition locks (measured: 32 readers over 3 partitions ran
-        // SLOWER than 3 — lock convoy on the per-partition log)
-        KafkaWireSource.splitForMinPartitions(ranges,
-          Some(math.min(spark.sparkContext.defaultParallelism,
-            4 * ranges.size)))
-      } finally c.close()
-    }
-    val rdd = spark.sparkContext
-      .parallelize(slices, math.max(slices.size, 1))
-      .flatMap { case (t, part, s0, e0) =>
-        val c = new KafkaWireClient(h, p)
-        try {
-          c.fetchRange(t, part, s0, e0, readCommitted = committed).map { r =>
-            (if (r.key == null) null else new String(r.key, StandardCharsets.UTF_8),
-              if (r.value == null) null else new String(r.value, StandardCharsets.UTF_8),
-              part, r.offset)
-          }
-        } finally c.close()
-      }
-    spark.createDataFrame(rdd).toDF("key", "value", "partition", "offset")
-  }
-}
-
-object KafkaWireExchange {
-  // companion-level so executor closures capture no exchange instance
-  private def bytes(v: Any): Array[Byte] = v match {
-    case null => null
-    case b: Array[Byte] => b
-    case s: String => s.getBytes(StandardCharsets.UTF_8)
-    case other => other.toString.getBytes(StandardCharsets.UTF_8)
+      isolation: String): DataFrame = {
+    val nParts = partitionCount(topic)
+    spark.read.format("kafka-wire")
+      .option("host", host).option("port", port.toString)
+      .option("topic", topic)
+      .option("isolation.level", isolation)
+      // 4 offset slices per topic-partition, capped at the stage's core
+      // count: enough that the downstream projection (JSON decode) is no
+      // longer pinned to partition-count tasks, without putting every
+      // core into contention on the same few broker partition locks
+      // (measured: 32 readers over 3 partitions ran SLOWER than 3 — lock
+      // convoy on the per-partition log)
+      .option("minPartitions",
+        math.min(spark.sparkContext.defaultParallelism, 4 * nParts).toString)
+      .load()
+      .select(col("key").cast("string").as("key"),
+        col("value").cast("string").as("value"), col("partition"), col("offset"))
   }
 }

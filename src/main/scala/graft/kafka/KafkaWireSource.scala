@@ -737,10 +737,11 @@ final case class KafkaWireWriterFactory(params: KafkaWireWriterParams)
 }
 
 /** One producer socket per task; rows buffered per (topic, Kafka
-  * partition) and flushed as record batches (500-record chunks,
-  * mirroring [[KafkaWireExchange.publish]]), remainder flushed at
+  * partition) and flushed as 500-record batches, remainder flushed at
   * commit — so a failed task produces at most its flushed prefix
   * (at-least-once after Spark's retry), never a half-written record.
+  * This is also the replay's producer: [[KafkaWireExchange.publish]]
+  * runs each at-least-once pass as a batch write through it.
   * Column-routed topics (no `topic` option) resolve their partition
   * count lazily on first sight, one metadata round trip per distinct
   * topic per task.

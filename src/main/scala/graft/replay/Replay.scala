@@ -157,14 +157,17 @@ object Replay {
   }
 
   /** Full replay: read → transform → encode → publish to the exchange.
-    * The nanos-as-long conf [[readSource]] may set is restored once the
-    * publish has materialized every batch, so a borrowed session's
-    * later parquet reads keep their normal timestamp decoding.
+    * On the parquet path, the nanos-as-long conf [[readSource]] sets is
+    * restored once the publish has materialized every batch, so a
+    * borrowed session's later parquet reads keep their normal timestamp
+    * decoding. Other inputs never touch that conf, so a concurrent
+    * query that sets it keeps its value.
     */
   def run(spark: SparkSession, cfg: ReplayConfig, exchange: Exchange): Unit = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val prev = spark.conf.getOption(key)
     try exchange.publish(encode(transform(readSource(spark, cfg), cfg), cfg), cfg)
-    finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    finally if (cfg.extension == "parquet")
+      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 }

@@ -356,6 +356,22 @@ class KafkaWireSpec extends AnyFunSuite {
     }
   }
 
+  test("a publish killed between passes leaves exactly one pass on the topic") {
+    withBroker() { broker =>
+      import spark.implicits._
+      val wire = (0 until 1000).map(i => (s"k$i", s"v$i"))
+        .toDF("key", "value").repartition(2)
+      val ex = new KafkaWireExchange("127.0.0.1", broker.port)
+      val e = intercept[RuntimeException] {
+        ex.publish(wire, ReplayConfig(input = "", topic = "torn", repeat = 2),
+          afterWrite = r => if (r == 1) throw new RuntimeException("kill"))
+      }
+      assert(e.getMessage == "kill")
+      assert((0 until 3).map(broker.highWatermark("torn", _)).sum == 1000L)
+      assert(ex.read(spark, "torn").select("key").distinct().count() == 1000L)
+    }
+  }
+
   // ---- KIP-98 idempotent producer ----
 
   test("idempotence: a retried (pid, sequence) batch re-acks without re-appending") {

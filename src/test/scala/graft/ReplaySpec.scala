@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.replay.Replay
@@ -50,6 +51,27 @@ class ReplaySpec extends AnyFunSuite {
     val b = Replay.transform(Replay.readSource(spark, cfg), cfg).collect().toSeq
     assert(a == b)
     assert(a.map(_.getAs[String]("room")).toSet == Set("413", "656A"))
+  }
+
+  test("a CSV replay leaves the parquet nanos conf as a concurrent query set it") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    val files = new FileExchange(
+      Files.createTempDirectory(Paths.get("target"), "exch_conf_").toString)
+    // sets the key mid-publish, as Tables.eventsRaw or
+    // Ingest.eventsStream does on a session the replay shares
+    val exchange = new Replay.Exchange {
+      def publish(wire: DataFrame, cfg: ReplayConfig, afterWrite: Int => Unit): Unit = {
+        spark.conf.set(key, "true")
+        files.publish(wire, cfg, afterWrite)
+      }
+      def read(s: SparkSession, topic: String): DataFrame = files.read(s, topic)
+    }
+    try {
+      spark.conf.unset(key)
+      Replay.run(spark, ReplayConfig(input = input, excluded = Seq("pir")), exchange)
+      assert(spark.conf.getOption(key).contains("true"))
+    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   test("kill-and-resume publish is exactly-once: no duplicate or torn batch") {
