@@ -65,28 +65,15 @@ object Bench {
     math.min(leg(), leg())
   }
 
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel(
-      sys.env.getOrElse("SPARK_GRAFT_LOGLEVEL", "WARN"))
-    // untimed warm-up: absorb one-time session costs (codegen + JIT
-    // compilation of the hot operator paths, shuffle service, parquet
-    // reader, page cache for the input tables, noop sink classloading)
-    // so the first measured queries aren't charged for them. Each leg
-    // exercises a family the catalog leans on: columnar scan + hash
-    // aggregate, regex tokenization, sketch aggregation, window, and a
-    // shuffled join — enough iterations that C2 reaches the loops.
+  /** Untimed warm-up: absorb one-time session costs (codegen + JIT
+    * compilation of the hot operator paths, shuffle service, parquet
+    * reader, page cache for the input tables, noop sink classloading)
+    * so the first measured queries aren't charged for them. Each leg
+    * exercises a family the catalog leans on: columnar scan + hash
+    * aggregate, regex tokenization, sketch aggregation, window, and a
+    * shuffled join — enough iterations that C2 reaches the loops.
+    */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
     try {
       import org.apache.spark.sql.functions._
       val ev = graft.core.Tables.events(spark, sfDir)
@@ -104,6 +91,12 @@ object Bench {
           .hint("shuffle_hash"), Seq("user_id"))
         .write.format("noop").mode("overwrite").save()
     } catch { case _: Throwable => () }
+
+  def main(args: Array[String]): Unit = Session.run("graft-bench")(bench)
+
+  private def bench(spark: SparkSession): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    warmUp(spark, sfDir)
     // optional comma-separated allowlist for targeted profiling runs.
     // Audit-only exact forms (each with a scale twin in the catalog)
     // are skipped by default so the headline measures the 100 TB plan
@@ -150,24 +143,7 @@ object Bench {
             false
         }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      // Between-query hygiene, OUTSIDE the timed region: the round-10
-      // full run showed two queries 3.8x slower in-session than the
-      // same binary isolated on the same boot (BENCH_AB_r11.json —
-      // q_approx_quantiles_bound 2.27s in the 260-query session vs
-      // 0.60s alone, code untouched since r7). Each query unpersists
-      // its own caches, but a failed query can strand its persist, and
-      // 260 queries of accumulated heap residue turns one query's GC
-      // debt into its alphabetical successor's wall-clock. Dropping
-      // leaked cache entries + letting a GC run between measurements
-      // charges each query for its own work only — which is also what
-      // a per-job cluster deployment would see.
-      spark.catalog.clearCache()
-      // clearCache only drops CacheManager (Dataset.persist) entries; a
-      // failed query can also strand RDD-level persisted blocks (e.g. a
-      // localCheckpoint inside KMeans.fit) that live in a different
-      // registry — sweep those too.
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      System.gc()
+      Session.sweep(spark) // outside the timed region
       (elapsed, ok)
     }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
@@ -253,7 +229,5 @@ object Bench {
     // a failed query must be visible in the JSON, not just on stderr —
     // otherwise a crashed round reads as a fast green one
     println(line(byCost.take(keep), byCost.size - keep))
-    graft.core.Spill.cleanup()
-    spark.stop()
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: prints `.explain("formatted")` for representative
   * catalog queries so scan pushdown, join strategies, partial
   * aggregation, and codegen spans can be reviewed (see PLANS.md).
@@ -16,41 +14,34 @@ object Plans {
         // round-2 additions worth auditing
         "q_simhash60", "q_hash_split", "q_range_join_bucketed",
         "q_contamination", "q_grouping_sets", "q_gap_fill")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // Many builders materialize intermediates (Spill.materialize, CC
-    // rounds), so the RETURNED DataFrame's plan is just a spill scan.
-    // SPARK_GRAFT_PLANS_EXEC=1 additionally prints every plan the
-    // builder executed, via a listener — the real evidence for those.
-    val dumpExecuted = sys.env.get("SPARK_GRAFT_PLANS_EXEC").contains("1")
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit = {
-        println(s"\n-------- executed ($funcName) --------")
-        println(qe.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+    Session.run("graft-plans") { spark =>
+      // Many builders materialize intermediates (Spill.materialize, CC
+      // rounds), so the RETURNED DataFrame's plan is just a spill scan.
+      // SPARK_GRAFT_PLANS_EXEC=1 additionally prints every plan the
+      // builder executed, via a listener — the real evidence for those.
+      val dumpExecuted = sys.env.get("SPARK_GRAFT_PLANS_EXEC").contains("1")
+      val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+        override def onSuccess(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            durationNs: Long): Unit = {
+          println(s"\n-------- executed ($funcName) --------")
+          println(qe.explainString(
+            org.apache.spark.sql.execution.FormattedMode))
+        }
+        override def onFailure(funcName: String,
+            qe: org.apache.spark.sql.execution.QueryExecution,
+            exception: Exception): Unit = ()
       }
-      override def onFailure(funcName: String,
-          qe: org.apache.spark.sql.execution.QueryExecution,
-          exception: Exception): Unit = ()
+      if (dumpExecuted) spark.listenerManager.register(listener)
+      try SparkEntry.catalog.filter(q => names.contains(q.name)).foreach { q =>
+        println(s"\n======== ${q.name} ========")
+        val df = q.build(spark, sfDir)
+        // listener events are async; settle before the final explain so
+        // executed plans stay inside this query's banner
+        if (dumpExecuted) Thread.sleep(1500)
+        df.explain("formatted")
+        if (dumpExecuted) Thread.sleep(1500)
+      } finally spark.listenerManager.unregister(listener)
     }
-    if (dumpExecuted) spark.listenerManager.register(listener)
-    SparkEntry.catalog.filter(q => names.contains(q.name)).foreach { q =>
-      println(s"\n======== ${q.name} ========")
-      val df = q.build(spark, sfDir)
-      // listener events are async; settle before the final explain so
-      // executed plans stay inside this query's banner
-      if (dumpExecuted) Thread.sleep(1500)
-      df.explain("formatted")
-      if (dumpExecuted) Thread.sleep(1500)
-    }
-    spark.stop()
   }
 }

@@ -1,46 +1,25 @@
 package graft.cli
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.streaming.Trigger
 
+import graft.Session
 import graft.batch.Collector
 import graft.replay.Replay
 import graft.replay.Replay.{FileExchange, ReplayConfig}
 import graft.streaming.{Ingest, UpsertParquetStore}
 
-/** The reference's three executable entry points (SURVEY.md §3), as
-  * thin CLIs over the library — a user who ran the reference's scripts
-  * runs these instead:
-  *
-  *  - `data_collector.py`      → [[CollectorMain]]
-  *  - `dataframe_to_kafka.py`  → [[ReplayMain]] (same flag surface)
-  *  - `spark_streaming_kafka.py` → [[StreamMain]]
-  *
-  * Each builds its own session exactly like the reference scripts did;
-  * all logic lives in the library objects these call.
-  */
-object Mains {
-  /** Run `f` with a session. A borrowed live session (e.g. a test
-    * harness's) is used AS-IS — `Builder.getOrCreate` would silently
-    * apply this CLI's config to it (shuffle partitions, timezone) and
-    * never restore, and it must not be stopped either. Only a session
-    * this call creates is configured and torn down.
-    */
-  private[cli] def withSession(app: String)(f: SparkSession => Unit): Unit =
-    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession) match {
-      case Some(borrowed) => f(borrowed)
-      case None =>
-        val spark = SparkSession.builder()
-          .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-          .appName(app)
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-          .getOrCreate()
-        try f(spark)
-        finally spark.stop()
-    }
-}
+// The reference's three executable entry points (SURVEY.md §3), as thin
+// CLIs over the library; a user who ran the reference's scripts runs
+// these instead:
+//
+//  - `data_collector.py`        -> CollectorMain
+//  - `dataframe_to_kafka.py`    -> ReplayMain (same flag surface)
+//  - `spark_streaming_kafka.py` -> StreamMain
+//
+// Where each reference script built its own SparkSession, these run on
+// `graft.Session.run`: the shared session config, or the caller's live
+// session as it is. All logic lives in the library objects they call.
 
 /** `data_collector.py` (SURVEY §3.1): merge per-room sensor trees,
   * minute-floor group-average, write one CSV.
@@ -52,7 +31,7 @@ object Mains {
 object CollectorMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: CollectorMain <sensorRoot> <outCsvDir> [--per-dir]")
-    Mains.withSession("graft-collector") { spark =>
+    Session.run("graft-collector") { spark =>
       val merged =
         if (args.contains("--per-dir")) Collector.mergeRoomsPerDir(spark, args(0))
         else Collector.mergeRoomsGlob(spark, args(0))
@@ -97,7 +76,7 @@ object ReplayMain {
       keyCol = a.get("-k"),
       excluded = a.get("-exc").map(_.split(",").toSeq).getOrElse(Nil),
       wireFormat = a.getOrElse("-wf", "dsv"))
-    Mains.withSession("graft-replay") { spark =>
+    Session.run("graft-replay") { spark =>
       (a.get("-x"), a.get("-kw")) match {
         case (Some(root), _) => Replay.run(spark, cfg, new FileExchange(root))
         // -kw host:port: graft's own wire-protocol producer — real
@@ -137,7 +116,7 @@ object StreamMain {
     val format = if (args.length > 3) args(3) else "json"
     val ddl = if (args.length > 4) args(4) else EventsDdl
     val schema = org.apache.spark.sql.types.StructType.fromDDL(ddl)
-    Mains.withSession("graft-stream") { spark =>
+    Session.run("graft-stream") { spark =>
       // an http(s) store root selects the Elasticsearch _bulk wire path
       // (the reference consumer's actual sink, spark_streaming_kafka
       // .py:37-44) with external versioning on the event time; any
@@ -215,7 +194,7 @@ object CurateMain {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: CurateMain <sfDir> <outDir>")
     val (inDir, outDir) = (args(0), args(1))
-    Mains.withSession("graft-curate") { spark =>
+    Session.run("graft-curate") { spark =>
       val nIn = graft.core.Tables.documents(spark, inDir).count()
       val kept = graft.catalog.Curation.corpusDedup.build(spark, inDir)
       kept.write.mode("overwrite").parquet(s"$outDir/kept")
@@ -246,7 +225,7 @@ object CurateMain {
 object ProfileMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ProfileMain <parquetPath> [outDir]")
-    Mains.withSession("graft-profile") { spark =>
+    Session.run("graft-profile") { spark =>
       val prof = graft.ops.Profiler.profile(spark.read.parquet(args(0)))
       val rows = prof.collect() // one row per COLUMN — driver-safe
       rows.foreach { r =>

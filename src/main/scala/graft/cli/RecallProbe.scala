@@ -81,37 +81,26 @@ object RecallProbe {
     val dirs = if (args.nonEmpty) args.toSeq
       else Seq("/root/testdata/sf0.1", "/root/repo/target/sf1.0",
         "/root/repo/target/sf10")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-recall-probe")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def measure(d: String, regime: String): Unit = {
-      val exact = topSets(graft.SparkEntry.queries("q_ann_topk_refine")(spark, d), 3)
-      require(exact.nonEmpty, s"no exact top-k rows for $d")
-      val recalls = Variants.map { name =>
-        val approx = topSets(graft.SparkEntry.queries(name)(spark, d), 3)
-        val r = exact.map { case (q, ex) =>
-          approx.getOrElse(q, Set.empty).intersect(ex).size / 3.0
-        }.sum / exact.size
-        name -> r
+    graft.Session.run("graft-recall-probe") { spark =>
+      def measure(d: String, regime: String): Unit = {
+        val exact = topSets(graft.SparkEntry.queries("q_ann_topk_refine")(spark, d), 3)
+        require(exact.nonEmpty, s"no exact top-k rows for $d")
+        val recalls = Variants.map { name =>
+          val approx = topSets(graft.SparkEntry.queries(name)(spark, d), 3)
+          val r = exact.map { case (q, ex) =>
+            approx.getOrElse(q, Set.empty).intersect(ex).size / 3.0
+          }.sum / exact.size
+          name -> r
+        }
+        val qs = recalls.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")
+        println(s"""{"dir":"$d","regime":"$regime","n_queries":${exact.size},"recall@3":{$qs}}""")
+        spark.catalog.clearCache()
       }
-      val qs = recalls.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")
-      println(s"""{"dir":"$d","regime":"$regime","n_queries":${exact.size},"recall@3":{$qs}}""")
-      spark.catalog.clearCache()
+      dirs.foreach(measure(_, "uniform"))
+      // clustered corpora at the same three cardinalities as the sf dirs
+      Seq(2000, 20000, 200000).foreach { n =>
+        measure(clusteredDir(spark, n), "clustered")
+      }
     }
-    dirs.foreach(measure(_, "uniform"))
-    // clustered corpora at the same three cardinalities as the sf dirs
-    Seq(2000, 20000, 200000).foreach { n =>
-      measure(clusteredDir(spark, n), "clustered")
-    }
-    graft.core.Spill.cleanup()
-    spark.stop()
   }
 }

@@ -59,17 +59,7 @@ object ScaleGen {
     val src = args(0)
     val dest = args(1)
     val factor = if (args.length > 2) args(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scalegen")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    generate(spark, src, dest, factor)
-    spark.stop()
+    graft.Session.run("graft-scalegen")(generate(_, src, dest, factor))
   }
 
   /** Clone `df` once per replica with key columns shifted by their

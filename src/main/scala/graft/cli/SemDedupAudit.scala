@@ -42,17 +42,10 @@ object SemDedupAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-semdedup-audit")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.Session.run("graft-semdedup-audit")(audit(_, sfDir, outDir))
+  }
+
+  private def audit(spark: SparkSession, sfDir: String, outDir: String): Unit = {
     Vectors.register(spark)
 
     // the catalog query's exact input shape (SimilaritySearch.normed)
@@ -89,8 +82,5 @@ object SemDedupAudit {
     // the catalog query itself, as the driver's Verify would run it
     graft.SparkEntry.queries("q_semantic_dedup")(spark, sfDir)
       .write.mode("overwrite").parquet(s"$outDir/result.parquet")
-
-    graft.core.Spill.cleanup()
-    spark.stop()
   }
 }

@@ -163,7 +163,7 @@ final class QueryServer(spark: SparkSession, sfDir: String, bindPort: Int = 0) {
 object ServeMain {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: ServeMain <sfDir> [port]")
-    Mains.withSession("graft-serve") { spark =>
+    graft.Session.run("graft-serve") { spark =>
       val srv = new QueryServer(spark, args(0),
         if (args.length > 1) args(1).toInt else 0)
       srv.start()

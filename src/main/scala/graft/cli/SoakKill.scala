@@ -41,19 +41,15 @@ object SoakKill {
       finally s.close()
     }
 
-  def main(args: Array[String]): Unit = {
+  // driver-side session: feeder writes + output polling only
+  def main(args: Array[String]): Unit =
+    graft.Session.run("soak-kill-driver", cpus = 8)(soak)
+
+  private def soak(spark: SparkSession): Unit = {
     val base = Files.createTempDirectory(Paths.get("target"), "soakkill_")
     val src = base.resolve("src"); Files.createDirectories(src)
     val chk = base.resolve("chk")
     val out = base.resolve("out")
-
-    // driver-side session: feeder writes + output polling only
-    val spark = SparkSession.builder().master("local[8]")
-      .appName("soak-kill-driver")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 
     // feeder: ~40k fresh keys + ~4.5k re-emissions per tick; the
@@ -158,7 +154,6 @@ object SoakKill {
       java.nio.file.StandardOpenOption.CREATE,
       java.nio.file.StandardOpenOption.APPEND)
     println(s"[soakkill] $report")
-    spark.stop()
     if (!exact) sys.error(
       s"NOT row-exact after kill-resume: rows=$cnt distinct=$dst ledger=$ledger")
   }
@@ -171,28 +166,24 @@ object SoakKill {
 object SoakKillChild {
   def main(args: Array[String]): Unit = {
     val Array(src, chk, out) = args
-    val spark = SparkSession.builder().master("local[16]")
-      .appName("soak-kill-child")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.sql.streaming.stateStore.providerClass",
+    graft.Session.run("soak-kill-child", cpus = 16) { spark =>
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val q = spark.readStream
-      .schema("key BIGINT")
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "8")
-      .parquet(src)
-      .dropDuplicates("key")
-      .writeStream
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", chk)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger
-        .ProcessingTime("500 milliseconds"))
-      .start()
-    q.awaitTermination()
+      val q = spark.readStream
+        .schema("key BIGINT")
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "8")
+        .parquet(src)
+        .dropDuplicates("key")
+        .writeStream
+        .format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", chk)
+        .outputMode("append")
+        .trigger(org.apache.spark.sql.streaming.Trigger
+          .ProcessingTime("500 milliseconds"))
+        .start()
+      q.awaitTermination()
+    }
   }
 }

@@ -75,8 +75,9 @@ object Spill {
 
   /** Recursively delete every spill written by this JVM (Hadoop FS API,
     * so conf-rooted shared-FS spills are deleted too). Safe to call
-    * repeatedly; the bench/verify mains call it after their parity dump
-    * and a shutdown hook covers everything else.
+    * repeatedly; [[graft.Session.run]] calls it before stopping a
+    * session it built (never on a borrowed one), and a shutdown hook
+    * covers everything else.
     */
   def cleanup(): Unit = {
     val conf = new org.apache.hadoop.conf.Configuration()

@@ -49,11 +49,18 @@ object Tables {
     * TIMESTAMP(MICROS) without UTC adjustment (which Spark reads as
     * TIMESTAMP_NTZ; cast — session tz is UTC so the instant is
     * unchanged). Downstream code and oracles see one stable type.
-    * Runtime conf, safe to set per-call even on a driver-owned session.
+    * The nanos-as-long runtime conf is set only when the file needs it,
+    * so reading a MICROS generation leaves the caller's conf as it was.
     */
   private def eventsRaw(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = load(spark, dir, "events")
+    val df =
+      try load(spark, dir, "events")
+      catch {
+        case e: org.apache.spark.sql.AnalysisException
+            if e.getCondition == "PARQUET_TYPE_ILLEGAL" =>
+          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+          load(spark, dir, "events")
+      }
     import org.apache.spark.sql.types.{LongType, TimestampType}
     df.schema("ts").dataType match {
       case LongType => // nanos-as-long generation
