@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DecimalType, StructType}
 import graft.core.QueryDef
 import graft.kafka.{KafkaStubBroker, KafkaStubCluster, SchemaRegistryStub}
 import graft.streaming.{DeltaUpsertStore, EsHttpStore, EsStub, Ingest,
-  RoutedAppendStore, Service, UpsertParquetStore}
+  RoutedAppendStore, Service}
 
 /** End-to-end Structured Streaming queries: each runs a REAL streaming
   * query (file-stream source standing in for the Kafka topic →
@@ -130,10 +130,12 @@ object Streaming {
   }
 
   // K3 + K5: upsert-by-key sink semantics (`es.mapping.id`, last write
-  // per key wins) — the stream drains into the keyed store, and the
-  // final store contents must equal the batch last-write-wins answer.
+  // per key wins) — the stream drains into the keyed store with no
+  // maintenance (one delta segment per micro-batch, merged on read),
+  // and the final store contents must equal the batch last-write-wins
+  // answer.
   val sinkUpsert: QueryDef = QueryDef.sql("q_sink_upsert")(LatestPerUserOracle) { (s, dir) =>
-    val store = new UpsertParquetStore(uniqueDir("upsert_"), "user_id", Seq("ts", "event_id"))
+    val store = new DeltaUpsertStore(uniqueDir("upsert_"), "user_id", Seq("ts", "event_id"))
     require(store.healthCheck(), "sink preflight failed")  // K5
     Ingest.drainBatches(Ingest.eventsStream(s, dir))(store.upsert)
     lastPerUser(store.read(s))
@@ -176,12 +178,10 @@ object Streaming {
     lastPerUser(store.read(s))
   }
 
-  // K3 at scale: the log-structured upsert store — per-batch delta
-  // segments + interleaved compaction — must converge to the same
-  // last-write-wins state as the read-merge-overwrite store, so it
-  // shares q_sink_upsert's oracle semantics. Compaction runs both
-  // mid-stream (every odd batch) and at the end, proving readers see an
-  // equivalent merged view at any compaction boundary.
+  // K3 maintenance: q_sink_upsert's drain with compaction interleaved —
+  // mid-stream (every odd batch) and at the end — must converge to the
+  // same last-write-wins state, so it shares q_sink_upsert's oracle.
+  // Readers see an equivalent merged view at any compaction boundary.
   val sinkUpsertDelta: QueryDef = QueryDef.sql("q_sink_upsert_delta")(
     LatestPerUserOracle) { (s, dir) =>
     val store = new DeltaUpsertStore(uniqueDir("upsert_delta_"), "user_id",

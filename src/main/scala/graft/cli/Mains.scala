@@ -7,7 +7,7 @@ import graft.Session
 import graft.batch.Collector
 import graft.replay.Replay
 import graft.replay.Replay.{FileExchange, ReplayConfig}
-import graft.streaming.{Ingest, UpsertParquetStore}
+import graft.streaming.{DeltaUpsertStore, Ingest}
 
 // The reference's three executable entry points (SURVEY.md §3), as thin
 // CLIs over the library; a user who ran the reference's scripts runs
@@ -94,7 +94,8 @@ object ReplayMain {
 }
 
 /** `spark_streaming_kafka.py` (SURVEY §3.3): streaming decode of the
-  * wire into the K3 upsert store (last write per key wins), with the
+  * wire into the K3 upsert store (last write per key wins; the parquet
+  * store is compacted to one base segment after the drain), with the
   * K5 health preflight. SCHEMA-ON-READ like the reference consumer: the
   * CLI declares the wire schema (DDL) and format instead of assuming
   * one — a JSON consumer pointed at a DSV wire would PERMISSIVE-null
@@ -121,11 +122,11 @@ object StreamMain {
       // (the reference consumer's actual sink, spark_streaming_kafka
       // .py:37-44) with external versioning on the event time; any
       // other root is the local parquet upsert store
-      val store: Either[graft.streaming.EsHttpStore, UpsertParquetStore] =
+      val store: Either[graft.streaming.EsHttpStore, DeltaUpsertStore] =
         if (args(1).startsWith("http://") || args(1).startsWith("https://"))
           Left(new graft.streaming.EsHttpStore(args(1), "events", keyCol,
             Seq("ts", "event_id"), "__ver", schema))
-        else Right(new UpsertParquetStore(args(1), keyCol, Seq("ts", "event_id")))
+        else Right(new DeltaUpsertStore(args(1), keyCol, Seq("ts", "event_id")))
       require(store.fold(_.healthCheck(), _.healthCheck()),
         "sink preflight failed")  // K5
       val wire = spark.readStream
@@ -155,7 +156,7 @@ object StreamMain {
             // version — monotone per key, so replays and concurrent
             // partitions converge. Micro-grain ts leaves no clean
             // 64-bit headroom to pack the (ts, event_id) tie-break
-            // the parquet twin orders by, so the ES path REQUIRES
+            // the parquet store orders by, so the ES path REQUIRES
             // tie-free (key, ts) feeds — enforced here per batch
             // rather than silently converging first-arrival-wins
             es => {
@@ -175,6 +176,8 @@ object StreamMain {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
+      // fold the drain's per-batch delta segments into one base segment
+      store.foreach(_.compact(spark))
     }
   }
 }

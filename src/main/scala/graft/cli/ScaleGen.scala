@@ -1,6 +1,7 @@
 package graft.cli
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Scale-factor amplifier for the driver's synthetic testdata: reads a
@@ -96,11 +97,13 @@ object ScaleGen {
       // writer; the sort restores a deterministic row order the
       // shuffle destroyed — over ALL columns, since no single column
       // is unique in every table (l_orderkey repeats per line, so a
-      // first-column sort would leave ties shuffle-ordered and the
-      // output non-byte-reproducible). `parts` sizes the upstream
-      // compute stage.
-      df.repartition(parts).localCheckpoint()
-        .repartition(1).sortWithinPartitions(df.columns.map(col): _*)
+      // first-column sort would leave ties shuffle-ordered). Rows, row
+      // order, schema and metadata are then reproducible across runs;
+      // the bytes only within one JVM, because parquet-mr writes each
+      // column chunk's `encodings` list in hash-set order. `parts`
+      // sizes the upstream compute stage.
+      val staged = df.repartition(parts).localCheckpoint()
+      staged.repartition(1).sortWithinPartitions(df.columns.map(col): _*)
         .write.mode("overwrite")
         .option("parquet.block.size", (8 * 1024 * 1024).toString)
         .parquet(tmp)
@@ -113,6 +116,11 @@ object ScaleGen {
       } else if (target.exists) target.delete()
       java.nio.file.Files.move(part.toPath, target.toPath)
       dir.listFiles().foreach(_.delete()); dir.delete()
+      // localCheckpoint persisted the staged rows; release them
+      staged.queryExecution.logical.foreach {
+        case r: LogicalRDD => r.rdd.unpersist()
+        case _ =>
+      }
       println(s"[scalegen] $t -> $dest/$t.parquet")
     }
 

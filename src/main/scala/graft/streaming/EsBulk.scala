@@ -12,7 +12,6 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -286,10 +285,8 @@ final class EsHttpStore(baseUrl: String, index: String, idCol: String,
 
   /** Upsert-by-id with external versioning (K3). */
   def upsert(batch: DataFrame, batchId: Long): Unit = {
-    val w = Window.partitionBy(idCol).orderBy(orderCols.map(col(_).desc): _*)
     val docCols = docSchema.fieldNames.map(col).toSeq
-    val reduced = batch
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    val reduced = IndexStore.latestPerKey(batch, idCol, orderCols)
       .select(col(idCol).cast("string").as("_id"),
         col(versionCol).cast("long").as("_v"),
         to_json(struct(docCols: _*)).as("_src"))
@@ -314,9 +311,7 @@ final class EsHttpStore(baseUrl: String, index: String, idCol: String,
     * as 404s, both expected outcomes.
     */
   def delete(keys: DataFrame, batchId: Long): Unit = {
-    val w = Window.partitionBy(idCol).orderBy(orderCols.map(col(_).desc): _*)
-    val reduced = keys
-      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    val reduced = IndexStore.latestPerKey(keys, idCol, orderCols)
       .select(col(idCol).cast("string").as("_id"),
         col(versionCol).cast("long").as("_v"))
     val (url, idx) = (baseUrl, index)

@@ -35,10 +35,12 @@ object Ingest {
 
   /** Streaming source over the events parquet (stands in for the Kafka
     * topic). `maxFilesPerTrigger` is left default — at scale this is
-    * the knob replacing `maxOffsetsPerTrigger`.
+    * the knob replacing `maxOffsetsPerTrigger`. Reads only the MICROS
+    * generations: a TIMESTAMP(NANOS) `ts` fails the declared
+    * TIMESTAMP_NTZ with or without `spark.sql.legacy.parquet.nanosAsLong`,
+    * so this source leaves that conf alone.
     */
   def eventsStream(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the file stream source wants a directory: stream the sf dir,
     // glob-filtered to the events table's file(s)
     // glob matches events.parquet AND events_<k>.parquet so a test

@@ -17,88 +17,42 @@ import org.apache.spark.sql.functions._
   *  - K5 (`kafka_to_es.py:7-14`): health preflight before starting the
   *    stream.
   *
-  * Scale notes: the upsert store does read-merge-overwrite per
-  * micro-batch, which is correct but O(store) per batch — the
-  * production path is an upsert-capable table format (Delta/Iceberg
-  * MERGE) or the ES bulk API with doc ids; the micro-batch reduction
-  * (latest-per-key BEFORE touching the store) is the part that carries
-  * to 100 TB, since it shrinks each batch to ≤ |keys| rows map-side.
+  * Scale notes: the K3 store appends one delta segment per micro-batch
+  * and merges segments on read ([[DeltaUpsertStore]]) — the shape of
+  * an upsert-capable table format (Delta/Iceberg MERGE); the ES bulk
+  * API with doc ids is the production path. The micro-batch reduction
+  * (latest-per-key BEFORE touching the store, [[IndexStore.latestPerKey]])
+  * is the part that carries to 100 TB, since it shrinks each batch to
+  * ≤ |keys| rows map-side.
   */
 trait IndexStore {
   def healthCheck(): Boolean
   def read(spark: SparkSession): DataFrame
 }
 
-/** K3: last-write-wins keyed store. `orderCol` breaks ordering within a
-  * batch (event time, then a unique tiebreaker).
-  */
-final class UpsertParquetStore(root: String, keyCol: String, orderCols: Seq[String])
-    extends IndexStore {
-
-  private val dir = new java.io.File(root)
-
-  override def healthCheck(): Boolean = { dir.mkdirs(); dir.canWrite }
-
-  private def latestPerKey(df: DataFrame): DataFrame = {
+object IndexStore {
+  /** Last write per key: the row of each `keyCol` value that is
+    * greatest in `orderCols` (compared in order, all descending). The
+    * one last-write-wins reduction of the K3 stores, for a micro-batch
+    * and for a delta store's merged segments alike.
+    */
+  def latestPerKey(df: DataFrame, keyCol: String, orderCols: Seq[String]): DataFrame = {
     val w = Window.partitionBy(keyCol).orderBy(orderCols.map(col(_).desc): _*)
     df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
   }
-
-  /** Micro-batch upsert: reduce the batch to latest-per-key, merge with
-    * the store, keep the winner per key, overwrite atomically (write to
-    * a versioned subdir, then flip a pointer file).
-    */
-  def upsert(batch: DataFrame, batchId: Long): Unit = synchronized {
-    val spark = batch.sparkSession
-    val reduced = latestPerKey(batch)
-    val current = currentVersion()
-    val merged = current match {
-      case Some(v) =>
-        val existing = spark.read.parquet(s"$root/v$v")
-        latestPerKey(existing.unionByName(reduced))
-      case None => reduced
-    }
-    val next = current.getOrElse(-1L) + 1
-    merged.write.mode(SaveMode.Overwrite).parquet(s"$root/v$next")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$root/CURRENT"), next.toString)
-    // GC superseded versions (keep the immediate predecessor so an
-    // in-flight reader of the old CURRENT finishes cleanly)
-    Option(dir.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("v"))
-      .filter(_.getName.drop(1).toLongOption.exists(_ < next - 1))
-      .foreach(deleteRecursively)
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
-    f.delete()
-  }
-
-  private def currentVersion(): Option[Long] = {
-    val p = java.nio.file.Paths.get(s"$root/CURRENT")
-    if (java.nio.file.Files.exists(p))
-      Some(java.nio.file.Files.readString(p).trim.toLong)
-    else None
-  }
-
-  override def read(spark: SparkSession): DataFrame =
-    currentVersion() match {
-      case Some(v) => spark.read.parquet(s"$root/v$v")
-      case None    => spark.emptyDataFrame
-    }
 }
 
-/** K3 at scale: log-structured upsert store. Each micro-batch appends
-  * ONE delta segment holding only the batch's latest-per-key rows —
-  * O(batch) write cost, versus [[UpsertParquetStore]]'s O(store)
-  * read-merge-overwrite per batch. Readers merge base + deltas with
-  * "global orderCols maximum per key, newest segment breaking ties" (a
-  * window over the unioned segments — identical last-write-wins state
-  * to [[UpsertParquetStore]]); [[compact]] folds segments into a base so read
-  * amplification stays bounded — the same base/delta/compaction shape
-  * Delta Lake and Iceberg MERGE pipelines use, minus the format
-  * machinery this zero-egress build can't carry.
+/** K3: log-structured last-write-wins keyed store. Each micro-batch
+  * appends ONE delta segment holding only the batch's latest-per-key
+  * rows — O(batch) write cost, where a read-merge-overwrite store pays
+  * O(store) per batch. Readers merge base + deltas with "global
+  * orderCols maximum per key, newest segment breaking ties" (one
+  * window over all segments, read through a single parquet scan —
+  * the state a read-merge-overwrite store would hold); [[compact]]
+  * folds segments into a base so read amplification stays bounded —
+  * the same base/delta/compaction shape Delta Lake and Iceberg MERGE
+  * pipelines use, minus the format machinery this zero-egress build
+  * can't carry.
   *
   * Commit protocol: segments land in their own directories first, then
   * MANIFEST (the single source of truth, listing active segments in
@@ -118,19 +72,6 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
   private val dir = new java.io.File(root)
 
   override def healthCheck(): Boolean = { dir.mkdirs(); dir.canWrite }
-
-  private def latestPerKey(df: DataFrame, segOrdered: Boolean): DataFrame = {
-    // orderCols FIRST, segment only as tiebreaker: the winner per key is
-    // the global orderCols maximum across all segments — the same merge
-    // [[UpsertParquetStore]] computes — not "newest segment wins", which
-    // would let a late-arriving batch holding an older event time
-    // clobber the newer stored row
-    val ord = orderCols.map(col(_).desc) ++
-      (if (segOrdered) Seq(col("__seg").desc) else Nil)
-    val w = Window.partitionBy(keyCol).orderBy(ord: _*)
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-      .drop("__rn", "__seg")
-  }
 
   /** Current segment list. Source of truth is the IMMUTABLE version
     * log (`MANIFEST.v<n>`, highest n), not the `MANIFEST` pointer file:
@@ -334,9 +275,7 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
   def upsert(batch: DataFrame, batchId: Long): Unit = synchronized {
     val (segs, v) = currentState()
     val seg = nextSegment("d")
-    // drop("__seg") inside latestPerKey is a no-op here (drop ignores
-    // missing columns) — no synthetic column needed on the batch path
-    writeSegmentWithStats(latestPerKey(batch, segOrdered = false), seg)
+    writeSegmentWithStats(IndexStore.latestPerKey(batch, keyCol, orderCols), seg)
     commitAppend(Seq(seg), segs, v)
   }
 
@@ -359,8 +298,8 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
     val (segs, v) = currentState()
     val seg = nextSegment("t")
     writeSegmentWithStats(
-      latestPerKey(keys.select((keyCol +: orderCols).map(col): _*),
-        segOrdered = false).withColumn("__tomb", lit(true)), seg)
+      IndexStore.latestPerKey(keys.select((keyCol +: orderCols).map(col): _*),
+        keyCol, orderCols).withColumn("__tomb", lit(true)), seg)
     commitAppend(Seq(seg), segs, v)
   }
 
@@ -515,10 +454,10 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
     * last-write-wins merge because a key's winner and every contender
     * live only in segments whose range covers it (tombstone segments
     * included — they carry the key column and their own sidecar). The
-    * residual `IN` filter pushes through the merge window to the
-    * pruned parquet scans (partition-column predicates cross Window
-    * operators), so row-group stats prune again WITHIN each kept
-    * segment.
+    * residual `IN` filter pushes through the merge window to the one
+    * parquet scan of the kept segments (partition-column predicates
+    * cross Window operators), so row-group stats prune again WITHIN
+    * each kept segment.
     */
   def lookup(spark: SparkSession, keys: Seq[Any]): DataFrame = {
     val hit = candidateSegments(keys)
@@ -570,7 +509,7 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
       whenMatchedUpdate: Option[org.apache.spark.sql.Column] = None,
       whenNotMatchedInsert: Option[org.apache.spark.sql.Column] = None): Unit = synchronized {
     val spark = source.sparkSession
-    val src = latestPerKey(source, segOrdered = false)
+    val src = IndexStore.latestPerKey(source, keyCol, orderCols)
     val cur = read(spark)
     val (upserts, deletes) =
       if (cur.columns.isEmpty) {
@@ -646,9 +585,7 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
       post0.withColumn("op", lit("")).limit(0)
         .select(col(keyCol) +: col("op") +: dataCols.map(col): _*)
     else {
-        val candidates = newSegs
-          .map(seg => spark.read.parquet(s"$root/$seg").select(col(keyCol)))
-          .reduce(_ union _).distinct()
+        val candidates = scan(spark, newSegs).select(col(keyCol)).distinct()
         val pre = pre0.join(candidates, Seq(keyCol), "left_semi")
           .select(col(keyCol).as("__pkey"),
             struct(orderCols.map(col): _*).as("__pord"))
@@ -669,28 +606,45 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
       }
   }
 
-  private def mergedView(spark: SparkSession, segs: Seq[String]): DataFrame = {
+  /** `segs` as ONE parquet scan — one file listing, one schema merge,
+    * one relation however many segments there are — with `__seg`, the
+    * segment's 1-based position in `segs`, found from the parent
+    * directory of each row's file. `mergeSchema` null-fills columns a
+    * segment lacks (tombstone segments carry only key + orderCols +
+    * `__tomb`; data segments lack `__tomb`; later batches may add
+    * columns) and orders columns by first appearance along `segs`.
+    */
+  private def scan(spark: SparkSession, segs: Seq[String]): DataFrame =
+    spark.read.option("mergeSchema", "true").parquet(segs.map(seg => s"$root/$seg"): _*)
+      .withColumn("__seg", array_position(typedLit(segs),
+        regexp_extract(col("_metadata.file_path"), "([^/]+)/[^/]+$", 1)))
+
+  /** The winning row per key across `segs`, winning tombstones kept as
+    * rows. orderCols FIRST, segment only as tiebreaker: the winner is
+    * the global orderCols maximum across all segments, not "newest
+    * segment wins", which would let a late-arriving batch holding an
+    * older event time clobber the newer stored row.
+    */
+  private def winners(spark: SparkSession, segs: Seq[String]): DataFrame =
+    IndexStore.latestPerKey(scan(spark, segs), keyCol, orderCols :+ "__seg")
+      .drop("__seg")
+
+  /** A key whose orderCols winner is a tombstone is filtered from the
+    * view (and thus from the next compaction's base — that is the
+    * physical erasure).
+    */
+  private def mergedView(spark: SparkSession, segs: Seq[String]): DataFrame =
     if (segs.isEmpty) spark.emptyDataFrame
     else {
-      val tagged = segs.zipWithIndex.map { case (seg, i) =>
-        spark.read.parquet(s"$root/$seg").withColumn("__seg", lit(i.toLong))
-      }
-      // allowMissingColumns: tombstone segments carry only key +
-      // orderCols + __tomb; data segments lack __tomb — both sides
-      // null-fill. A key whose orderCols winner is a tombstone is
-      // filtered from the view (and thus from the next compaction's
-      // base — that is the physical erasure).
-      val union = tagged.reduce(_.unionByName(_, allowMissingColumns = true))
-      val merged = latestPerKey(union, segOrdered = true)
+      val merged = winners(spark, segs)
       if (merged.columns.contains("__tomb"))
         merged.filter(!coalesce(col("__tomb"), lit(false))).drop("__tomb")
       else merged
     }
-  }
 
   /** Fold all segments into one base segment; superseded segments are
-    * GC'd on the NEXT compaction (in-flight-reader grace, same policy as
-    * [[UpsertParquetStore]]).
+    * GC'd on the NEXT compaction (in-flight-reader grace: a reader of
+    * the previous manifest finishes cleanly).
     */
   def compact(spark: SparkSession): Unit = synchronized {
     val (old, v) = currentState()
@@ -795,7 +749,7 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
     * bytes) per call instead of [[compact]]'s O(store bytes), so a
     * store taking a delta per micro-batch can fold its tail frequently
     * and cheap, and run the full fold rarely. Read cost drops the same
-    * way — the merge window unions 2 segments, not N.
+    * way — the merge reads 2 segments, not N.
     *
     * Semantics are EXACTLY [[compact]]'s view with one difference:
     * tombstones whose key may still exist in the head segment are
@@ -810,15 +764,11 @@ final class DeltaUpsertStore(root: String, keyCol: String, orderCols: Seq[String
     val current =
       if (old.size > 2) {
         val head = old.head
-        val tagged = old.tail.zipWithIndex.map { case (seg, i) =>
-          spark.read.parquet(s"$root/$seg").withColumn("__seg", lit(i.toLong))
-        }
-        val union = tagged.reduce(_.unionByName(_, allowMissingColumns = true))
         val seg = nextSegment("m")
-        // latestPerKey keeps a winning tombstone as a ROW (unlike the
-        // read view, which filters it) — it must keep hiding the head
+        // winners keeps a winning tombstone as a ROW (unlike the read
+        // view, which filters it) — it must keep hiding the head
         // segment's version of the key
-        writeSegmentWithStats(latestPerKey(union, segOrdered = true)
+        writeSegmentWithStats(winners(spark, old.tail)
           .repartitionByRange(col(keyCol))
           .sortWithinPartitions(keyCol), seg)
         commit(Seq(head, seg), v)

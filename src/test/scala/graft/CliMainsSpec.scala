@@ -54,7 +54,7 @@ class CliMainsSpec extends AnyFunSuite {
     graft.cli.StreamMain.main(Array(
       s"$jsonExchange/topic=events", store, "user_id", "json"))
     val events = graft.core.Tables.events(spark, "/root/testdata/sf0.001")
-    val stored = new graft.streaming.UpsertParquetStore(store, "user_id",
+    val stored = new graft.streaming.DeltaUpsertStore(store, "user_id",
       Seq("ts", "event_id")).read(spark)
     // last-write-wins: exactly one row per user, none of them null-keyed
     // (a producer/consumer wire-format mismatch PERMISSIVE-nulls rows)
@@ -144,11 +144,20 @@ class CliMainsSpec extends AnyFunSuite {
     assert(empty.toSeq == Seq((0L, 0L, true), (0L, 0L, true), (0L, 0L, true)))
   }
 
+  test("ScaleGen.generate leaves no persisted RDD behind on a live session") {
+    val pinned = spark.sparkContext.getPersistentRDDs.keySet
+    graft.cli.ScaleGen.generate(spark, "/root/testdata/sf0.001", tmp("scalegen_p_"), 1)
+    // each table's localCheckpoint is released once its file is written
+    assert(spark.sparkContext.getPersistentRDDs.keySet == pinned)
+  }
+
   test("ScaleGen output is byte-reproducible across runs") {
     // the single-file writer sorts on ALL columns before the one-task
     // write (no single column is unique in every table), so two
-    // amplifications of the same source must produce identical bytes —
-    // scale-proof runs at sf1.0/sf10 are re-derivable exactly
+    // amplifications of the same source in ONE JVM produce identical
+    // bytes. Across JVMs only rows, row order, schema and metadata
+    // match: parquet-mr writes each column chunk's `encodings` list in
+    // hash-set order, which changes from JVM to JVM.
     val (a, b) = (tmp("scalegen_a_"), tmp("scalegen_b_"))
     graft.cli.ScaleGen.generate(spark, "/root/testdata/sf0.001", a, 2)
     graft.cli.ScaleGen.generate(spark, "/root/testdata/sf0.001", b, 2)

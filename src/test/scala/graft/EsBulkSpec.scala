@@ -196,6 +196,13 @@ class EsBulkSpec extends AnyFunSuite {
       val out = store.read(spark).orderBy("k")
         .select("k", "v").as[(Long, String)].collect().toSeq
       assert(out == Seq((1L, "b"), (2L, "d"), (3L, "e")))
+      val parquet = new graft.streaming.DeltaUpsertStore(
+        java.nio.file.Files.createTempDirectory(
+          java.nio.file.Paths.get("target"), "es_parity_").toString, "k", Seq("ver"))
+      parquet.upsert(b0, 0)
+      parquet.upsert(b1, 1)
+      assert(parquet.read(spark).orderBy("k")
+        .select("k", "v").as[(Long, String)].collect().toSeq == out)
     }
   }
 

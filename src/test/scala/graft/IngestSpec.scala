@@ -36,6 +36,15 @@ class IngestSpec extends AnyFunSuite {
     assert(bad.head.isNullAt(bad.head.fieldIndex("event_type")))
   }
 
+  test("eventsStream leaves the caller's parquet nanos conf unset") {
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val s = spark.newSession()
+    assert(!s.conf.getAll.contains(key))
+    val events = Ingest.eventsStream(s, "/root/testdata/sf0.001")
+    assert(Ingest.runToMemory(events).count() > 0)
+    assert(!s.conf.getAll.contains(key))
+  }
+
   test("DSV wire: round-trip and corrupt-row nulls") {
     val good = "7|42|click|1.5|1704067200000000"
     val decoded = Ingest.decodeDsvWire(streamOf(good, "not|enough"), "|")

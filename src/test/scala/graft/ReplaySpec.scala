@@ -58,8 +58,8 @@ class ReplaySpec extends AnyFunSuite {
     val prev = spark.conf.getOption(key)
     val files = new FileExchange(
       Files.createTempDirectory(Paths.get("target"), "exch_conf_").toString)
-    // sets the key mid-publish, as Tables.eventsRaw or
-    // Ingest.eventsStream does on a session the replay shares
+    // sets the key mid-publish, as Tables.eventsRaw does on a
+    // session the replay shares
     val exchange = new Replay.Exchange {
       def publish(wire: DataFrame, cfg: ReplayConfig, afterWrite: Int => Unit): Unit = {
         spark.conf.set(key, "true")

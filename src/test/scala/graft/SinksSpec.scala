@@ -3,7 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.{DeltaUpsertStore, RoutedAppendStore, UpsertParquetStore}
+import graft.streaming.{DeltaUpsertStore, RoutedAppendStore}
 
 /** Sink-semantics fixtures (FIXTURES.md §4): K3 upsert-by-id keeps only
   * the last write per key across batches; K4 routed append keeps
@@ -15,17 +15,6 @@ class SinksSpec extends AnyFunSuite {
 
   private def tmp(p: String) =
     Files.createTempDirectory(Paths.get("target"), p).toString
-
-  test("K3: last write per key wins, across micro-batches") {
-    val store = new UpsertParquetStore(tmp("upsert_"), "room", Seq("ts"))
-    assert(store.healthCheck())
-    store.upsert(Seq(("413", 1L, "a"), ("413", 2L, "b"), ("644", 1L, "c"))
-      .toDF("room", "ts", "v"), 0)
-    store.upsert(Seq(("413", 0L, "stale"), ("644", 5L, "d")).toDF("room", "ts", "v"), 1)
-    val out = store.read(spark).orderBy("room")
-      .collect().map(r => (r.getString(0), r.getString(2)))
-    assert(out.toSeq == Seq(("413", "b"), ("644", "d")))
-  }
 
   test("K4: append with dynamic index routing keeps duplicates") {
     val store = new RoutedAppendStore(tmp("route_"))
@@ -52,8 +41,7 @@ class SinksSpec extends AnyFunSuite {
     def state() = store.read(spark).orderBy("room")
       .collect().map(r => (r.getString(0), r.getString(2))).toSeq
     // a LATER segment holding an OLDER event time must NOT clobber the
-    // stored newer row: winner = global orderCols max across segments,
-    // exactly the overwrite store's merge
+    // stored newer row: winner = global orderCols max across segments
     assert(state() == Seq(("413", "b"), ("644", "d")))
     store.compact(spark)
     assert(state() == Seq(("413", "b"), ("644", "d")))
@@ -64,6 +52,37 @@ class SinksSpec extends AnyFunSuite {
     // just-written base remain active
     store.compact(spark)
     assert(state() == Seq(("413", "b"), ("644", "d"), ("999", "z")))
+  }
+
+  test("K3 delta store: a read of 30 segments is ONE parquet scan with the last-write-wins state") {
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    val store = new DeltaUpsertStore(tmp("delta_scan_"), "room", Seq("ts"))
+    // 28 data segments: round r rewrites k0 and k1 and, from round 2,
+    // writes room k$r; k1's round-27 row is older than its stored
+    // round-26 row and loses
+    (0 until 28).foreach { r =>
+      val k1ts = if (r == 27) 0L else r.toLong
+      val own = if (r >= 2) Seq((s"k$r", r.toLong, s"v$r")) else Nil
+      store.upsert((own ++ Seq(("k0", r.toLong, s"k0@$r"), ("k1", k1ts, s"k1@$r")))
+        .toDF("room", "ts", "v"), r)
+    }
+    // one tombstone segment: k5 deleted as of ts 100
+    store.delete(Seq(("k5", 100L)).toDF("room", "ts"), 28)
+    // one segment with an extra column: k2 rewritten with a tag
+    store.upsert(Seq(("k2", 200L, "k2@tag", "t")).toDF("room", "ts", "v", "tag"), 29)
+    assert(store.versions().size == 30)
+    val read = store.read(spark)
+    val leaves = read.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size == 1 && leaves.forall(_.isInstanceOf[LogicalRelation]),
+      s"${leaves.size} plan leaves: ${leaves.map(_.nodeName).mkString(", ")}")
+    assert(read.columns.toSeq == Seq("room", "ts", "v", "tag"))
+    val expected = (Seq(("k0", 27L, "k0@27", null), ("k1", 26L, "k1@26", null),
+      ("k2", 200L, "k2@tag", "t")) ++
+      (3 until 28).filterNot(_ == 5).map(r => (s"k$r", r.toLong, s"v$r", null)))
+      .sortBy(_._1)
+    val rows = read.orderBy("room").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getString(2), r.getString(3))).toSeq
+    assert(rows == expected)
   }
 
   test("K3 delta store: GC spares in-flight (never-committed) segment directories") {

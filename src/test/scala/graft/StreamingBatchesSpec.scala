@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.streaming.UpsertParquetStore
+import graft.streaming.DeltaUpsertStore
 
 /** Multi-micro-batch streaming semantics: consumer-side pacing via
   * maxFilesPerTrigger (the file-source analog of maxOffsetsPerTrigger,
@@ -37,7 +37,7 @@ class StreamingBatchesSpec extends AnyFunSuite {
   test("paced multi-batch upsert: last write per key wins across batches") {
     val src = tmp("mb_src_")
     writeBatches(src)
-    val store = new UpsertParquetStore(tmp("mb_store_"), "key", Seq("ts"))
+    val store = new DeltaUpsertStore(tmp("mb_store_"), "key", Seq("ts"))
     assert(store.healthCheck())
     var batches = 0
     val q = stream(src).writeStream
@@ -89,7 +89,7 @@ class StreamingBatchesSpec extends AnyFunSuite {
     val src = tmp("rs_src_")
     writeBatches(src)
     val chk = tmp("rs_chk_")
-    val store = new UpsertParquetStore(tmp("rs_store_"), "key", Seq("ts"))
+    val store = new DeltaUpsertStore(tmp("rs_store_"), "key", Seq("ts"))
     def runOnce(): Int = {
       var batches = 0
       val q = stream(src).writeStream
