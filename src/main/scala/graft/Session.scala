@@ -49,15 +49,17 @@ object Session {
     * queries, outside any timed region. The round-10 full bench showed
     * two queries 3.8x slower in-session than the same binary isolated
     * on the same boot (BENCH_AB_r11.json: q_approx_quantiles_bound
-    * 2.27 s in the 260-query session against 0.60 s alone). Each query
-    * unpersists its own caches, but a failed query can strand its
-    * persist, and 260 queries of heap residue turn one query's GC debt
-    * into its successor's wall clock. `clearCache` drops only
-    * CacheManager (`Dataset.persist`) entries; RDD-level persists (a
-    * `localCheckpoint` inside `KMeans.fit`, GlobalIndex's sorted-corpus
-    * RDDs) live in a different registry, so those are unpersisted too.
-    * Sweeping charges each query for its own work only, which is what a
-    * per-job cluster deployment would see.
+    * 2.27 s in the 260-query session against 0.60 s alone). A scoped
+    * build ([[core.Spill.scoped]]) releases its own pins, when it fails
+    * too; what the sweep still finds are the result-lifetime pins listed
+    * in [[core.Spill]] (the assignments `KMeans.fit` returns,
+    * GlobalIndex's sorted-corpus RDDs), which the consumer's write read,
+    * and 260 queries of such residue turn one query's GC debt into its
+    * successor's wall clock. `clearCache` drops only CacheManager
+    * (`Dataset.persist`) entries; RDD-level persists live in a
+    * different registry, so those are unpersisted too. Sweeping charges
+    * each query for its own work only, which is what a per-job cluster
+    * deployment would see.
     */
   def sweep(spark: SparkSession): Unit = {
     spark.catalog.clearCache()

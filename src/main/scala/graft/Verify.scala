@@ -14,11 +14,18 @@ object Verify {
       SparkEntry.queries
         .filter { case (name, _) => only.forall(_.contains(name)) }
         .foreach { case (name, fn) =>
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        var built: org.apache.spark.sql.DataFrame = null
+        try {
+          built = fn(spark, sfDir)
+          built.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
+        // what the query still pins after its write (the registry is
+        // weak, so the built frame is held until the count is taken)
+        val left = spark.sparkContext.getPersistentRDDs.size
+        if (left > 0) System.err.println(s"[verify] $name left $left pinned RDD(s)")
+        java.lang.ref.Reference.reachabilityFence(built)
         Session.sweep(spark)
       }
       // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -233,7 +233,7 @@ object Advanced {
   // q_trajectory_sim_blocked (same oracle, block-pair equi-join) is
   // the plan the bench measures. Counts are exact integers, so
   // dot/norms are bit-identical doubles; cosine rounds before the rank.
-  val trajectorySim: QueryDef = QueryDef.sql("q_trajectory_sim")(
+  val trajectorySim: QueryDef = QueryDef.pinned("q_trajectory_sim")(
     """WITH tr AS (
       |  SELECT user_id,
       |    event_type || ' ' || lead(event_type, 1) OVER w
@@ -250,18 +250,17 @@ object Advanced {
       |  ROUND(CAST(dot AS DOUBLE) /
       |    (sqrt(CAST(na.ss AS DOUBLE)) * sqrt(CAST(nb.ss AS DOUBLE))), 6) AS cosine
       |FROM dots JOIN nrm na ON na.user_id = ua JOIN nrm nb ON nb.user_id = ub
-      |ORDER BY cosine DESC, ua, ub LIMIT 20""".stripMargin) { (s, dir) =>
+      |ORDER BY cosine DESC, ua, ub LIMIT 20""".stripMargin) { (s, dir, pins) =>
     import org.apache.spark.sql.expressions.Window
     val wu = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-    val tri = Tables.events(s, dir)
+    val tri = pins.persist(Tables.events(s, dir)
       .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
       .withColumn("t2", lead(col("event_type"), 1).over(wu))
       .withColumn("t3", lead(col("event_type"), 2).over(wu))
       .filter(col("t3").isNotNull)
       .select(col("user_id"),
         concat_ws(" ", col("event_type"), col("t2"), col("t3")).as("g"))
-      .groupBy("user_id", "g").agg(count(lit(1)).as("c"))
-      .persist()
+      .groupBy("user_id", "g").agg(count(lit(1)).as("c")))
     val nrm = tri.groupBy("user_id").agg(sum(col("c") * col("c")).as("ss"))
     val dots = tri.as("a")
       .join(tri.as("b"),
@@ -269,7 +268,7 @@ object Advanced {
       .select(col("a.user_id").as("ua"), col("b.user_id").as("ub"),
         (col("a.c") * col("b.c")).as("p"))
       .groupBy("ua", "ub").agg(sum("p").as("dot"))
-    val res = dots
+    dots
       .join(nrm.select(col("user_id").as("ua"), col("ss").as("sa")), "ua")
       .join(nrm.select(col("user_id").as("ub"), col("ss").as("sb")), "ub")
       .select(col("ua"), col("ub"),
@@ -277,7 +276,6 @@ object Advanced {
           (sqrt(col("sa").cast("double")) * sqrt(col("sb").cast("double"))), 6)
           .as("cosine"))
       .orderBy(col("cosine").desc, col("ua"), col("ub")).limit(20)
-    graft.core.Spill.materialize(res) { tri.unpersist(blocking = false) }
   }
 
   // The 100 TB path for q_trajectory_sim — SAME oracle (two algorithms,
@@ -297,19 +295,19 @@ object Advanced {
   // requirement, the sub-quadratic fallback is the SimHash/LSH
   // signature machinery (q_embed_neardup_lsh) over these same vectors.
   val trajectorySimBlocked: QueryDef =
-    QueryDef.sql("q_trajectory_sim_blocked")(trajectorySim.oracle.get) { (s, dir) =>
+    QueryDef.pinned("q_trajectory_sim_blocked")(trajectorySim.oracle.get) { (s, dir, pins) =>
       import org.apache.spark.sql.expressions.Window
       graft.ops.Vectors.register(s)
       val wu = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val tc = Tables.events(s, dir)
+      // feeds vocab AND vectors — one event-grain pass
+      val tc = pins.persist(Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
         .withColumn("t2", lead(col("event_type"), 1).over(wu))
         .withColumn("t3", lead(col("event_type"), 2).over(wu))
         .filter(col("t3").isNotNull)
         .select(col("user_id"),
           concat_ws(" ", col("event_type"), col("t2"), col("t3")).as("g"))
-        .groupBy("user_id", "g").agg(count(lit(1)).as("c"))
-        .persist() // feeds vocab AND vectors — one event-grain pass
+        .groupBy("user_id", "g").agg(count(lit(1)).as("c")))
       // dense index over the bounded trigram vocabulary; the window is
       // over the tiny distinct-trigram relation, never event-grain data
       val vocab = tc.select("g").distinct()
@@ -340,7 +338,7 @@ object Advanced {
         .withColumn("g1", explode(sequence(lit(0), col("g"))))
         .select(col("g1"), col("g").as("g2"),
           col("user_id").as("idb"), col("v").as("vb"), col("ss").as("sb"))
-      val res = a.join(b, Seq("g1", "g2"))
+      a.join(b, Seq("g1", "g2"))
         .filter(col("g1") < col("g2") || col("ida") < col("idb"))
         .select(
           least(col("ida"), col("idb")).as("ua"),
@@ -353,7 +351,6 @@ object Advanced {
             (sqrt(col("sa").cast("double")) * sqrt(col("sb").cast("double"))), 6)
             .as("cosine"))
         .orderBy(col("cosine").desc, col("ua"), col("ub")).limit(20)
-      graft.core.Spill.materialize(res) { tc.unpersist(blocking = false) }
     }
 
   // The SUB-QUADRATIC path for trajectory similarity — the blocked
@@ -416,7 +413,7 @@ object Advanced {
     val exUnion = (0 until Tt)
       .map(t => s"SELECT user_id, $t AS tbl, b_$t AS bucket FROM sig")
       .mkString("\n  UNION ALL\n  ")
-    QueryDef.sql("q_trajectory_sim_lsh")(
+    QueryDef.pinned("q_trajectory_sim_lsh")(
       s"""WITH tr AS (
          |  SELECT user_id,
          |    event_type || ' ' || lead(event_type, 1) OVER w
@@ -471,18 +468,18 @@ object Advanced {
          |  JOIN grp gb ON gb.rep = rr.rb JOIN m21 b ON b.d = gb.d),
          |allp AS (SELECT * FROM wpairs UNION ALL SELECT * FROM xpairs)
          |SELECT ua, ub, cosine FROM allp
-         |ORDER BY cosine DESC, ua, ub LIMIT 20""".stripMargin) { (s, dir) =>
+         |ORDER BY cosine DESC, ua, ub LIMIT 20""".stripMargin) { (s, dir, pins) =>
       import org.apache.spark.sql.expressions.Window
       val wu = Window.partitionBy("user_id").orderBy(col("ts"), col("event_id"))
-      val tc = Tables.events(s, dir)
+      // feeds digests AND the rep-grain relation
+      val tc = pins.persist(Tables.events(s, dir)
         .select(col("user_id"), col("event_type"), col("ts"), col("event_id"))
         .withColumn("t2", lead(col("event_type"), 1).over(wu))
         .withColumn("t3", lead(col("event_type"), 2).over(wu))
         .filter(col("t3").isNotNull)
         .select(col("user_id"),
           concat_ws(" ", col("event_type"), col("t2"), col("t3")).as("g"))
-        .groupBy("user_id", "g").agg(count(lit(1)).as("c"))
-        .persist() // feeds digests AND the rep-grain relation
+        .groupBy("user_id", "g").agg(count(lit(1)).as("c")))
       // behavior digest: md5 of the sorted (g, c) list — the exact
       // string the oracle's string_agg(g || ':' || c ORDER BY g) builds
       val dig = tc.groupBy("user_id")
@@ -500,15 +497,14 @@ object Advanced {
       // rides the aggregate grp already pays, and every consumer now
       // reads the persisted cache. dig itself drops to a single
       // consumer, so the md5-digest pass runs once.
-      val grp = dig.groupBy("d")
+      // rep filter + both expansion sides + m21 expansions
+      val grp = pins.persist(dig.groupBy("d")
         .agg(min(col("user_id")).as("rep"), count(lit(1)).as("sz"),
-          slice(array_sort(collect_list(col("user_id"))), 1, 21).as("m21a"))
-        .persist() // rep filter + both expansion sides + m21 expansions
+          slice(array_sort(collect_list(col("user_id"))), 1, 21).as("m21a")))
       val m21 = grp.select(col("d"), explode(col("m21a")).as("user_id"))
       // REPRESENTATIVE-grain trigram relation: everything heavier than
       // the digest agg runs at distinct-behavior cardinality
-      val rtc = tc.join(grp.select(col("rep").as("user_id")), "user_id")
-        .persist()
+      val rtc = pins.persist(tc.join(grp.select(col("rep").as("user_id")), "user_id"))
       val vocab = rtc.select("g").distinct()
         .withColumn("gid", row_number().over(Window.orderBy("g")))
       val tcg = rtc.join(broadcast(vocab), "g")
@@ -520,11 +516,10 @@ object Advanced {
       // band self-join; left lazy, each consumer re-ran the whole
       // vocab -> tcg -> 64-sum pipeline (the profiler showed the two
       // ~16 task-s twins). The cached relation is tiny: reps x 64 longs.
-      val su = tcg.groupBy("user_id")
+      val su = pins.persist(tcg.groupBy("user_id")
         .agg(sum(col("c") * p(0)).cast("long").as("s_0"),
           (1 until Tt * B).map(j =>
-            sum(col("c") * p(j)).cast("long").as(s"s_$j")): _*)
-        .persist()
+            sum(col("c") * p(j)).cast("long").as(s"s_$j")): _*))
       su.count()
       // global sums derive from the per-rep sums — integer addition is
       // associative, so m_j = Σ_user s_j bit-equals the oracle's direct
@@ -583,14 +578,8 @@ object Advanced {
         .join(m21.select(col("d").as("db"), col("user_id").as("mb")), "db")
         .select(least(col("ma"), col("mb")).as("ua"),
           greatest(col("ma"), col("mb")).as("ub"), col("cosine"))
-      val res = wpairs.unionAll(xpairs)
+      wpairs.unionAll(xpairs)
         .orderBy(col("cosine").desc, col("ua"), col("ub")).limit(20)
-      graft.core.Spill.materialize(res) {
-        tc.unpersist(blocking = false)
-        grp.unpersist(blocking = false)
-        rtc.unpersist(blocking = false)
-        su.unpersist(blocking = false)
-      }
     }
   }
 

@@ -672,28 +672,26 @@ object Analytics {
   // compare + one ≤800-byte memcpy per row, parallelism ∝ input, and
   // the median replicates Percentile.getPercentile bit-for-bit
   // (RollingMedianSpec pins window ≡ two-phase on real data).
-  val rollingMedian: QueryDef = QueryDef.sql("q_rolling_median")(
+  val rollingMedian: QueryDef = QueryDef.pinned("q_rolling_median")(
     """SELECT event_id, event_type, value,
       |  ROUND(median(value) OVER (PARTITION BY event_type ORDER BY ts, event_id
       |    ROWS BETWEEN 99 PRECEDING AND CURRENT ROW), 6) AS med100
-      |FROM events ORDER BY event_id""".stripMargin) { (s, dir) =>
+      |FROM events ORDER BY event_id""".stripMargin) { (s, dir, pins) =>
     val base = Tables.events(s, dir)
       .select(col("event_id"), col("event_type"), col("value"),
         // micros long, not Timestamp: same total order, no per-row
         // java.sql.Timestamp boxing through the RDD phases
         unix_micros(col("ts")).as("__tsu"))
-    val (med, release) = graft.ops.RollingMedian.withRollingMedian(
-      base, "event_type", Seq(col("__tsu"), col("event_id")), "value",
-      100, "__med", Tables.scaledPartitions(s, dir, "events"))
-    val result = med
-      .select(col("event_id"), col("event_type"), col("value"),
-        round(col("__med"), 6).as("med100"))
-      .orderBy("event_id")
     // spill-then-release (r18, guide §5 hygiene): the pinned
     // range-sorted RDD is dropped as soon as the result is on disk,
     // instead of stranding an input-sized MEMORY_AND_DISK block until
     // the harness sweep (VERDICT r17 item 7)
-    graft.core.Spill.materialize(result) { release() }
+    graft.ops.RollingMedian.withRollingMedian(
+      base, "event_type", Seq(col("__tsu"), col("event_id")), "value",
+      100, "__med", Tables.scaledPartitions(s, dir, "events"), pins)
+      .select(col("event_id"), col("event_type"), col("value"),
+        round(col("__med"), 6).as("med100"))
+      .orderBy("event_id")
   }
 
   // Time-series similarity search (per the retrieved EDBT 2019 theme —
@@ -710,7 +708,7 @@ object Analytics {
   // is itself derived in-query (first full purchase window ≥ 100 hours
   // in), so the whole search is one declarative plan — at 100 TB the
   // same shape handles per-metric fleets of series.
-  val tsSimilarity: QueryDef = QueryDef.sql("q_ts_similarity")(
+  val tsSimilarity: QueryDef = QueryDef.pinned("q_ts_similarity")(
     """WITH hc AS (SELECT event_type, epoch_us(date_trunc('hour', ts)) // 3600000000 AS hidx,
       |              COUNT(*) AS n
       |            FROM events GROUP BY 1, 2),
@@ -736,14 +734,14 @@ object Analytics {
       |        ROUND(list_reduce(list_prepend(0.0, list(term ORDER BY i)), (a, b) -> a + b), 6) AS dist2
       |      FROM terms GROUP BY 1, 2)
       |SELECT event_type, wstart, dist2 FROM d
-      |ORDER BY dist2, event_type, wstart LIMIT 10""".stripMargin) { (s, dir) =>
+      |ORDER BY dist2, event_type, wstart LIMIT 10""".stripMargin) { (s, dir, pins) =>
     val hc = Tables.events(s, dir)
       .groupBy(col("event_type"),
         expr("unix_micros(date_trunc('hour', ts)) div 3600000000").as("hidx"))
       .agg(count(lit(1)).as("n"))
     val mem = hc.select(col("event_type"), col("hidx"), col("n"),
       explode(sequence(col("hidx") - 23, col("hidx"))).as("wstart"))
-    val w = mem.groupBy("event_type", "wstart")
+    val w = pins.persist(mem.groupBy("event_type", "wstart")
       .agg(count(lit(1)).as("sup"),
         sum("n").as("sx"), sum(col("n") * col("n")).as("sxx"),
         transform(
@@ -754,8 +752,7 @@ object Analytics {
       .withColumn("v",
         col("sxx").cast("double") / 24 - (col("sx").cast("double") / 24) * (col("sx").cast("double") / 24))
       .filter(col("v") > 0)
-      .withColumn("sd", sqrt(col("v")))
-      .persist()
+      .withColumn("sd", sqrt(col("v"))))
     val qstart = w.filter(col("event_type") === "purchase")
       .crossJoin(broadcast(hc.agg((min("hidx") + 100).as("hq"))))
       .filter(col("wstart") >= col("hq"))
@@ -766,13 +763,12 @@ object Analytics {
       .select(col("wv").as("qv"), col("m").as("qm"), col("sd").as("qsd"))
     def znormDiff(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
       (a - col("m")) / col("sd") - (b - col("qm")) / col("qsd")
-    val res = w.crossJoin(broadcast(q))
+    w.crossJoin(broadcast(q))
       .select(col("event_type"), col("wstart"),
         round(aggregate(
           zip_with(col("wv"), col("qv"), (a, b) => znormDiff(a, b) * znormDiff(a, b)),
           lit(0.0), (acc, x) => acc + x), 6).as("dist2"))
       .orderBy(col("dist2"), col("event_type"), col("wstart")).limit(10)
-    graft.core.Spill.materialize(res) { w.unpersist(blocking = false) }
   }
 
   // Per-group closed-form linear regression (trend fitting): value ~

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Pins, QueryDef, Tables}
 import graft.ops.Text
 
 /** Corpus-curation operators a large-scale training-data pipeline needs
@@ -40,14 +40,19 @@ object Curation {
   // lineage, which `localCheckpoint` models here.
   // edge definition shared with q_ngram_jaccard — pair relation,
   // blocking keys, and threshold all come from TextAnalysis so the two
-  // queries cannot drift
-  private[catalog] def jaccardPairs(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val (stats, ex) = TextAnalysis.tokenJaccardStats(s, dir)
-    val pairs = stats
+  // queries cannot drift. The pairs come back checkpointed in `pins`,
+  // `tap` applied on the checkpoint's own pass (e.g. an observe()).
+  private[catalog] def jaccardPairs(s: SparkSession, dir: String, pins: Pins,
+      tap: DataFrame => DataFrame = identity): DataFrame = {
+    val (stats, ex) = TextAnalysis.tokenJaccardStats(s, dir, pins)
+    val pairs = pins.checkpoint(tap(stats
       .filter(col("inter") / (col("n_a") + col("n_b") - col("inter"))
         >= TextAnalysis.JaccardThreshold)
-      .select(col("doc_a"), col("doc_b"))
-    (pairs, ex)
+      .select(col("doc_a"), col("doc_b"))))
+    // localCheckpoint is eager — the pair join ran; the persisted token
+    // explode backing it can go before the caller iterates
+    ex.unpersist(blocking = false)
+    pairs
   }
 
   private[catalog] val pairsSql =
@@ -63,26 +68,23 @@ object Curation {
   /** Min-label propagation with pointer jumping over an undirected pair
     * list `(doc_a, doc_b)`: returns `(doc, lbl)` where lbl is the
     * component minimum, for every node that appears in a pair. Each
-    * round eagerly localCheckpoints (cuts lineage — 30 rounds of
-    * accumulated plan would swamp the analyzer); callers snapshot
-    * `getPersistentRDDs` around the call and release what it pinned.
+    * round eagerly localCheckpoints into the caller's `pins` (cuts
+    * lineage — 30 rounds of accumulated plan would swamp the analyzer).
     * Shared by q_dedup_clusters (exact-Jaccard edges) and
     * q_corpus_dedup (MinHash-LSH verified edges).
     */
-  private def ccLabels(pairs: DataFrame): DataFrame = {
+  private def ccLabels(pairs: DataFrame, pins: Pins): DataFrame = {
     val Array(ca, cb) = pairs.columns
-    val edges = pairs.select(col(ca).as("src"), col(cb).as("dst"))
-      .unionByName(pairs.select(col(cb).as("src"), col(ca).as("dst")))
-      .localCheckpoint()
+    val edges = pins.checkpoint(pairs.select(col(ca).as("src"), col(cb).as("dst"))
+      .unionByName(pairs.select(col(cb).as("src"), col(ca).as("dst"))))
     // seed at min(self, neighbors) rather than self — exactly what the
     // first propagation round would compute from a self-label start, so
     // the fixed point (component minimum) is unchanged and the loop
     // converges one round earlier; labels stay node ids (self or a
     // neighbor), which the pointer-jump dereference requires
-    var labels = edges.groupBy(col("src"))
+    var labels = pins.checkpoint(edges.groupBy(col("src"))
       .agg(least(col("src"), min(col("dst"))).as("lbl"))
-      .select(col("src").as("doc"), col("lbl"))
-      .localCheckpoint()
+      .select(col("src").as("doc"), col("lbl")))
     var converged = false
     var rounds = 0
     while (!converged && rounds < 50) {
@@ -105,10 +107,9 @@ object Curation {
       // second filter-isEmpty job over the checkpointed rows — one job
       // per round, not two (the r18 graph-family job-fusion item)
       val obs = new org.apache.spark.sql.Observation(s"cc_r${rounds}_${System.nanoTime()}")
-      val next = m.join(mapping, col("mlbl") === col("mdoc"), "left")
+      val next = pins.checkpoint(m.join(mapping, col("mlbl") === col("mdoc"), "left")
         .select(col("doc"), coalesce(col("mmlbl"), col("mlbl")).as("lbl"), col("olbl"))
-        .observe(obs, sum(when(col("lbl") =!= col("olbl"), 1L).otherwise(0L)).as("changed"))
-        .localCheckpoint()
+        .observe(obs, sum(when(col("lbl") =!= col("olbl"), 1L).otherwise(0L)).as("changed")))
       // sum() is null only over zero rows (labels can't be empty here,
       // but the guard keeps the general contract)
       val changed = obs.get("changed")
@@ -124,7 +125,7 @@ object Curation {
     labels
   }
 
-  val dedupClusters: QueryDef = QueryDef.sql("q_dedup_clusters")(
+  val dedupClusters: QueryDef = QueryDef.pinned("q_dedup_clusters")(
     s"""WITH RECURSIVE $pairsSql,
        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -134,28 +135,14 @@ object Curation {
        |  SELECT r.src, e.dst FROM reach r JOIN edges e ON r.dst = e.src)
        |SELECT src AS doc_id, MIN(dst) AS cluster_id,
        |  CAST(src = MIN(dst) AS INT) AS is_canonical
-       |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    // snapshot what was cached before so everything the CC rounds pin
-    // can be released at the end
-    val preexisting = s.sparkContext.getPersistentRDDs.keySet
-    val (pairs, tokenEx) = jaccardPairs(s, dir)
-    val pairsCk = pairs.localCheckpoint()
-    // localCheckpoint is eager — the pair join ran; the persisted token
-    // explode backing it can go before the iteration starts
-    tokenEx.unpersist(blocking = false)
-    val labels = ccLabels(pairsCk)
-    val result = labels
+       |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin) { (s, dir, pins) =>
+    // the scope spills the result (distributed, never a driver collect —
+    // one row per near-dup doc, cluster-sized at 100 TB) before it
+    // drops the iteration checkpoints
+    ccLabels(jaccardPairs(s, dir, pins), pins)
       .select(col("doc").as("doc_id"), col("lbl").as("cluster_id"),
         (col("doc") === col("lbl")).cast("int").as("is_canonical"))
       .orderBy("doc_id")
-    // materialize eagerly (distributed spill, never a driver collect —
-    // the result is one row per near-dup doc, cluster-sized at 100 TB)
-    // so the iteration checkpoints can be dropped
-    graft.core.Spill.materialize(result) {
-      s.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
   }
 
   // The SAME clustering through the alternating large-star/small-star
@@ -168,19 +155,16 @@ object Curation {
   // q_dedup_clusters' oracle pins that both algorithms produce the
   // identical clustering.
   val dedupClustersTwoStar: QueryDef =
-    QueryDef.sql("q_dedup_clusters_twostar")(dedupClusters.oracle.get) { (s, dir) =>
-      val preexisting = s.sparkContext.getPersistentRDDs.keySet
-      val (pairs, tokenEx) = jaccardPairs(s, dir)
+    QueryDef.pinned("q_dedup_clusters_twostar")(dedupClusters.oracle.get) { (s, dir, pins) =>
       // edge count observed during each checkpoint materialization: the
       // convergence test below needs |next| == |edges| every round, and
       // a CollectMetrics count on the same pass replaces one count()
       // job per round (plus the initial one)
       val obs0 = new org.apache.spark.sql.Observation(
         s"ts_e0_${System.nanoTime()}")
-      var edges = pairs.toDF("src", "dst")
-        .observe(obs0, count(lit(1)).as("n")).localCheckpoint()
+      var edges = jaccardPairs(s, dir, pins,
+        _.toDF("src", "dst").observe(obs0, count(lit(1)).as("n")))
       var edgeCount = obs0.get("n").asInstanceOf[Number].longValue
-      tokenEx.unpersist(blocking = false)
 
       // large-star: every node hooks its LARGER neighbors onto the min
       // of its neighborhood (incl. itself)
@@ -213,8 +197,8 @@ object Curation {
       while (!converged && rounds < 50) {
         val obs = new org.apache.spark.sql.Observation(
           s"ts_r${rounds}_${System.nanoTime()}")
-        val next = smallStar(largeStar(edges))
-          .observe(obs, count(lit(1)).as("n")).localCheckpoint()
+        val next = pins.checkpoint(smallStar(largeStar(edges))
+          .observe(obs, count(lit(1)).as("n")))
         val nextCount = obs.get("n").asInstanceOf[Number].longValue
         // multiset equality via count + ONE-sided except: both sides are
         // duplicate-free (each round ends in distinct()), so equal
@@ -238,15 +222,10 @@ object Curation {
       val dup = labels.groupBy("doc_id").agg(count(lit(1)).as("n"))
         .filter(col("n") > 1)
       require(dup.isEmpty, "two-star fixed point is not a star forest")
-      val result = labels
+      labels
         .select(col("doc_id"), col("cluster_id"),
           (col("doc_id") === col("cluster_id")).cast("int").as("is_canonical"))
         .orderBy("doc_id")
-      graft.core.Spill.materialize(result) {
-        s.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting.contains(id) }
-          .values.foreach(_.unpersist(false))
-      }
     }
 
   // -------------------------------------------------------------------
@@ -356,7 +335,7 @@ object Curation {
   // that dedup already computes. The oracle recomputes the clustering
   // via a recursive CTE and the same salted hash — a single doc in the
   // wrong split breaks the hash.
-  val splitLeakageSafe: QueryDef = QueryDef.sql("q_split_leakage_safe")(
+  val splitLeakageSafe: QueryDef = QueryDef.pinned("q_split_leakage_safe")(
     s"""WITH RECURSIVE $pairsSql,
        |edges AS (SELECT doc_a AS src, doc_b AS dst FROM pairs
        |          UNION ALL SELECT doc_b, doc_a FROM pairs),
@@ -379,14 +358,10 @@ object Curation {
        |SELECT split, lang, COUNT(*) AS n_docs,
        |  COUNT(DISTINCT cluster_id) AS n_clusters,
        |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-       |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir) =>
-    val preexisting = s.sparkContext.getPersistentRDDs.keySet
-    val (pairs, tokenEx) = jaccardPairs(s, dir)
-    val pairsCk = pairs.localCheckpoint()
-    tokenEx.unpersist(blocking = false)
-    val labels = ccLabels(pairsCk)
+       |FROM t GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin) { (s, dir, pins) =>
+    val labels = ccLabels(jaccardPairs(s, dir, pins), pins)
       .select(col("doc").as("doc_id"), col("lbl"))
-    val result = Tables.documents(s, dir)
+    Tables.documents(s, dir)
       .select("doc_id", "lang", "n_chars")
       .join(labels, Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("lbl"), col("doc_id")))
@@ -400,11 +375,6 @@ object Curation {
         countDistinct(col("cluster_id")).as("n_clusters"),
         sum(col("n_chars")).as("total_chars"))
       .orderBy("split", "lang")
-    graft.core.Spill.materialize(result) {
-      s.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
   }
 
   // -------------------------------------------------------------------
@@ -670,7 +640,7 @@ object Curation {
     val dropped = graft.core.Spill.materialize(
       contaminationAgg(s, dir)
         .filter(col("n_contaminated") * 20 >= col("n_shingles"))
-        .select("doc_id")) {}
+        .select("doc_id"))
     Tables.documents(s, dir)
       .filter(col("doc_id") >= 10)
       .join(dropped, Seq("doc_id"), "left_anti")
@@ -961,9 +931,21 @@ object Curation {
   // here the edge set comes from the O(n·bands) LSH path — the shape
   // that still runs at 100 TB — and the output is the deduplicated
   // document set itself, full corpus in → kept corpus out.
+  // Verified pairs at `threshold`, checkpointed in `pins`; the persisted
+  // shingle relation behind them is dropped once the checkpoint ran.
+  private def verifiedPairs(s: SparkSession, dir: String, pins: Pins,
+      threshold: Double): DataFrame = {
+    val (stats, shingled) = TextAnalysis.minhashVerifiedStats(s, dir, pins)
+    val pairs = pins.checkpoint(stats
+      .filter(col("inter") / (col("n_a") + col("n_b") - col("inter")) >= threshold)
+      .select("doc_a", "doc_b"))
+    shingled.unpersist(blocking = false)
+    pairs
+  }
+
   val corpusDedup: QueryDef = {
     val threshold = 0.7
-    QueryDef.sql("q_corpus_dedup")(
+    QueryDef.pinned("q_corpus_dedup")(
       s"""WITH RECURSIVE ${TextAnalysis.minhashVerifiedCte},
          |pairs AS (SELECT doc_a, doc_b FROM inter
          |          WHERE inter / (n_a + n_b - inter) >= $threshold),
@@ -980,20 +962,12 @@ object Curation {
          |  CAST(c.doc_id IS NOT NULL AS INT) AS had_dups
          |FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id
          |WHERE c.doc_id IS NULL OR c.cluster_id = d.doc_id
-         |ORDER BY d.doc_id""".stripMargin) { (s, dir) =>
-      val preexisting = s.sparkContext.getPersistentRDDs.keySet
-      val (stats, shingled) = TextAnalysis.minhashVerifiedStats(s, dir)
-      val pairs = stats
-        .filter(col("inter") / (col("n_a") + col("n_b") - col("inter"))
-          >= threshold)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-      shingled.unpersist(blocking = false)
-      val labels = ccLabels(pairs)
+         |ORDER BY d.doc_id""".stripMargin) { (s, dir, pins) =>
+      val labels = ccLabels(verifiedPairs(s, dir, pins, threshold), pins)
       // kept = never-duplicated docs + one canonical per dup cluster;
       // labels hold only near-dup members — a small fraction of any
       // real corpus — so the join against the full scan auto-broadcasts
-      val result = Tables.documents(s, dir)
+      Tables.documents(s, dir)
         .select("doc_id", "lang", "n_chars")
         .join(labels.withColumnRenamed("doc", "doc_id"), Seq("doc_id"), "left")
         .filter(col("lbl").isNull || col("lbl") === col("doc_id"))
@@ -1001,11 +975,6 @@ object Curation {
           coalesce(col("lbl"), col("doc_id")).as("cluster_id"),
           col("lbl").isNotNull.cast("int").as("had_dups"))
         .orderBy("doc_id")
-      graft.core.Spill.materialize(result) {
-        s.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting.contains(id) }
-          .values.foreach(_.unpersist(false))
-      }
     }
   }
 
@@ -1167,7 +1136,7 @@ object Curation {
   // column a dedup report aggregates.
   val corpusDedupBest: QueryDef = {
     val threshold = 0.7
-    QueryDef.sql("q_corpus_dedup_best")(
+    QueryDef.pinned("q_corpus_dedup_best")(
       s"""WITH RECURSIVE ${TextAnalysis.minhashVerifiedCte},
          |pairs AS (SELECT doc_a, doc_b FROM inter
          |          WHERE inter / (n_a + n_b - inter) >= $threshold),
@@ -1193,16 +1162,9 @@ object Curation {
          |  CAST(1 AS BIGINT) AS cluster_size
          |FROM documents d LEFT JOIN clusters c ON d.doc_id = c.doc_id
          |WHERE c.doc_id IS NULL
-         |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-      val preexisting = s.sparkContext.getPersistentRDDs.keySet
-      val (stats, shingled) = TextAnalysis.minhashVerifiedStats(s, dir)
-      val pairs = stats
-        .filter(col("inter") / (col("n_a") + col("n_b") - col("inter"))
-          >= threshold)
-        .select("doc_a", "doc_b")
-        .localCheckpoint()
-      shingled.unpersist(blocking = false)
-      val labels = ccLabels(pairs).withColumnRenamed("doc", "doc_id")
+         |ORDER BY doc_id""".stripMargin) { (s, dir, pins) =>
+      val labels = ccLabels(verifiedPairs(s, dir, pins, threshold), pins)
+        .withColumnRenamed("doc", "doc_id")
       val docsAll = Tables.documents(s, dir)
         .select("doc_id", "lang", "n_chars")
       // cluster members are a small fraction of any real corpus: the
@@ -1221,12 +1183,7 @@ object Curation {
         .join(labels.select("doc_id"), Seq("doc_id"), "left_anti")
         .select(col("doc_id"), col("lang"), col("n_chars"),
           col("doc_id").as("cluster_id"), lit(1L).as("cluster_size"))
-      val result = reps.unionByName(singletons).orderBy("doc_id")
-      graft.core.Spill.materialize(result) {
-        s.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting.contains(id) }
-          .values.foreach(_.unpersist(false))
-      }
+      reps.unionByName(singletons).orderBy("doc_id")
     }
   }
 
@@ -1245,7 +1202,7 @@ object Curation {
   // the operators it composes. One persisted (toks, norm) projection
   // feeds gate, dedup, and packing; output is the 8-row shard manifest
   // a dataloader consumes — all integer arithmetic, fully hash-matched.
-  val trainingExport: QueryDef = QueryDef.sql("q_training_export")(
+  val trainingExport: QueryDef = QueryDef.pinned("q_training_export")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks, $normSql AS norm
        |              FROM documents),
        |tok AS (SELECT doc_id, UNNEST(toks) AS t FROM base),
@@ -1276,13 +1233,12 @@ object Curation {
        |  CAST(COUNT(DISTINCT seq_id) AS BIGINT) AS n_seqs,
        |  CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_docs,
        |  CAST(SUM(n_in_seq) AS BIGINT) AS n_tokens
-       |FROM seg GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
+       |FROM seg GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir, pins) =>
     val L = 256
-    val base = Tables.documents(s, dir)
+    val base = pins.persist(Tables.documents(s, dir)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"),
-        Text.normText(col("text")).as("norm"))
-      .persist()
+        Text.normText(col("text")).as("norm")))
     // fill the cache eagerly: the gate and the dedup branches
     // materialize concurrently under AQE, and a lazy persist lets both
     // race to compute the uncached tokenize chain (the
@@ -1311,12 +1267,11 @@ object Curation {
       .select(col("seq_id"), col("doc_id"),
         (least(col("g_end"), (col("seq_id") + 1) * L)
           - greatest(col("g_start"), col("seq_id") * L)).as("n_in_seq"))
-    val res = seg.groupBy((col("seq_id") % 8).as("shard_id"))
+    seg.groupBy((col("seq_id") % 8).as("shard_id"))
       .agg(countDistinct(col("seq_id")).as("n_seqs"),
         countDistinct(col("doc_id")).as("n_docs"),
         sum(col("n_in_seq")).as("n_tokens"))
       .orderBy("shard_id")
-    graft.core.Spill.materialize(res) { base.unpersist(blocking = false) }
   }
 
   val all: Seq[QueryDef] = Seq(

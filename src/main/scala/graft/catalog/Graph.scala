@@ -38,7 +38,7 @@ object Graph {
          |    JOIN r${k - 1} r ON r.node = e.src
          |    JOIN deg dg ON dg.src = e.src
          |    GROUP BY e.dst) c ON c.dst = d.src)""".stripMargin
-    QueryDef.sql("q_pagerank")(
+    QueryDef.pinned("q_pagerank")(
       s"""WITH cs AS (
          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -46,10 +46,7 @@ object Graph {
          |deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY src),
          |r0 AS (SELECT src AS node, CAST(1000000 AS BIGINT) AS r FROM deg),
          |${(1 to Iters).map(duckIter).mkString(",\n")}
-         |SELECT node, r AS rank_u FROM r$Iters ORDER BY node""".stripMargin) { (s, dir) =>
-      // localCheckpoint pins RDD blocks for the session — snapshot the
-      // registry so every block this query adds is released at the end
-      val preexisting = s.sparkContext.getPersistentRDDs.keySet
+         |SELECT node, r AS rank_u FROM r$Iters ORDER BY node""".stripMargin) { (s, dir, pins) =>
       val cs = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
         .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
           col("l_orderkey") === col("o_orderkey"))
@@ -57,9 +54,9 @@ object Graph {
         .distinct()
       // localCheckpoint: edges and degrees are reused every round — pin
       // them once instead of re-running the join 2×Iters times
-      val edges = cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint()
-      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
+      val edges = pins.checkpoint(
+        cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst"))))
+      val deg = pins.checkpoint(edges.groupBy("src").agg(count(lit(1)).as("deg")))
       var r = deg.select(col("src").as("node"), lit(1000000L).as("r"))
       for (_ <- 1 to Iters) {
         val contrib = edges
@@ -80,14 +77,9 @@ object Graph {
           .select(col("node"),
             (lit(150000L) + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
       }
-      val result = r.select(col("node"), col("r").as("rank_u")).orderBy("node")
-      // distributed spill, never a driver collect: the result is one row
-      // per node — cluster-sized at 100 TB
-      graft.core.Spill.materialize(result) {
-        s.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting.contains(id) }
-          .values.foreach(_.unpersist(false))
-      }
+      // spilled by the scope, never a driver collect: the result is one
+      // row per node — cluster-sized at 100 TB
+      r.select(col("node"), col("r").as("rank_u")).orderBy("node")
     }
   }
 
@@ -104,7 +96,7 @@ object Graph {
   // same triangles by plain id-ordered 3-way self-join; per-node counts
   // are algorithm-invariant, so the hash match proves the oriented
   // enumeration exact.
-  val triangleCount: QueryDef = QueryDef.sql("q_triangle_count")(
+  val triangleCount: QueryDef = QueryDef.pinned("q_triangle_count")(
     s"""WITH ${Curation.pairsSql},
        |tri AS (
        |  SELECT e1.doc_a AS a, e1.doc_b AS b, e2.doc_b AS c
@@ -113,11 +105,8 @@ object Graph {
        |  JOIN pairs e3 ON e3.doc_a = e1.doc_a AND e3.doc_b = e2.doc_b),
        |n AS (SELECT UNNEST([a, b, c]) AS doc_id FROM tri)
        |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_triangles
-       |FROM n GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir) =>
-    val preexisting = s.sparkContext.getPersistentRDDs.keySet
-    val (rawPairs, tokenEx) = Curation.jaccardPairs(s, dir)
-    val pairs = rawPairs.localCheckpoint()
-    tokenEx.unpersist(blocking = false)
+       |FROM n GROUP BY 1 ORDER BY 1""".stripMargin) { (s, dir, pins) =>
+    val pairs = Curation.jaccardPairs(s, dir, pins)
     val deg = pairs.select(col("doc_a").as("node"))
       .unionByName(pairs.select(col("doc_b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -143,15 +132,10 @@ object Graph {
     val closing = oriented.select(col("src").as("v"), col("dst").as("w"))
     val tri = wedges.join(closing, Seq("v", "w"))
       .select(col("src"), col("v"), col("w"))
-    val result = tri
+    tri
       .select(explode(array(col("src"), col("v"), col("w"))).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_triangles"))
       .orderBy("doc_id")
-    graft.core.Spill.materialize(result) {
-      s.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
   }
 
   // Degree distribution of the near-dup graph — the first diagnostic a
@@ -161,7 +145,7 @@ object Graph {
   // Two partial→final HashAggregates (per-node degree, then per-degree
   // count) over the shared exact-Jaccard edge relation — the shuffles
   // carry (id, long) pairs only.
-  val degreeDist: QueryDef = QueryDef.sql("q_degree_dist")(
+  val degreeDist: QueryDef = QueryDef.pinned("q_degree_dist")(
     s"""WITH ${Curation.pairsSql},
        |n AS (SELECT doc_a AS node FROM pairs
        |      UNION ALL SELECT doc_b FROM pairs),
@@ -169,22 +153,14 @@ object Graph {
        |        FROM n GROUP BY node)
        |SELECT degree, CAST(COUNT(*) AS BIGINT) AS n_nodes,
        |  CAST(MIN(node) AS BIGINT) AS example_doc
-       |FROM deg GROUP BY degree ORDER BY degree""".stripMargin) { (s, dir) =>
-    val preexisting = s.sparkContext.getPersistentRDDs.keySet
-    val (rawPairs, tokenEx) = Curation.jaccardPairs(s, dir)
-    val pairs = rawPairs.localCheckpoint()
-    tokenEx.unpersist(blocking = false)
-    val result = pairs.select(col("doc_a").as("node"))
+       |FROM deg GROUP BY degree ORDER BY degree""".stripMargin) { (s, dir, pins) =>
+    val pairs = Curation.jaccardPairs(s, dir, pins)
+    pairs.select(col("doc_a").as("node"))
       .unionByName(pairs.select(col("doc_b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
       .groupBy("degree")
       .agg(count(lit(1)).as("n_nodes"), min(col("node")).as("example_doc"))
       .orderBy("degree")
-    graft.core.Spill.materialize(result) {
-      s.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
   }
 
   // Synchronous label propagation (Raghavan et al. 2007) over the same
@@ -205,22 +181,21 @@ object Graph {
          |    SELECT node, l, ROW_NUMBER() OVER
          |      (PARTITION BY node ORDER BY c DESC, l) AS rn
          |    FROM t$k) r WHERE rn = 1)""".stripMargin
-    QueryDef.sql("q_label_prop")(
+    QueryDef.pinned("q_label_prop")(
       s"""WITH cs AS (
          |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
          |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
          |edges AS (SELECT src, dst FROM cs UNION ALL SELECT dst, src FROM cs),
          |l0 AS (SELECT DISTINCT src AS node, src AS label FROM edges),
          |${(1 to 2).map(duckRound).mkString(",\n")}
-         |SELECT node, label AS community FROM l2 ORDER BY node""".stripMargin) { (s, dir) =>
-      val preexisting = s.sparkContext.getPersistentRDDs.keySet
+         |SELECT node, label AS community FROM l2 ORDER BY node""".stripMargin) { (s, dir, pins) =>
       val cs = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
         .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
           col("l_orderkey") === col("o_orderkey"))
         .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
         .distinct()
-      val edges = cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst")))
-        .localCheckpoint() // reused by l0 and both rounds
+      val edges = pins.checkpoint( // reused by l0 and both rounds
+        cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst"))))
       var lbl = edges.select(col("src").as("node")).distinct()
         .select(col("node"), col("node").as("label"))
       for (_ <- 1 to 2) {
@@ -241,13 +216,7 @@ object Graph {
             .as("label"))
           .select(col("dst").as("node"), col("label"))
       }
-      val result = lbl.select(col("node"), col("label").as("community"))
-        .orderBy("node")
-      graft.core.Spill.materialize(result) {
-        s.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => preexisting.contains(id) }
-          .values.foreach(_.unpersist(false))
-      }
+      lbl.select(col("node"), col("label").as("community")).orderBy("node")
     }
   }
 
@@ -262,7 +231,7 @@ object Graph {
   // 1-row broadcast. Each round is two left-semi equi-joins (edges ×
   // alive set) + one hash aggregate — no iteration-private shuffle
   // shape, and lineage is cut per round like the PageRank loop.
-  val kcoreRounds: QueryDef = QueryDef.sql("q_kcore_rounds")(
+  val kcoreRounds: QueryDef = QueryDef.pinned("q_kcore_rounds")(
     """WITH cs AS (
       |  SELECT DISTINCT o_custkey * 2 AS src, l_suppkey * 2 + 1 AS dst
       |  FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
@@ -281,18 +250,17 @@ object Graph {
       |           JOIN alive2 a ON a.node = e.src JOIN alive2 b ON b.node = e.dst),
       |deg2 AS (SELECT src AS node, COUNT(*) AS deg FROM edges2 GROUP BY 1)
       |SELECT node, deg AS deg_r2, (SELECT k FROM kv) AS k
-      |FROM deg2 ORDER BY node""".stripMargin) { (s, dir) =>
+      |FROM deg2 ORDER BY node""".stripMargin) { (s, dir, pins) =>
     import org.apache.spark.sql.expressions.Window
-    val preexisting = s.sparkContext.getPersistentRDDs.keySet
     val cs = Tables.lineitem(s, dir).select("l_orderkey", "l_suppkey")
       .join(Tables.orders(s, dir).select("o_orderkey", "o_custkey"),
         col("l_orderkey") === col("o_orderkey"))
       .select((col("o_custkey") * 2).as("src"), (col("l_suppkey") * 2 + 1).as("dst"))
       .distinct()
-    val edges0 = cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint()
-    val deg0 = edges0.groupBy("src").agg(count(lit(1)).as("deg"))
-      .select(col("src").as("node"), col("deg")).localCheckpoint()
+    val edges0 = pins.checkpoint(
+      cs.unionByName(cs.select(col("dst").as("src"), col("src").as("dst"))))
+    val deg0 = pins.checkpoint(edges0.groupBy("src").agg(count(lit(1)).as("deg"))
+      .select(col("src").as("node"), col("deg")))
     // histogram cardinality = distinct degree values — the window is tiny
     val hist = deg0.groupBy("deg").agg(count(lit(1)).as("c"))
     val cum = hist.select(col("deg"),
@@ -316,21 +284,16 @@ object Graph {
       // checkpointing them there was a wasted input-sized
       // materialization + job (r18; guide §5 — persist only what is
       // reused)
-      val e2 = if (pinEdges) e2raw.localCheckpoint() else e2raw
+      val e2 = if (pinEdges) pins.checkpoint(e2raw) else e2raw
       val d2 = e2.groupBy("src").agg(count(lit(1)).as("deg"))
         .select(col("src").as("node"), col("deg"))
       (e2, d2)
     }
     val (e1, d1) = peel(edges0, deg0, pinEdges = true)
     val (_, d2) = peel(e1, d1, pinEdges = false)
-    val result = d2.crossJoin(broadcast(kv))
+    d2.crossJoin(broadcast(kv))
       .select(col("node"), col("deg").as("deg_r2"), col("k"))
       .orderBy("node")
-    graft.core.Spill.materialize(result) {
-      s.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => preexisting.contains(id) }
-        .values.foreach(_.unpersist(false))
-    }
   }
 
   val all: Seq[QueryDef] = Seq(pagerank, triangleCount, degreeDist, labelProp,

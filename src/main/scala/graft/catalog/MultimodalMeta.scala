@@ -136,7 +136,7 @@ object MultimodalMeta {
   // rebuilds the sample values from codepoints (pure-ASCII corpus:
   // byte == unicode(char)) — PNG grayscale is lossless, so the Spark
   // side's encode → decode → hash matches exactly.
-  val imageNearDup: QueryDef = QueryDef.sql("q_image_neardup")(
+  val imageNearDup: QueryDef = QueryDef.pinned("q_image_neardup")(
     """WITH img AS (SELECT doc_id, text FROM documents
       |             WHERE doc_id % 3 = 0 AND length(text) > 0),
       |hb AS (SELECT doc_id,
@@ -168,9 +168,9 @@ object MultimodalMeta {
       |  CAST(bit_count(xor(h_a, h_b)) + bit_count(xor(v_a, v_b)) AS BIGINT) AS hamming
       |FROM cand
       |WHERE bit_count(xor(h_a, h_b)) + bit_count(xor(v_a, v_b)) <= 6
-      |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+      |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
     // persist: both band-join sides would otherwise re-render + re-hash
-    val sig = graft.ops.ImageHash.dhashes(s, Tables.documents(s, dir)).persist()
+    val sig = pins.persist(graft.ops.ImageHash.dhashes(s, Tables.documents(s, dir)))
     val banded = sig.select(col("doc_id"), col("dhash_h"), col("dhash_v"),
       posexplode(array((0 until graft.ops.ImageHash.Bands).map { i =>
         if (i <= 2)
@@ -181,7 +181,7 @@ object MultimodalMeta {
         else
           shiftright(col("dhash_v"), 16 * (i - 4) + 8).bitwiseAND(lit(65535L))
       }: _*)).as(Seq("band_idx", "band_val")))
-    val pairs = banded.as("a").join(banded.as("b"),
+    banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -194,7 +194,6 @@ object MultimodalMeta {
           bit_count(col("v_a").bitwiseXOR(col("v_b")))).cast("long").as("hamming"))
       .filter(col("hamming") <= 6)
       .orderBy("doc_a", "doc_b")
-    graft.core.Spill.materialize(pairs) { sig.unpersist(blocking = false) }
   }
 
   // Audio-content near-dup: every audio-typed doc renders to a REAL
@@ -219,7 +218,7 @@ object MultimodalMeta {
   // non-trivial parity is pinned at sf0.1 (local r17 run) and in the
   // sf10 scale gate, and AudioHashSpec pins the collision semantics
   // on fixtures.
-  val audioNearDup: QueryDef = QueryDef.sql("q_audio_neardup")(
+  val audioNearDup: QueryDef = QueryDef.pinned("q_audio_neardup")(
     s"""WITH aud AS (SELECT doc_id, text FROM documents
       |             WHERE doc_id % 3 = 1 AND length(text) > 0),
       |s1 AS (SELECT doc_id, k // 8 AS f,
@@ -249,14 +248,14 @@ object MultimodalMeta {
       |  CAST(bit_count(xor(h_a, h_b)) + bit_count(xor(v_a, v_b)) AS BIGINT) AS hamming
       |FROM cand
       |WHERE bit_count(xor(h_a, h_b)) + bit_count(xor(v_a, v_b)) <= 6
-      |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+      |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
     // persist: both band-join sides would otherwise re-render + re-hash
-    val sig = graft.ops.AudioHash.fingerprints(s, Tables.documents(s, dir)).persist()
+    val sig = pins.persist(graft.ops.AudioHash.fingerprints(s, Tables.documents(s, dir)))
     val banded = sig.select(col("doc_id"), col("fp_h"), col("fp_v"),
       posexplode(array(
         graft.ops.Bands112.bandCols(col("fp_h"), col("fp_v")): _*))
         .as(Seq("band_idx", "band_val")))
-    val pairs = banded.as("a").join(banded.as("b"),
+    banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -269,7 +268,6 @@ object MultimodalMeta {
           bit_count(col("v_a").bitwiseXOR(col("v_b")))).cast("long").as("hamming"))
       .filter(col("hamming") <= 6)
       .orderBy("doc_a", "doc_b")
-    graft.core.Spill.materialize(pairs) { sig.unpersist(blocking = false) }
   }
 
   // Video-content near-dup: the temporal leg (ops/VideoHash). Decode
@@ -289,7 +287,7 @@ object MultimodalMeta {
   // fingerprints shuffle. The oracle rebuilds both lags' bits from
   // codepoints; slices a short clip never reaches read (0, 0) via the
   // LEFT JOIN, matching the Scala arrays' zero-filled slots.
-  val videoNearDup: QueryDef = QueryDef.sql("q_video_neardup")(
+  val videoNearDup: QueryDef = QueryDef.pinned("q_video_neardup")(
     s"""WITH vid AS (SELECT doc_id, text, length(text) AS len
       |             FROM documents WHERE doc_id % 3 = 2 AND length(text) > 0),
       |fe AS (SELECT doc_id, (p * 57) // len AS f,
@@ -322,14 +320,14 @@ object MultimodalMeta {
       |  CAST(bit_count(xor(h_a, h_b)) + bit_count(xor(v_a, v_b)) AS BIGINT) AS hamming
       |FROM cand
       |WHERE bit_count(xor(h_a, h_b)) + bit_count(xor(v_a, v_b)) <= 6
-      |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+      |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
     // persist: both band-join sides would otherwise re-carve + re-hash
-    val sig = graft.ops.VideoHash.fingerprints(s, Tables.documents(s, dir)).persist()
+    val sig = pins.persist(graft.ops.VideoHash.fingerprints(s, Tables.documents(s, dir)))
     val banded = sig.select(col("doc_id"), col("fp_h"), col("fp_v"),
       posexplode(array(
         graft.ops.Bands112.bandCols(col("fp_h"), col("fp_v")): _*))
         .as(Seq("band_idx", "band_val")))
-    val pairs = banded.as("a").join(banded.as("b"),
+    banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -342,7 +340,6 @@ object MultimodalMeta {
           bit_count(col("v_a").bitwiseXOR(col("v_b")))).cast("long").as("hamming"))
       .filter(col("hamming") <= 6)
       .orderBy("doc_a", "doc_b")
-    graft.core.Spill.materialize(pairs) { sig.unpersist(blocking = false) }
   }
 
   val all: Seq[QueryDef] =

@@ -492,7 +492,7 @@ object Scale {
     val (joined, drop) = bucketedJoinParts(s, dir)
     // materialize (to temp parquet) BEFORE dropping the tables the
     // lazy plan reads from; the returned frame is self-contained
-    graft.core.Spill.materialize(joined.orderBy("event_id"))(drop())
+    try graft.core.Spill.materialize(joined.orderBy("event_id")) finally drop()
   }
 
   // Data-quality constraint report (the Deequ pattern): the validation

@@ -847,7 +847,7 @@ object SimilaritySearch {
   // cross the hash. Fusion is rank-domain algebra over two top-k
   // relations (k rows per query each), so its cost is negligible next
   // to the retrievers it fuses — the scale path is theirs.
-  val rrfFusion: QueryDef = QueryDef.sql("q_rrf_fusion")(
+  val rrfFusion: QueryDef = QueryDef.pinned("q_rrf_fusion")(
     s"""WITH ${TextAnalysis.bm25RankedCte},
        |n AS ($normedSql),
        |dq AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM n WHERE vec_id < 5),
@@ -868,8 +868,8 @@ object SimilaritySearch {
        |fr AS (SELECT *, ROW_NUMBER() OVER
        |  (PARTITION BY query_id ORDER BY rrf DESC, doc_id) AS rnk FROM fused)
        |SELECT query_id, doc_id, rrf, rnk FROM fr WHERE rnk <= 10
-       |ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
-    val (bm25, tok) = TextAnalysis.bm25Ranked(s, dir)
+       |ORDER BY query_id, rnk""".stripMargin) { (s, dir, pins) =>
+    val bm25 = TextAnalysis.bm25Ranked(s, dir, pins)
     val lex = bm25.filter(col("rnk") <= 20)
       .select(col("query_id").as("l_q"), col("doc_id").as("l_d"),
         col("rnk").as("lrnk"))
@@ -895,11 +895,10 @@ object SimilaritySearch {
             coalesce(lit(1).cast("double") / (lit(60) + col("drnk")), lit(0.0)),
           6).as("rrf"))
     val fw = Window.partitionBy("query_id").orderBy(col("rrf").desc, col("doc_id"))
-    val res = fused.withColumn("rnk", row_number().over(fw))
+    fused.withColumn("rnk", row_number().over(fw))
       .filter(col("rnk") <= 10)
       .select("query_id", "doc_id", "rrf", "rnk")
       .orderBy("query_id", "rnk")
-    graft.core.Spill.materialize(res) { tok.unpersist(blocking = false) }
   }
 
   // Incremental top-k refinement (the retrieved EDBT 2020 theme:
@@ -934,7 +933,7 @@ object SimilaritySearch {
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 20)
       .drop("rnk")
-    val candidates = graft.core.Spill.materialize(top20) {} // the session store
+    val candidates = graft.core.Spill.materialize(top20) // the session store
     candidates
       .withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 10)
@@ -1367,7 +1366,7 @@ object SimilaritySearch {
   // recall-at-scale row (cli.RecallProbe, RECALL_SCALE_r15.jsonl) is
   // the acceptance test — clustered recall ≥ 0.5 at 200k where flat
   // pq_adc holds 0.000.
-  val annIvfPq: QueryDef = QueryDef.sql("q_ann_ivfpq")(
+  val annIvfPq: QueryDef = QueryDef.pinned("q_ann_ivfpq")(
     s"""WITH n AS ($normedSql),
        |c AS (SELECT vec_id AS cid, v AS cv, nrm AS cnrm FROM n
        |     WHERE vec_id % 50 = 0 AND vec_id < $IvfCentroidCap),
@@ -1441,16 +1440,16 @@ object SimilaritySearch {
        |  (PARTITION BY query_id ORDER BY cosine DESC, neighbor_id) AS rnk
        |  FROM rerank)
        |SELECT query_id, neighbor_id, adc_d2, cosine, rnk FROM ranked
-       |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+       |WHERE rnk <= 3 ORDER BY query_id, rnk""".stripMargin) { (s, dir, pins) =>
     val n = normed(s, dir)
     val c = n.filter(col("vec_id") % 50 === 0 && col("vec_id") < IvfCentroidCap)
       .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cnrm"))
     // coarse assignment (one cell per vector) + residual v − c
     val nb = assignNearest(n, c)
-    val res = nb.join(broadcast(c), "cid")
+    // seeds, training members, and the encode pass
+    val res = pins.persist(nb.join(broadcast(c), "cid")
       .select(col("vec_id"), col("cid"),
-        zip_with(col("v"), col("cv"), (x, cc) => x - cc).as("r"))
-      .persist() // seeds, training members, and the encode pass
+        zip_with(col("v"), col("cv"), (x, cc) => x - cc).as("r")))
     def subspaces(df: DataFrame, idOut: String, vecCol: String, out: String) = {
       val keep = col(df.columns.head).as(idOut) +:
         df.columns.tail.filterNot(_ == vecCol).map(col).toSeq
@@ -1522,11 +1521,10 @@ object SimilaritySearch {
     // consumers need. k2 is 1-based dense per subspace (row_number
     // over k), so the flat codebook in k2 order maps slot i back to
     // k2 = i + 1.
-    val cb1flat = cb1.groupBy("s")
+    val cb1flat = pins.persist(cb1.groupBy("s")
       .agg(array_sort(collect_list(struct(col("k2"), col("cs")))).as("kcs"))
       .select(col("s"),
-        flatten(transform(col("kcs"), p => p.getField("cs"))).as("flat"))
-      .persist()
+        flatten(transform(col("kcs"), p => p.getField("cs"))).as("flat")))
     cb1flat.count()
     // corpus code relation: (vec_id, cell cid, 8 trained codes in
     // subspace order) — the bytes-per-vector structure at scale.
@@ -1588,14 +1586,10 @@ object SimilaritySearch {
       .select(col("query_id"), col("neighbor_id"), col("adc_d2"),
         Vectors.cosine(col("qv"), col("v"), col("qnrm"), col("nrm")).as("cosine"))
     val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("neighbor_id"))
-    val out = rerank.withColumn("rnk", row_number().over(w))
+    rerank.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 3)
       .select("query_id", "neighbor_id", "adc_d2", "cosine", "rnk")
       .orderBy("query_id", "rnk")
-    graft.core.Spill.materialize(out) {
-      res.unpersist(blocking = false)
-      cb1flat.unpersist(blocking = false)
-    }
   }
 
   val all: Seq[QueryDef] = Seq(

@@ -335,7 +335,7 @@ object Streaming {
       Ingest.drainBatches(Ingest.eventsStream(s, dir)
         .withColumn("_ver", unix_micros(col("ts"))))(store.upsert)
       val out = lastPerUser(store.read(s))
-      graft.core.Spill.materialize(out)(())
+      graft.core.Spill.materialize(out)
     }
   }
 
@@ -364,7 +364,7 @@ object Streaming {
         .filter(col("user_id") % 7 === 0)
         .withColumn("_ver", unix_micros(cutoff)), 1)
       val out = lastPerUser(store.read(s))
-      graft.core.Spill.materialize(out)(())
+      graft.core.Spill.materialize(out)
     }
   }
 
@@ -390,7 +390,7 @@ object Streaming {
         .groupBy(col("es_index").as("idx"))
         .agg(count(lit(1)).as("n"))
         .orderBy("idx")
-      graft.core.Spill.materialize(out)(())
+      graft.core.Spill.materialize(out)
     }
   }
 
@@ -896,7 +896,7 @@ object Streaming {
       val decoded = decodeIngest(exchange.read(s, "events"))
         .orderBy("event_id")
       // materialize before the broker dies: the consumer scan is lazy
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -922,7 +922,7 @@ object Streaming {
       val decoded = Ingest.decodeJsonWire(exchange.read(s, "events-idem"))
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -959,7 +959,7 @@ object Streaming {
       val decoded = Ingest.decodeJsonWire(committed)
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1029,7 +1029,7 @@ object Streaming {
         require(w2 >= secondN && w2 <= secondN + tail,
           s"handover must re-read at most the uncommitted tail ($w2 vs $secondN+$tail)")
         graft.core.Spill.materialize(
-          wave1.union(wave2).dropDuplicates("event_id").orderBy("event_id"))(())
+          wave1.union(wave2).dropDuplicates("event_id").orderBy("event_id"))
       } finally admin.close()
     }
   }
@@ -1073,7 +1073,7 @@ object Streaming {
           concat(lit("events-"), col("event_type"))).isEmpty,
         "a row surfaced from the wrong topic")
       graft.core.Spill.materialize(
-        out.drop("__topic").orderBy("event_id"))(())
+        out.drop("__topic").orderBy("event_id"))
     }
   }
 
@@ -1115,7 +1115,7 @@ object Streaming {
           concat(lit("route-"), col("event_type"))).isEmpty,
         "a row surfaced from the wrong topic")
       graft.core.Spill.materialize(
-        decoded.drop("__topic").orderBy("event_id"))(())
+        decoded.drop("__topic").orderBy("event_id"))
     }
   }
 
@@ -1151,7 +1151,7 @@ object Streaming {
         .load()
       val decoded = decodeIngest(consumed)
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1185,7 +1185,7 @@ object Streaming {
         .load()
       val decoded = decodeIngest(consumed)
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1235,7 +1235,7 @@ object Streaming {
         .load()
       val decoded = decodeIngest(consumed)
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1281,7 +1281,7 @@ object Streaming {
         .load()
       val decoded = decodeIngest(consumed)
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1334,7 +1334,7 @@ object Streaming {
       drain(s"127.0.0.1:$deadPort,127.0.0.1:${cluster.brokers(1).port}")
       val decoded = decodeIngest(s.read.parquet(outDir))
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1462,7 +1462,7 @@ object Streaming {
           val union = readAssigned(leaderAssign).unionAll(readAssigned(followerAssign))
           val decoded = decodeIngest(union)
             .orderBy("event_id")
-          val out = graft.core.Spill.materialize(decoded)(())
+          val out = graft.core.Spill.materialize(decoded)
           // members commit their end positions under the live generation
           val ends = union.groupBy("partition")
             .agg(org.apache.spark.sql.functions.max("offset").as("mx"))
@@ -1562,7 +1562,7 @@ object Streaming {
         .load()
       val decoded = decodeIngest(consumed)
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1612,7 +1612,7 @@ object Streaming {
         .decodeEventsResolving(consumed,
           graft.kafka.RegistryAvro.EventSchemaV2Json, registry.baseUrl)
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1637,7 +1637,7 @@ object Streaming {
       val decoded = graft.core.AvroCodec.decodeEvents(consumed)
         .orderBy("event_id")
       // materialize before the broker dies: the consumer scan is lazy
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1658,7 +1658,7 @@ object Streaming {
         .dropDuplicates("event_id")
         .select("event_id", "user_id", "event_type", "value")
         .orderBy("event_id")
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1689,7 +1689,7 @@ object Streaming {
       val out = Ingest.runToMemory(decodeIngest(stream)).orderBy("event_id")
       // materialize before the broker dies: the memory-sink table read
       // is eager, but keep the same discipline as the batch wire twins
-      graft.core.Spill.materialize(out)(())
+      graft.core.Spill.materialize(out)
     }
   }
 
@@ -1713,7 +1713,7 @@ object Streaming {
         .load()
       val decoded = decodeIngest(consumed).orderBy("event_id")
       // materialize before the broker dies: the batch wire scan is lazy
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 
@@ -1735,7 +1735,7 @@ object Streaming {
         .option("host", "127.0.0.1").option("port", broker.port.toString)
         .option("topic", "events")
         .load()
-      graft.core.Spill.materialize(decodeIngest(consumed).orderBy("event_id"))(())
+      graft.core.Spill.materialize(decodeIngest(consumed).orderBy("event_id"))
     }
   }
 
@@ -1807,7 +1807,7 @@ object Streaming {
       val out = store.read(s)
         .select("hour_epoch", "event_type", "n", "sum_value")
         .orderBy("hour_epoch", "event_type")
-      graft.core.Spill.materialize(out)(())
+      graft.core.Spill.materialize(out)
     }
   }
 
@@ -1868,7 +1868,7 @@ object Streaming {
           .as("d"))
         .select(col("d.*"))
         .orderBy("event_id")
-      graft.core.Spill.materialize(out)(())
+      graft.core.Spill.materialize(out)
     }
   }
 
@@ -2037,7 +2037,7 @@ object Streaming {
         .select("user_id", "event_id", "event_type", "value")
         .orderBy("user_id")
       // materialize before the broker dies: the consumer scan is lazy
-      graft.core.Spill.materialize(decoded)(())
+      graft.core.Spill.materialize(decoded)
     }
   }
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.{QueryDef, Tables}
+import graft.core.{Pins, QueryDef, Spill, Tables}
 import graft.ops.Text
 
 /** Text-analysis + dedup operators over the `documents` table, each with
@@ -31,19 +31,6 @@ object TextAnalysis {
   private def docs(s: SparkSession, dir: String) =
     Tables.documents(s, dir)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-
-  /** Eagerly materialize `result` (to a temp parquet — never to the
-    * driver), then drop the persisted inputs it was built from.
-    * Self-joins recompute a relation's whole upstream chain once per
-    * reference (a sig relation referenced 4× costs 4 full
-    * tokenize→shingle→hash passes), so the expensive intermediate is
-    * persisted — and since the bench runs every query in one session,
-    * the cache must be released as soon as the result is out.
-    */
-  private def materialized(result: DataFrame, cached: DataFrame*): DataFrame =
-    graft.core.Spill.materialize(result) {
-      cached.foreach(_.unpersist(blocking = false))
-    }
 
   private def listLit(words: Seq[String]) = words.map(w => s"'$w'").mkString("[", ", ", "]")
   private def hitsSql(words: Seq[String]) =
@@ -401,7 +388,7 @@ object TextAnalysis {
   // MinHash-LSH near-dup candidates: explode band keys, equi-join on
   // (band index, band hash), distinct pairs. This is the 100 TB path:
   // a shuffle on band hash, never an O(n²) compare.
-  val minhashPairs: QueryDef = QueryDef.sql("q_minhash_pairs")(
+  val minhashPairs: QueryDef = QueryDef.pinned("q_minhash_pairs")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |sh AS (SELECT doc_id, $shinglesSql AS sh FROM base),
        |sig AS (SELECT doc_id, ${sigSqls.mkString(", ")} FROM sh),
@@ -413,24 +400,22 @@ object TextAnalysis {
        |FROM ex a JOIN ex b
        |  ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
        |  AND a.doc_id < b.doc_id
-       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
     // the self-join references `banded` twice — persist the tiny
     // signature relation so tokenize→shingle→hash runs once, not twice
-    val sig = Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K)
-      .persist()
+    val sig = pins.persist(Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K))
     val banded = sig
       .select(col("doc_id"), array(Text.lshBandCols(2, K): _*).as("bands"))
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
     val a = banded.as("a")
     val b = banded.as("b")
-    val pairs = a.join(b,
+    a.join(b,
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .distinct()
       .orderBy("doc_a", "doc_b")
-    materialized(pairs, sig)
   }
 
   // Frequent-bucket skew guard for the LSH band join. A corpus with one
@@ -460,7 +445,7 @@ object TextAnalysis {
        |sz AS (SELECT band_idx, band_hash, COUNT(*) AS bucket_n, MIN(doc_id) AS rep_doc
        |       FROM ex GROUP BY 1, 2)""".stripMargin
 
-  val minhashPairsCapped: QueryDef = QueryDef.sql("q_minhash_pairs_capped")(
+  val minhashPairsCapped: QueryDef = QueryDef.pinned("q_minhash_pairs_capped")(
     s"""WITH $bandExSql,
        |exn AS (
        |  SELECT ex.doc_id, ex.band_idx, ex.band_hash, sz.bucket_n, sz.rep_doc
@@ -474,35 +459,31 @@ object TextAnalysis {
        |  UNION ALL
        |  SELECT rep_doc AS doc_a, doc_id AS doc_b FROM exn
        |  WHERE bucket_n > $BandBucketCap AND doc_id != rep_doc)
-       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val sig = Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K)
-      .persist()
+       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
+    val sig = pins.persist(Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K))
     val banded = sig
       .select(col("doc_id"), array(Text.lshBandCols(2, K): _*).as("bands"))
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    val out = Text.cappedBandEdges(banded, "doc_id", BandBucketCap)
+    Text.cappedBandEdges(banded, "doc_id", BandBucketCap)
       .orderBy("doc_a", "doc_b")
-    materialized(out, sig)
   }
 
   // Observability twin — "no silent caps": the buckets the guard
   // star-compressed, with their sizes and representatives. A deployment
   // alerts on this relation; at sf0.01 it is the four 3-doc buckets.
-  val minhashHotBuckets: QueryDef = QueryDef.sql("q_minhash_hot_buckets")(
+  val minhashHotBuckets: QueryDef = QueryDef.pinned("q_minhash_hot_buckets")(
     s"""WITH $bandExSql
        |SELECT band_idx, band_hash, bucket_n, rep_doc FROM sz
        |WHERE bucket_n > $BandBucketCap
-       |ORDER BY band_idx, band_hash""".stripMargin) { (s, dir) =>
-    val sig = Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K)
-      .persist()
+       |ORDER BY band_idx, band_hash""".stripMargin) { (s, dir, pins) =>
+    val sig = pins.persist(Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K))
     val banded = sig
       .select(col("doc_id"), array(Text.lshBandCols(2, K): _*).as("bands"))
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
-    val out = banded.groupBy("band_idx", "band_hash")
+    banded.groupBy("band_idx", "band_hash")
       .agg(count(lit(1)).as("bucket_n"), min(col("doc_id")).as("rep_doc"))
       .filter(col("bucket_n") > lit(BandBucketCap))
       .orderBy("band_idx", "band_hash")
-    materialized(out, sig)
   }
 
   // N-gram (unigram-set) Jaccard near-dup, blocked by (lang, n_chars):
@@ -525,16 +506,16 @@ object TextAnalysis {
 
   /** Unfiltered pair stats: (doc_a, doc_b, n_a, n_b, inter) for every
     * blocked candidate pair. The exploded-token relation feeds both
-    * sides of the self-join, so it comes back PERSISTED — the second
-    * element; callers must unpersist it once the stats are materialized.
+    * sides of the self-join, so it is persisted in `pins` and comes back
+    * as the second element, for a caller that can drop it early.
     */
-  private[catalog] def tokenJaccardStats(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val ex = docs(s, dir)
+  private[catalog] def tokenJaccardStats(s: SparkSession, dir: String,
+      pins: Pins): (DataFrame, DataFrame) = {
+    val ex = pins.persist(docs(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         array_distinct(Text.tokens(col("text"))).as("dtok"))
       .select(col("doc_id"), col("lang"), col("n_chars"), size(col("dtok")).as("n"),
-        explode(col("dtok")).as("t"))
-      .persist()
+        explode(col("dtok")).as("t")))
     val stats = ex.as("a").join(ex.as("b"),
         col("a.t") === col("b.t") && col("a.lang") === col("b.lang") &&
           col("a.n_chars") === col("b.n_chars") && col("a.doc_id") < col("b.doc_id"))
@@ -544,7 +525,7 @@ object TextAnalysis {
     (stats, ex)
   }
 
-  val ngramJaccard: QueryDef = QueryDef.sql("q_ngram_jaccard")(
+  val ngramJaccard: QueryDef = QueryDef.pinned("q_ngram_jaccard")(
     s"""WITH $distinctTokenExSql,
        |pairs AS (
        |  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, a.n AS n_a, b.n AS n_b,
@@ -556,15 +537,14 @@ object TextAnalysis {
        |SELECT doc_a, doc_b, inter, n_a + n_b - inter AS uni,
        |  inter / (n_a + n_b - inter) AS jaccard
        |FROM pairs WHERE inter / (n_a + n_b - inter) >= $JaccardThreshold
-       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val (stats, ex) = tokenJaccardStats(s, dir)
-    val result = stats
+       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
+    val (stats, _) = tokenJaccardStats(s, dir, pins)
+    stats
       .select(col("doc_a"), col("doc_b"), col("inter"),
         (col("n_a") + col("n_b") - col("inter")).as("uni"),
         (col("inter") / (col("n_a") + col("n_b") - col("inter"))).as("jaccard"))
       .filter(col("jaccard") >= JaccardThreshold)
       .orderBy("doc_a", "doc_b")
-    materialized(result, ex)
   }
 
   // SimHash per doc + near-dup pairs by hamming distance, blocked on lang.
@@ -663,14 +643,14 @@ object TextAnalysis {
 
   /** Exact intersection stats `(doc_a, doc_b, n_a, n_b, inter)` for
     * every LSH-band candidate pair — the Spark twin of
-    * [[minhashVerifiedCte]]. ONE persisted shingle relation (returned
-    * second; callers unpersist after materializing) feeds signature
+    * [[minhashVerifiedCte]]. ONE shingle relation persisted in `pins`
+    * (returned second, for a caller that can drop it early) feeds signature
     * generation (min is duplicate-insensitive), candidate banding, and
     * the exact-Jaccard verification — the CPU-heavy tokenize/shingle
     * chain runs once.
     */
   private[catalog] def minhashVerifiedStats(
-      s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+      s: SparkSession, dir: String, pins: Pins): (DataFrame, DataFrame) = {
     // ONE per-DOC cached relation computed projection-locally by the
     // native one-pass expressions: the k-component signature
     // (MinHashSig60 — the q_minhash_sig scale path) plus the distinct
@@ -685,14 +665,13 @@ object TextAnalysis {
     // or shuffled (guide §2.3: shuffle keys, not payloads).
     graft.functions.MinHashSig60.register(s)
     graft.functions.ShingleHash60.registerDistinct(s)
-    val perDoc = Tables.documents(s, dir)
+    val perDoc = pins.persist(Tables.documents(s, dir)
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
       .select(col("doc_id"), Text.tokens(col("text")).as("__toks"))
       .select(col("doc_id"),
         graft.functions.MinHashSig60.minhashSig60(col("__toks"), 3, K).as("__sig"),
         graft.functions.ShingleHash60.shingleHash60Distinct(col("__toks"), 3)
-          .as("__dsh"))
-      .persist()
+          .as("__dsh")))
     // fill the cache EAGERLY: this relation feeds several AQE shuffle
     // branches (both band sides, both verify sides) which materialize
     // concurrently — with a lazy persist each raced to compute the
@@ -727,18 +706,17 @@ object TextAnalysis {
     (stats, perDoc)
   }
 
-  val minhashVerified: QueryDef = QueryDef.sql("q_minhash_verified")(
+  val minhashVerified: QueryDef = QueryDef.pinned("q_minhash_verified")(
     s"""WITH $minhashVerifiedCte
        |SELECT doc_a, doc_b, inter, n_a + n_b - inter AS uni,
        |  inter / (n_a + n_b - inter) AS jaccard
-       |FROM inter ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val (stats, shingled) = minhashVerifiedStats(s, dir)
-    val result = stats
+       |FROM inter ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
+    val (stats, _) = minhashVerifiedStats(s, dir, pins)
+    stats
       .select(col("doc_a"), col("doc_b"), col("inter"),
         (col("n_a") + col("n_b") - col("inter")).as("uni"),
         (col("inter") / (col("n_a") + col("n_b") - col("inter"))).as("jaccard"))
       .orderBy("doc_a", "doc_b")
-    materialized(result, shingled)
   }
 
   // -------------------------------------------------------------------
@@ -776,7 +754,7 @@ object TextAnalysis {
   // verify returns EXACTLY the hamming <= 5 pair set while joining on
   // 10-bit band keys instead of comparing all pairs (Manku et al.'s
   // web-dedup blocking, the O(n·bands) scale path).
-  val simhash60NearDup: QueryDef = QueryDef.sql("q_simhash60_neardup")(
+  val simhash60NearDup: QueryDef = QueryDef.pinned("q_simhash60_neardup")(
     s"""WITH $sig60Cte,
        |ex AS (SELECT doc_id, s, b AS band_idx, (s >> (10 * b)) & 1023 AS band_val
        |       FROM sig CROSS JOIN (SELECT UNNEST(generate_series(0, 5)) AS b) bb),
@@ -787,18 +765,17 @@ object TextAnalysis {
        |          AND a.doc_id < b.doc_id)
        |SELECT doc_a, doc_b, CAST(bit_count(xor(s_a, s_b)) AS BIGINT) AS hamming
        |FROM cand WHERE bit_count(xor(s_a, s_b)) <= 5
-       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
     graft.functions.SimHash60.register(s)
     // persist: both band-join sides would otherwise re-tokenize + re-hash
-    val sig = docs(s, dir)
+    val sig = pins.persist(docs(s, dir)
       .select(col("doc_id"),
-        graft.functions.SimHash60.simhash60(Text.tokens(col("text"))).as("s"))
-      .persist()
+        graft.functions.SimHash60.simhash60(Text.tokens(col("text"))).as("s")))
     val banded = sig.select(col("doc_id"), col("s"),
       posexplode(array((0 until 6).map(i =>
         shiftright(col("s"), 10 * i).bitwiseAND(lit(1023L))): _*))
         .as(Seq("band_idx", "band_val")))
-    val pairs = banded.as("a").join(banded.as("b"),
+    banded.as("a").join(banded.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -809,7 +786,6 @@ object TextAnalysis {
         bit_count(col("s_a").bitwiseXOR(col("s_b"))).cast("long").as("hamming"))
       .filter(col("hamming") <= 5)
       .orderBy("doc_a", "doc_b")
-    materialized(pairs, sig)
   }
 
   // Edit-distance fuzzy matching (the record-linkage complement to the
@@ -877,16 +853,16 @@ object TextAnalysis {
   // not a better plan — is what shrinks this query at 100 TB: hence
   // the ed ≤ 6 twin below is the BENCHED form (its output is
   // near-linear in the corpus) and both ed ≤ 18 forms are auditOnly.
-  private def edJoinPlan(s: SparkSession, dir: String, k: Int): DataFrame = {
+  private def edJoinPlan(s: SparkSession, dir: String, k: Int): DataFrame = Spill.scoped { pins =>
     val q = 2              // bigrams
     val pfx = k * q + 1    // prefix length |X| − T + 1 ≤ k·q + 1
     val minLong = k * q + 2 // T ≥ 1 ⇔ max(len) ≥ k·q + 2
-    val n = docs(s, dir)
+    // referenced by units, shorts, and both verify sides
+    val n = pins.persist(docs(s, dir)
       .select(col("doc_id"), col("lang"), col("n_chars"),
         substring(concat_ws(" ", array_sort(Text.tokens(col("text")))), 1, 60)
           .as("canon"))
-      .withColumn("len", length(col("canon")))
-      .persist() // referenced by units, shorts, and both verify sides
+      .withColumn("len", length(col("canon"))))
     // occurrence-numbered bigram units (the multiset→set expansion the
     // count-filter theorem is stated over)
     val grams = n.filter(col("len") >= 2)
@@ -922,14 +898,13 @@ object TextAnalysis {
           col("a.n_chars") === col("b.n_chars") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val pairs = candLong.unionAll(candShort)
+    candLong.unionAll(candShort)
       .join(n.select(col("doc_id").as("doc_a"), col("canon").as("ca")), "doc_a")
       .join(n.select(col("doc_id").as("doc_b"), col("canon").as("cb")), "doc_b")
       .select(col("doc_a"), col("doc_b"),
         levenshtein(col("ca"), col("cb")).as("edit_dist"))
       .filter(col("edit_dist") <= k)
       .orderBy("doc_a", "doc_b")
-    materialized(pairs, n)
   }
 
   val levenshteinPairsBanded: QueryDef =
@@ -953,7 +928,7 @@ object TextAnalysis {
   // for exact verification at scale (q_minhash_verified is the exact
   // counterpart on the same candidates; the estimate needs only the
   // K-long signatures, never the shingle sets).
-  val minhashJaccardEst: QueryDef = QueryDef.sql("q_minhash_jaccard_est")(
+  val minhashJaccardEst: QueryDef = QueryDef.pinned("q_minhash_jaccard_est")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |sh AS (SELECT doc_id, $shinglesSql AS sh FROM base),
        |sig AS (SELECT doc_id, ${sigSqls.mkString(", ")} FROM sh),
@@ -976,12 +951,11 @@ object TextAnalysis {
        |FROM cand c
        |JOIN sig sa ON sa.doc_id = c.doc_a
        |JOIN sig sb ON sb.doc_id = c.doc_b
-       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
+       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
     // `sig` is referenced FOUR times (both band-join sides + sa + sb);
     // unpersisted, each reference recomputes the full tokenize→shingle→
     // K×hash chain — measured 7.4s vs 1.7s for one sig pass at sf0.1
-    val sig = Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K)
-      .persist()
+    val sig = pins.persist(Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K))
     val banded = sig
       .select(col("doc_id"), array(Text.lshBandCols(2, K): _*).as("bands"))
       .select(col("doc_id"), posexplode(col("bands")).as(Seq("band_idx", "band_hash")))
@@ -996,13 +970,12 @@ object TextAnalysis {
     val nMatch = (0 until K).map(i =>
       when(col(s"a_sig_$i") === col(s"b_sig_$i"), 1).otherwise(0))
       .reduce(_ + _)
-    val est = cand.join(sa, col("a_doc_id") === col("doc_a"))
+    cand.join(sa, col("a_doc_id") === col("doc_a"))
       .join(sb, col("b_doc_id") === col("doc_b"))
       .select(col("doc_a"), col("doc_b"),
         nMatch.cast("long").as("n_match"),
         (nMatch / K).as("jaccard_est"))
       .orderBy("doc_a", "doc_b")
-    materialized(est, sig)
   }
 
   // Unigram Shannon entropy + perplexity per document — the
@@ -1135,8 +1108,9 @@ object TextAnalysis {
     // the two-round query that nested (round 2's two branches each
     // re-ran round 1's two branches: 16 Window nodes in the r16 plan).
     // Checkpointing per round is exactly what a real vocab-build loop
-    // does (see q_bpe_merge_round2's scaladoc); Bench/Verify sweep the
-    // pinned blocks after the query materializes.
+    // does (see q_bpe_merge_round2's scaladoc). The returned frame reads
+    // the checkpoint, so it is a result-lifetime pin (graft.core.Spill):
+    // Session.sweep releases it after the consumer's write.
     val p = seq.withColumn("tn", lead(col("t"), 1).over(wDoc))
       .localCheckpoint()
     val cnt = p.filter(col("tn").isNotNull)
@@ -1207,7 +1181,7 @@ object TextAnalysis {
   // estimate (matching signature components / k). At 100 TB the corpus
   // never self-joins and the incoming side is tiny — per-batch cost is
   // O(|incoming| + collisions), independent of corpus size.
-  val dedupIncremental: QueryDef = QueryDef.sql("q_dedup_incremental")(
+  val dedupIncremental: QueryDef = QueryDef.pinned("q_dedup_incremental")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |sh AS (SELECT doc_id, $shinglesSql AS sh FROM base),
        |sig AS (SELECT doc_id, ${sigSqls.mkString(", ")} FROM sh),
@@ -1224,9 +1198,8 @@ object TextAnalysis {
        |  (${(0 until K).map(i => s"CASE WHEN a.sig_$i = b.sig_$i THEN 1 ELSE 0 END").mkString(" + ")}) / ${K}.0 AS est_jaccard
        |FROM cand JOIN sig a ON a.doc_id = doc_new
        |          JOIN sig b ON b.doc_id = doc_corpus
-       |ORDER BY doc_new, doc_corpus""".stripMargin) { (s, dir) =>
-    val sig = Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K)
-      .persist()
+       |ORDER BY doc_new, doc_corpus""".stripMargin) { (s, dir, pins) =>
+    val sig = pins.persist(Text.minhashSigDF(Tables.documents(s, dir), "doc_id", "text", 3, K))
     val banded = sig
       .select(col("doc_id"), posexplode(array(Text.lshBandCols(2, K): _*))
         .as(Seq("band_idx", "band_hash")))
@@ -1240,12 +1213,11 @@ object TextAnalysis {
     val est = (0 until K)
       .map(i => when(col("a.sig_" + i) === col("b.sig_" + i), 1).otherwise(0))
       .reduce(_ + _) / lit(K.toDouble)
-    val scored = cand
+    cand
       .join(sig.as("a"), col("doc_new") === col("a.doc_id"))
       .join(sig.as("b"), col("doc_corpus") === col("b.doc_id"))
       .select(col("doc_new"), col("doc_corpus"), est.as("est_jaccard"))
       .orderBy("doc_new", "doc_corpus")
-    materialized(scored, sig)
   }
 
   // STREAMING incremental dedup — q_dedup_incremental's semantics as a
@@ -1376,20 +1348,19 @@ object TextAnalysis {
     */
   private val SubL = 16
 
-  private[graft] def substringSpans(d: DataFrame, L: Int): DataFrame = {
+  private[graft] def substringSpans(d: DataFrame, L: Int): DataFrame = Spill.scoped { pins =>
     graft.functions.ShingleHash60.register(d.sparkSession)
-    val h = d
+    val h = pins.persist(d
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
       .filter(size(col("toks")) >= L)
       .select(col("doc_id"),
         posexplode(graft.functions.ShingleHash60
           .shingleHash60(col("toks"), L)).as(Seq("pos0", "gh")))
-      .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("gh"))
-      .persist()
+      .select(col("doc_id"), (col("pos0") + 1).cast("long").as("pos"), col("gh")))
     val dup = h.groupBy("gh").agg(count(lit(1)).as("n"))
       .filter(col("n") >= 2).select("gh")
     val w = Window.partitionBy("doc_id").orderBy("pos")
-    val spans = h.join(dup, Seq("gh"), "left_semi")
+    h.join(dup, Seq("gh"), "left_semi")
       .withColumn("run", col("pos") - row_number().over(w))
       .groupBy(col("doc_id"), col("run"))
       .agg(min(col("pos")).as("span_start"),
@@ -1397,7 +1368,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start") + 1).as("span_len"))
       .orderBy("doc_id", "span_start")
-    materialized(spans, h)
   }
 
   val substringDedup: QueryDef = QueryDef.sql("q_substring_dedup")(
@@ -1506,7 +1476,7 @@ object TextAnalysis {
       .orderBy("doc_id")
   }
 
-  val dupNgramSpans: QueryDef = QueryDef.sql("q_dup_ngram_spans")(
+  val dupNgramSpans: QueryDef = QueryDef.pinned("q_dup_ngram_spans")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |g AS (SELECT doc_id, UNNEST($shingles8Sql) AS g FROM base),
        |h AS (SELECT doc_id,
@@ -1518,13 +1488,12 @@ object TextAnalysis {
        |        FROM h GROUP BY doc_id)
        |SELECT doc_id, n_spans, n_dup_spans,
        |  CAST(n_dup_spans AS DOUBLE) / CAST(n_spans AS DOUBLE) AS dup_frac
-       |FROM per ORDER BY doc_id""".stripMargin) { (s, dir) =>
+       |FROM per ORDER BY doc_id""".stripMargin) { (s, dir, pins) =>
     graft.functions.ShingleHash60.register(s)
-    val h = docs(s, dir)
+    val h = pins.persist(docs(s, dir)
       .select(col("doc_id"),
         explode(graft.functions.ShingleHash60
-          .shingleHash60(Text.tokens(col("text")), 8)).as("gh"))
-      .persist()
+          .shingleHash60(Text.tokens(col("text")), 8)).as("gh")))
     val dup = h.groupBy("gh")
       .agg(min(col("doc_id")).as("mn"), max(col("doc_id")).as("mx"))
       .filter(col("mn") =!= col("mx"))
@@ -1532,13 +1501,12 @@ object TextAnalysis {
     val tot = h.groupBy("doc_id").agg(count(lit(1)).as("n_spans"))
     val dups = h.join(dup, Seq("gh"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_dup_spans"))
-    val result = tot.join(dups, Seq("doc_id"), "left")
+    tot.join(dups, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_spans"),
         coalesce(col("n_dup_spans"), lit(0L)).as("n_dup_spans"),
         (coalesce(col("n_dup_spans"), lit(0L)).cast("double") /
           col("n_spans").cast("double")).as("dup_frac"))
       .orderBy("doc_id")
-    materialized(result, h)
   }
 
   // Cross-SOURCE overlap matrix — the "how much does dump A repeat
@@ -1587,7 +1555,7 @@ object TextAnalysis {
   // dictionaries join by token (AQE broadcasts them at small SF,
   // shuffle-joins beyond the threshold — LM vocabularies grow
   // sublinearly, so either is fine).
-  val importanceWeights: QueryDef = QueryDef.sql("q_importance_weights")(
+  val importanceWeights: QueryDef = QueryDef.pinned("q_importance_weights")(
     s"""WITH base AS (SELECT doc_id, lang, $toksSql AS toks FROM documents),
        |tok AS (SELECT doc_id, lang, UNNEST(toks) AS t FROM base),
        |tf AS (SELECT doc_id, t, COUNT(*) AS tf FROM tok GROUP BY 1, 2),
@@ -1609,11 +1577,10 @@ object TextAnalysis {
        |  FROM term GROUP BY doc_id)
        |SELECT b.doc_id, b.lang, sc.weight
        |FROM sc JOIN base b ON b.doc_id = sc.doc_id
-       |ORDER BY b.doc_id""".stripMargin) { (s, dir) =>
+       |ORDER BY b.doc_id""".stripMargin) { (s, dir, pins) =>
     val base = docs(s, dir).select(col("doc_id"), col("lang"),
       Text.tokens(col("text")).as("toks"))
-    val tok = base.select(col("doc_id"), col("lang"), explode(col("toks")).as("t"))
-      .persist()
+    val tok = pins.persist(base.select(col("doc_id"), col("lang"), explode(col("toks")).as("t")))
     val tf = tok.groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
     // ONE per-token pass carries both LM dictionaries (corpus count +
     // conditional target count — a token with no English occurrences
@@ -1642,10 +1609,9 @@ object TextAnalysis {
         transform(sort_array(collect_list(struct(col("t"), col("w")))),
           p => p.getField("w")),
         lit(0.0), (a, x) => a + x), 6).as("weight"))
-    val result = sc.join(base.select("doc_id", "lang"), Seq("doc_id"))
+    sc.join(base.select("doc_id", "lang"), Seq("doc_id"))
       .select("doc_id", "lang", "weight")
       .orderBy("doc_id")
-    materialized(result, tok)
   }
 
   // Sparse lexical retrieval through an INVERTED INDEX — the BM25-family
@@ -1656,7 +1622,7 @@ object TextAnalysis {
   // broadcast, so the corpus posting list never shuffles for the match —
   // only the (query, doc) partial scores shuffle, and the per-pair fold
   // is token-ordered for bit-stable sums.
-  val tfidfRetrieval: QueryDef = QueryDef.sql("q_tfidf_retrieval")(
+  val tfidfRetrieval: QueryDef = QueryDef.pinned("q_tfidf_retrieval")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |tok AS (SELECT doc_id, t, COUNT(*) AS tf
        |        FROM (SELECT doc_id, UNNEST(toks) AS t FROM base) u
@@ -1674,11 +1640,10 @@ object TextAnalysis {
        |r AS (SELECT *, ROW_NUMBER() OVER
        |  (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk FROM sc)
        |SELECT query_id, doc_id, score, rnk FROM r WHERE rnk <= 5
-       |ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
+       |ORDER BY query_id, rnk""".stripMargin) { (s, dir, pins) =>
     val base = docs(s, dir).select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-    val tok = base.select(col("doc_id"), explode(col("toks")).as("t"))
-      .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      .persist()
+    val tok = pins.persist(base.select(col("doc_id"), explode(col("toks")).as("t"))
+      .groupBy("doc_id", "t").agg(count(lit(1)).as("tf")))
     val dfreq = tok.groupBy("t").agg(count(lit(1)).as("df"))
     val q = tok.filter(col("doc_id") < 5)
       .select(col("doc_id").as("query_id"), col("t").as("qt"), col("tf").as("tfq"))
@@ -1694,11 +1659,10 @@ object TextAnalysis {
           p => p.getField("term")),
         lit(0.0), (a, x) => a + x).as("score"))
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))
-    val result = sc.withColumn("rnk", row_number().over(w))
+    sc.withColumn("rnk", row_number().over(w))
       .filter(col("rnk") <= 5)
       .select("query_id", "doc_id", "score", "rnk")
       .orderBy("query_id", "rnk")
-    materialized(result, tok)
   }
 
   // BM25 ranked retrieval (Okapi, k1=1.2, b=0.75) — the
@@ -1743,14 +1707,13 @@ object TextAnalysis {
        |  (PARTITION BY query_id ORDER BY score DESC, doc_id) AS rnk FROM sc)""".stripMargin
 
   /** Scala twin of [[bm25RankedCte]]: the full BM25 ranking
-    * `(query_id, doc_id, score, rnk)` plus the persisted term-frequency
-    * relation the caller must release (pass it to [[materialized]]).
+    * `(query_id, doc_id, score, rnk)`, its term-frequency relation
+    * persisted in `pins`.
     */
-  private[catalog] def bm25Ranked(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
+  private[catalog] def bm25Ranked(s: SparkSession, dir: String, pins: Pins): DataFrame = {
     val base = docs(s, dir).select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-    val tok = base.select(col("doc_id"), explode(col("toks")).as("t"))
-      .groupBy("doc_id", "t").agg(count(lit(1)).as("tf"))
-      .persist()
+    val tok = pins.persist(base.select(col("doc_id"), explode(col("toks")).as("t"))
+      .groupBy("doc_id", "t").agg(count(lit(1)).as("tf")))
     val dl = tok.groupBy("doc_id").agg(sum("tf").as("dl"))
     val st = dl.agg(count(lit(1)).as("n_docs"),
       (sum("dl").cast("double") / count(lit(1))).as("avgdl"))
@@ -1785,19 +1748,16 @@ object TextAnalysis {
           p => p.getField("term")),
         lit(0.0), (a, x) => a + x), 6).as("score"))
     val w = Window.partitionBy("query_id").orderBy(col("score").desc, col("doc_id"))
-    (sc.withColumn("rnk", row_number().over(w)), tok)
+    sc.withColumn("rnk", row_number().over(w))
   }
 
-  val bm25Retrieval: QueryDef = QueryDef.sql("q_bm25_retrieval")(
+  val bm25Retrieval: QueryDef = QueryDef.pinned("q_bm25_retrieval")(
     s"""WITH $bm25RankedCte
        |SELECT query_id, doc_id, score, rnk FROM bm25r WHERE rnk <= 5
-       |ORDER BY query_id, rnk""".stripMargin) { (s, dir) =>
-    val (ranked, tok) = bm25Ranked(s, dir)
-    materialized(
-      ranked.filter(col("rnk") <= 5)
-        .select("query_id", "doc_id", "score", "rnk")
-        .orderBy("query_id", "rnk"),
-      tok)
+       |ORDER BY query_id, rnk""".stripMargin) { (s, dir, pins) =>
+    bm25Ranked(s, dir, pins).filter(col("rnk") <= 5)
+      .select("query_id", "doc_id", "score", "rnk")
+      .orderBy("query_id", "rnk")
   }
 
   // Bigram language-model scoring — per-document mean log-probability
@@ -1918,7 +1878,8 @@ object TextAnalysis {
        |GROUP BY t.bucket ORDER BY t.bucket""".stripMargin) { (s, dir) =>
     // localCheckpoint: b feeds the histogram AND the final bucket join;
     // left lazy each reference re-ran the whole bigram-LM pipeline
-    // (tokenize → explode → model joins). Doc-grain rows — tiny.
+    // (tokenize → explode → model joins). Doc-grain rows — tiny. The
+    // result reads b: a result-lifetime pin (graft.core.Spill).
     val b = bigramScored(s, dir)
       .select(col("doc_id"), col("n_bigrams"), round(col("avg_logprob"), 2).as("bin"))
       .localCheckpoint()
@@ -1948,7 +1909,7 @@ object TextAnalysis {
   // per-doc removal is a distinct-position count — the shuffles carry
   // (doc_id, int64) pairs only. Output is the per-doc retention a
   // scrubbing pass would apply.
-  val substringScrub: QueryDef = QueryDef.sql("q_substring_scrub")(
+  val substringScrub: QueryDef = QueryDef.pinned("q_substring_scrub")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |w AS (SELECT doc_id, len(toks) AS n_toks,
        |        CASE WHEN len(toks) >= 8
@@ -1968,7 +1929,7 @@ object TextAnalysis {
        |  CAST(t.n_toks - COALESCE(r.n_removed, 0) AS DOUBLE) / t.n_toks
        |    AS retention
        |FROM tot t LEFT JOIN rem r ON t.doc_id = r.doc_id
-       |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
+       |ORDER BY t.doc_id""".stripMargin) { (s, dir, pins) =>
     graft.functions.ShingleHash60.register(s)
     // h carries ONLY (doc_id, pos, gh): any column derived from `text`
     // here gets project-collapsed ABOVE the Generate and re-evaluated
@@ -1976,12 +1937,11 @@ object TextAnalysis {
     // re-tokenization (size(tokens(text)) × 236k windows) before the
     // column was dropped. Short-doc capping happens at the end via
     // least(n_removed, n_toks) instead.
-    val h = docs(s, dir)
+    val h = pins.persist(docs(s, dir)
       .select(col("doc_id"),
         posexplode(graft.functions.ShingleHash60
           .shingleHash60(Text.tokens(col("text")), 8)))
-      .withColumnRenamed("col", "gh")
-      .persist()
+      .withColumnRenamed("col", "gh"))
     // fill the cache EAGERLY: AQE materializes the dup-agg and coverage
     // shuffle branches concurrently, and with a lazy persist both jobs
     // race to compute the uncached tokenize+hash relation in parallel.
@@ -2006,7 +1966,7 @@ object TextAnalysis {
     val tot = docs(s, dir)
       .select(col("doc_id"),
         size(Text.tokens(col("text"))).cast("long").as("n_toks"))
-    val result = tot.join(rem, Seq("doc_id"), "left")
+    tot.join(rem, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_toks"),
         least(coalesce(col("n_removed"), lit(0L)), col("n_toks"))
           .as("n_removed"),
@@ -2014,7 +1974,6 @@ object TextAnalysis {
           - least(coalesce(col("n_removed"), lit(0L)), col("n_toks")))
           .cast("double") / col("n_toks")).as("retention"))
       .orderBy("doc_id")
-    materialized(result, h)
   }
 
   // PMI collocations — the classic lexical-association statistic
@@ -2032,7 +1991,7 @@ object TextAnalysis {
   // BEFORE the rank so the top-25 cut cannot flip on a ulp. Min
   // support n ≥ 5 keeps the statistic out of the noise floor, as in
   // the original formulation.
-  val pmiCollocations: QueryDef = QueryDef.sql("q_pmi_collocations")(
+  val pmiCollocations: QueryDef = QueryDef.pinned("q_pmi_collocations")(
     s"""WITH base0 AS (SELECT $toksSql AS toks FROM documents),
        |base AS (SELECT toks FROM base0 WHERE len(toks) >= 2),
        |uni AS (SELECT UNNEST(toks) AS t FROM base),
@@ -2049,10 +2008,9 @@ object TextAnalysis {
        |JOIN uc ua ON ua.t = split_part(pair, ' ', 1)
        |JOIN uc ub ON ub.t = split_part(pair, ' ', 2)
        |WHERE n >= 5
-       |ORDER BY pmi DESC, pair LIMIT 25""".stripMargin) { (s, dir) =>
-    val base = docs(s, dir).select(Text.tokens(col("text")).as("toks"))
-      .filter(size(col("toks")) >= 2)
-      .persist()
+       |ORDER BY pmi DESC, pair LIMIT 25""".stripMargin) { (s, dir, pins) =>
+    val base = pins.persist(docs(s, dir).select(Text.tokens(col("text")).as("toks"))
+      .filter(size(col("toks")) >= 2))
     val uni = base.select(explode(col("toks")).as("t"))
     val uc = uni.groupBy("t").agg(count(lit(1)).as("c"))
     val nu = uni.agg(count(lit(1)).as("n_uni"))
@@ -2063,7 +2021,7 @@ object TextAnalysis {
       .select(col("pr.a").as("a"), col("pr.b").as("b"))
     val bc = bi.groupBy("a", "b").agg(count(lit(1)).as("n"))
     val nb = bi.agg(count(lit(1)).as("n_bi"))
-    val res = bc.filter(col("n") >= 5)
+    bc.filter(col("n") >= 5)
       .join(broadcast(uc.select(col("t").as("a"), col("c").as("ca"))), Seq("a"))
       .join(broadcast(uc.select(col("t").as("b"), col("c").as("cb"))), Seq("b"))
       .crossJoin(broadcast(nu))
@@ -2075,7 +2033,6 @@ object TextAnalysis {
           log(col("n").cast("double") * col("n_uni") * col("n_uni") /
             (col("n_bi").cast("double") * col("ca") * col("cb"))), 6).as("pmi"))
       .orderBy(col("pmi").desc, col("pair")).limit(25)
-    materialized(res, base)
   }
 
   // Per-source distribution drift: KL(P_source ‖ P_corpus) over unigram
@@ -2088,7 +2045,7 @@ object TextAnalysis {
   // IEEE fold so partitioning can never reorder the addition. Sources
   // whose every token matches corpus frequency score ~0; drifted ones
   // rank high.
-  val klDrift: QueryDef = QueryDef.sql("q_kl_drift")(
+  val klDrift: QueryDef = QueryDef.pinned("q_kl_drift")(
     s"""WITH base AS (
        |  SELECT source, UNNEST(toks) AS t
        |  FROM (SELECT source, $toksSql AS toks FROM documents)),
@@ -2104,10 +2061,9 @@ object TextAnalysis {
        |SELECT source, MAX(n_s) AS n_tokens,
        |  ROUND(list_reduce(list_prepend(0.0, list(term ORDER BY t)),
        |    (a, b) -> a + b), 6) AS kl
-       |FROM terms GROUP BY source ORDER BY source""".stripMargin) { (s, dir) =>
-    val tok = docs(s, dir)
-      .select(col("source"), explode(Text.tokens(col("text"))).as("t"))
-      .persist()
+       |FROM terms GROUP BY source ORDER BY source""".stripMargin) { (s, dir, pins) =>
+    val tok = pins.persist(docs(s, dir)
+      .select(col("source"), explode(Text.tokens(col("text"))).as("t")))
     val st = tok.groupBy("source", "t").agg(count(lit(1)).as("c_st"))
     val ns = tok.groupBy("source").agg(count(lit(1)).as("n_s"))
     val gt = tok.groupBy("t").agg(count(lit(1)).as("c_t"))
@@ -2122,11 +2078,10 @@ object TextAnalysis {
             (col("n_s") * col("c_t"))))
       .withColumn("rank",
         row_number().over(Window.partitionBy("source").orderBy("t")))
-    val res = terms.groupBy("source")
+    terms.groupBy("source")
       .agg(max(col("n_s")).as("n_tokens"),
         round(foldOrdered(col("term")), 6).as("kl"))
       .orderBy("source")
-    materialized(res, tok)
   }
 
   // Lexicon-based sentiment scoring (the retrieved EDBT 2016 theme —
@@ -2247,11 +2202,11 @@ object TextAnalysis {
     // ~23 task-s to this one stage at sf0.1). Exploding the scanned
     // array is a cheap long-array generate, and the array spill is
     // smaller than the exploded one.
-    val perDoc = graft.core.Spill.materialize(
+    val perDoc = Spill.materialize(
       docs(s, dir)
         .select(col("doc_id"),
           array_distinct(graft.functions.ShingleHash60
-            .shingleHash60(Text.tokens(col("text")), 3)).as("sh")))(())
+            .shingleHash60(Text.tokens(col("text")), 3)).as("sh")))
     val ex = perDoc
       .select(col("doc_id"), size(col("sh")).as("n"), explode(col("sh")).as("t"))
     val dfreq = ex.groupBy("t").agg(count(lit(1)).as("df"))
@@ -2299,7 +2254,7 @@ object TextAnalysis {
       .select(col("doc_a"), col("doc_b"), col("n_a"), col("inter"),
         (col("inter") / col("n_a")).as("containment"))
       .orderBy("doc_a", "doc_b")
-    materialized(res)
+    Spill.materialize(res)
   }
 
   // The scrub twin: drop every doc that is ≥0.8-contained in an
@@ -2319,7 +2274,7 @@ object TextAnalysis {
     val res = docs(s, dir).select("doc_id")
       .join(contained, Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
-    materialized(res)
+    Spill.materialize(res)
   }
 
   // Tokenizer-vocabulary coverage: per-doc out-of-vocabulary rate
@@ -2330,7 +2285,7 @@ object TextAnalysis {
   // both engines) → broadcast membership set; the per-doc pass is then
   // one narrow aggregation, no second shuffle of token-grain data.
   // OOV rate is a single exact-integer quotient.
-  val oovRate: QueryDef = QueryDef.sql("q_oov_rate")(
+  val oovRate: QueryDef = QueryDef.pinned("q_oov_rate")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |tok AS (SELECT doc_id, UNNEST(toks) AS t FROM base),
        |cnt AS (SELECT t, COUNT(*) AS c FROM tok GROUP BY 1),
@@ -2344,10 +2299,10 @@ object TextAnalysis {
        |  CASE WHEN COALESCE(p.n_tokens, 0) = 0 THEN 0.0
        |       ELSE p.n_oov / p.n_tokens END AS oov_rate
        |FROM base b LEFT JOIN perdoc p USING (doc_id)
-       |ORDER BY doc_id""".stripMargin) { (s, dir) =>
+       |ORDER BY doc_id""".stripMargin) { (s, dir, pins) =>
     val base = docs(s, dir)
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
-    val tok = base.select(col("doc_id"), explode(col("toks")).as("t")).persist()
+    val tok = pins.persist(base.select(col("doc_id"), explode(col("toks")).as("t")))
     val vocab = tok.groupBy("t").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("t")).limit(1000)
       .select(col("t"), lit(1).as("in_vocab"))
@@ -2355,7 +2310,7 @@ object TextAnalysis {
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_tokens"),
         count(when(col("in_vocab").isNull, 1)).as("n_oov"))
-    val res = base.select("doc_id")
+    base.select("doc_id")
       .join(perdoc, Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
@@ -2363,7 +2318,6 @@ object TextAnalysis {
         when(coalesce(col("n_tokens"), lit(0L)) === 0, lit(0.0))
           .otherwise(col("n_oov") / col("n_tokens")).as("oov_rate"))
       .orderBy("doc_id")
-    materialized(res, tok)
   }
 
   // The dataset card: per-language corpus summary a model team reads
@@ -2489,7 +2443,7 @@ object TextAnalysis {
   // `winnowSelSql` with q_winnow_fingerprint, so detector and dump
   // cannot drift. Fingerprint-set sizes ride along for a containment
   // denominator downstream.
-  val winnowNearDup: QueryDef = QueryDef.sql("q_winnow_neardup")(
+  val winnowNearDup: QueryDef = QueryDef.pinned("q_winnow_neardup")(
     s"""WITH $winnowSelSql,
        |fp AS (SELECT DISTINCT doc_id, wmin // 16777216 AS gh FROM sel),
        |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b
@@ -2499,10 +2453,10 @@ object TextAnalysis {
        |SELECT doc_a, doc_b, n_shared, sa.n_fp AS n_a, sb.n_fp AS n_b
        |FROM np JOIN sz sa ON sa.doc_id = doc_a JOIN sz sb ON sb.doc_id = doc_b
        |WHERE n_shared >= 3
-       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val fp = winnowSelection(s, dir)
+       |ORDER BY doc_a, doc_b""".stripMargin) { (s, dir, pins) =>
+    val fp = pins.persist(winnowSelection(s, dir)
       .select(col("doc_id"), expr("wmin div 16777216").as("gh"))
-      .distinct().persist()
+      .distinct())
     val a = fp.select(col("doc_id").as("doc_a"), col("gh"))
     val b = fp.select(col("doc_id").as("doc_b"), col("gh"))
     val np = a.join(b, Seq("gh"))
@@ -2510,12 +2464,11 @@ object TextAnalysis {
       .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= 3)
     val sz = fp.groupBy("doc_id").agg(count(lit(1)).as("n_fp"))
-    val result = np
+    np
       .join(sz.select(col("doc_id").as("doc_a"), col("n_fp").as("n_a")), Seq("doc_a"))
       .join(sz.select(col("doc_id").as("doc_b"), col("n_fp").as("n_b")), Seq("doc_b"))
       .select("doc_a", "doc_b", "n_shared", "n_a", "n_b")
       .orderBy("doc_a", "doc_b")
-    materialized(result, fp)
   }
 
   lazy val all: Seq[QueryDef] = Seq(

@@ -1,7 +1,6 @@
 package graft.cli
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 /** Scale-factor amplifier for the driver's synthetic testdata: reads a
@@ -102,11 +101,13 @@ object ScaleGen {
       // the bytes only within one JVM, because parquet-mr writes each
       // column chunk's `encodings` list in hash-set order. `parts`
       // sizes the upstream compute stage.
-      val staged = df.repartition(parts).localCheckpoint()
-      staged.repartition(1).sortWithinPartitions(df.columns.map(col): _*)
+      val pins = new graft.core.Pins
+      try pins.checkpoint(df.repartition(parts))
+        .repartition(1).sortWithinPartitions(df.columns.map(col): _*)
         .write.mode("overwrite")
         .option("parquet.block.size", (8 * 1024 * 1024).toString)
         .parquet(tmp)
+      finally pins.release()
       val dir = new java.io.File(tmp)
       val part = dir.listFiles().find(_.getName.endsWith(".parquet"))
         .getOrElse(sys.error(s"no part file under $tmp"))
@@ -116,11 +117,6 @@ object ScaleGen {
       } else if (target.exists) target.delete()
       java.nio.file.Files.move(part.toPath, target.toPath)
       dir.listFiles().foreach(_.delete()); dir.delete()
-      // localCheckpoint persisted the staged rows; release them
-      staged.queryExecution.logical.foreach {
-        case r: LogicalRDD => r.rdd.unpersist()
-        case _ =>
-      }
       println(s"[scalegen] $t -> $dest/$t.parquet")
     }
 

@@ -40,10 +40,11 @@ import com.sun.net.httpserver.HttpExchange
   * streaming query's overrides (state-sized shuffle partitions, the
   * RocksDB state store) live on a child session the query owns
   * (`Ingest.drain`) — so concurrent requests plan as they would alone.
-  * The one session write left is the events readers' idempotent
-  * `spark.sql.legacy.parquet.nanosAsLong=true`. Still a dashboard
-  * stand-in, not a hardened gateway: no admission control or
-  * per-request timeout.
+  * Each builder that pins intermediates releases exactly its own pins
+  * (`Spill.scoped`), never the checkpoints a concurrent request is
+  * still reading; the result-lifetime pins listed in `Spill` stay
+  * until ContextCleaner reclaims them. Still a dashboard stand-in, not
+  * a hardened gateway: no admission control or per-request timeout.
   */
 final class QueryServer(spark: SparkSession, sfDir: String, bindPort: Int = 0) {
 

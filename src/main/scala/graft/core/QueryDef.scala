@@ -27,6 +27,14 @@ object QueryDef {
   def sql(name: String)(oracle: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, build, Some(oracle))
 
+  /** [[sql]] for a builder that pins intermediates: it runs in
+    * [[Spill.scoped]], so its result is spilled and its own pins are
+    * released before the frame is returned.
+    */
+  def pinned(name: String)(oracle: String)(
+      build: (SparkSession, String, Pins) => DataFrame): QueryDef =
+    sql(name)(oracle)((s, dir) => Spill.scoped(build(s, dir, _)))
+
   /** Rows-only check: no DuckDB-expressible oracle. */
   def rowsOnly(name: String)(build: (SparkSession, String) => DataFrame): QueryDef =
     QueryDef(name, build, None)

@@ -2,21 +2,84 @@ package graft.core
 
 import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.storage.StorageLevel
+
+/** The pins one build holds: every `persist` or `localCheckpoint` it
+  * makes to reuse an intermediate goes through here, and [[release]]
+  * unpersists exactly those, never another query's. A builder gets its
+  * `Pins` from [[Spill.scoped]]; a helper that pins on its caller's
+  * behalf takes the caller's `Pins`.
+  */
+final class Pins {
+  private val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+
+  private def hold(release: () => Unit): Unit = synchronized { held += release }
+
+  /** `df.persist()` (MEMORY_AND_DISK), released with the scope. */
+  def persist(df: DataFrame): DataFrame = {
+    val p = df.persist()
+    hold(() => p.unpersist(blocking = false))
+    p
+  }
+
+  /** `df.localCheckpoint()`: eager, lineage cut. The checkpointed RDD
+    * is the `LogicalRDD` under the returned frame; that RDD is what is
+    * released.
+    */
+  def checkpoint(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint()
+    c.queryExecution.logical.foreach {
+      case r: LogicalRDD => hold(() => r.rdd.unpersist(blocking = false))
+      case _ =>
+    }
+    c
+  }
+
+  /** `rdd.persist(MEMORY_AND_DISK)`, released with the scope. */
+  def persist[T](rdd: RDD[T]): RDD[T] = {
+    val p = rdd.persist(StorageLevel.MEMORY_AND_DISK)
+    hold(() => p.unpersist(blocking = false))
+    p
+  }
+
+  /** Unpersist every recorded pin (non-blocking). Idempotent. */
+  def release(): Unit = synchronized {
+    held.foreach(_())
+    held.clear()
+  }
+}
 
 /** Materialize a result WITHOUT collecting it to the driver.
   *
   * Iterative catalog queries (connected components, PageRank, the
   * minhash self-joins) persist/localCheckpoint intermediates; those
-  * cached blocks must be released before the query returns because the
-  * bench runs the whole catalog in one session. Releasing them while the
-  * result still references their lineage would force a recompute — so
-  * the result is first written to a temporary parquet (a distributed
-  * write: each partition writes its own file, nothing funnels through
-  * the driver), the caches are dropped, and a fresh scan of the spill is
-  * returned. At 100 TB the result of e.g. PageRank is one row per node —
-  * cluster-sized — and this path never materializes it on any single
-  * node, unlike a `collect()`.
+  * pins must be released before the query returns, because queries
+  * share one long-lived session (Bench and Verify run the whole
+  * catalog in one, `ServeMain` runs requests side by side on one).
+  * Releasing them while the result still references their lineage
+  * would force a recompute, or fail outright for a checkpoint, so
+  * [[scoped]] first writes the result to a temporary parquet (a
+  * distributed write: each partition writes its own file, nothing
+  * funnels through the driver), then releases exactly the build's own
+  * [[Pins]], and returns a fresh scan of the spill. The pins are
+  * released when the build or the write throws too. At 100 TB the
+  * result of e.g. PageRank is one row per node — cluster-sized — and
+  * this path never materializes it on any single node, unlike a
+  * `collect()`.
+  *
+  * Result-lifetime pins do not go through a scope: the returned frame
+  * itself reads the pinned RDD, so the pin cannot be dropped before
+  * the consumer has read the result. They are `GlobalIndex`'s three
+  * methods (q_global_rownum, q_shard_balance, q_pack_sequences,
+  * q_token_budget, q_training_export), the assignments `KMeans.fit`
+  * returns (q_kmeans_fit, q_semantic_dedup), `bpeMergeStep`'s
+  * checkpoint (q_bpe_merge_round, q_bpe_merge_round2) and
+  * q_perplexity_buckets' bucket checkpoint. [[graft.Session.sweep]]
+  * releases those between queries; elsewhere ContextCleaner does once
+  * the result is unreachable.
   *
   * Spill root: `spark.graft.spill.dir` if set, else a per-JVM temp dir.
   * On a multi-host cluster the conf MUST point at storage every executor
@@ -54,16 +117,23 @@ object Spill {
 
   sys.addShutdownHook(cleanup())
 
-  /** Write `result` to a spill parquet, run `release` (drop caches /
-    * checkpoints the result was built from), return a scan of the spill.
+  /** Run `build` with a fresh [[Pins]], spill its result, release the
+    * pins (also when the build or the write throws), and return a scan
+    * of the spill.
     */
-  def materialize(result: DataFrame)(release: => Unit): DataFrame = {
+  def scoped(build: Pins => DataFrame): DataFrame = {
+    val pins = new Pins
+    try materialize(build(pins))
+    finally pins.release()
+  }
+
+  /** Write `result` to a spill parquet and return a scan of it. */
+  def materialize(result: DataFrame): DataFrame = {
     val s = result.sparkSession
     val root = s.conf.getOption("spark.graft.spill.dir").getOrElse(localRoot)
     val dir = s"$root/spill-$jvmToken-${seq.incrementAndGet()}"
     tracked.add(dir)
     result.write.mode("overwrite").parquet(dir)
-    release
     s.read.parquet(dir)
   }
 

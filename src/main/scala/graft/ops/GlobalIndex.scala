@@ -66,10 +66,10 @@ object GlobalIndex {
     // offsets collected in phase 1 are only valid against the exact
     // partition contents phase 2 labels, and a recompute (speculation,
     // executor loss, non-deterministic upstream) can re-sample range
-    // bounds. Persisted for the result's lifetime: Bench/Verify sweep
-    // getPersistentRDDs after consuming each query (the explicit
-    // release point); outside those mains ContextCleaner reclaims the
-    // blocks when the returned frame's lineage is GC'd.
+    // bounds. Persisted for the result's lifetime (a result-lifetime
+    // pin, graft.core.Spill): Session.sweep releases it after the
+    // consumer's write; elsewhere ContextCleaner reclaims the blocks
+    // when the returned frame's lineage is GC'd.
     val rdd = sorted.rdd.persist(
       org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val partSums = rdd.mapPartitionsWithIndex { case (i, it) =>

@@ -84,62 +84,53 @@ object KMeans {
     // localCheckpoint pins blocks and SEVERS lineage — a checkpointed
     // frame whose blocks are dropped cannot be recomputed, so cleanup
     // must release exactly the intermediates and never the returned
-    // frames. Track each checkpoint's block ids by snapshotting the
-    // persistent-RDD registry around the call.
-    val toRelease = scala.collection.mutable.Set.empty[Int]
-    def checkpoint(df: DataFrame, intermediate: Boolean): DataFrame = {
-      val before = spark.sparkContext.getPersistentRDDs.keySet
-      val out = df.localCheckpoint()
-      val added = spark.sparkContext.getPersistentRDDs.keySet.diff(before)
-      if (intermediate) toRelease ++= added
-      out
-    }
-    // The corpus view is the only distributed round state (consumed by
-    // rounds+1 assign passes) — pin it once. The CENTROID table is at
-    // most adaptiveK's 4096 rows × 64 doubles (~2 MB): it lives as a
-    // DRIVER-LOCAL list between rounds, rebuilt as a LocalRelation per
-    // consumer. The r17-shape alternative (localCheckpoint per round)
-    // paid a distributed checkpoint job, a broadcast build, and a
-    // keep-old-centroid join EVERY round for that 2 MB relation —
-    // q_kmeans_fit profiled at 39 jobs for ~11 task-s, pure per-job
-    // overhead. Collected doubles round-trip bit-exactly, so the
-    // trained run is unchanged (KMeansSpec pins determinism; the
-    // kmeans-backed oracles hash-gate it end to end).
-    val n = checkpoint(vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .withColumn("nrm", Vectors.norm2(col("v"))), intermediate = true)
-    var cents: Seq[(Long, Seq[Double])] = n.orderBy("id").limit(k)
-      .select(col("id"), col("v")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    // cnrm is derived INSIDE the plan (same Vectors.norm2 expression as
-    // before) so the norm's IEEE fold never moves engines
-    def localC: DataFrame = cents.toDF("cid", "cv")
-      .withColumn("cnrm", Vectors.norm2(col("cv")))
+    // frames: the corpus checkpoint is held in a local scope, released
+    // before returning; the returned assignments' checkpoint is the
+    // caller's (a result-lifetime pin, see graft.core.Spill)
+    val pins = new graft.core.Pins
+    try {
+      // The corpus view is the only distributed round state (consumed by
+      // rounds+1 assign passes) — pin it once. The CENTROID table is at
+      // most adaptiveK's 4096 rows × 64 doubles (~2 MB): it lives as a
+      // DRIVER-LOCAL list between rounds, rebuilt as a LocalRelation per
+      // consumer. The r17-shape alternative (localCheckpoint per round)
+      // paid a distributed checkpoint job, a broadcast build, and a
+      // keep-old-centroid join EVERY round for that 2 MB relation —
+      // q_kmeans_fit profiled at 39 jobs for ~11 task-s, pure per-job
+      // overhead. Collected doubles round-trip bit-exactly, so the
+      // trained run is unchanged (KMeansSpec pins determinism; the
+      // kmeans-backed oracles hash-gate it end to end).
+      val n = pins.checkpoint(vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
+        .withColumn("nrm", Vectors.norm2(col("v"))))
+      var cents: Seq[(Long, Seq[Double])] = n.orderBy("id").limit(k)
+        .select(col("id"), col("v")).collect()
+        .map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+      // cnrm is derived INSIDE the plan (same Vectors.norm2 expression as
+      // before) so the norm's IEEE fold never moves engines
+      def localC: DataFrame = cents.toDF("cid", "cv")
+        .withColumn("cnrm", Vectors.norm2(col("cv")))
 
-    def assign(c: DataFrame): DataFrame =
-      n.crossJoin(broadcast(c))
-        .select(col("id"), col("v"), col("nrm"), col("cid"),
-          Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm")).as("__cos"))
-        .groupBy("id")
-        .agg(max_by(col("cid"), struct(col("__cos"), (-col("cid")).as("__neg"))).as("cid"),
-          first(col("v")).as("v"))
+      def assign(c: DataFrame): DataFrame =
+        n.crossJoin(broadcast(c))
+          .select(col("id"), col("v"), col("nrm"), col("cid"),
+            Vectors.cosine(col("v"), col("cv"), col("nrm"), col("cnrm")).as("__cos"))
+          .groupBy("id")
+          .agg(max_by(col("cid"), struct(col("__cos"), (-col("cid")).as("__neg"))).as("cid"),
+            first(col("v")).as("v"))
 
-    var r = 0
-    while (r < rounds) {
-      val asg = assign(localC)
-      val updated = foldMeans(asg, "id", "cid", "v")
-        .collect().map(row => row.getLong(0) -> row.getSeq[Double](1)).toMap
-      // a cluster can empty (e.g. duplicate seed vectors: the tie-break
-      // sends both copies to the smaller cid) — keep the previous
-      // centroid then, so fit always returns exactly k centroids
-      cents = cents.map { case (cid, old) => (cid, updated.getOrElse(cid, old)) }
-      r += 1
-    }
-    val finalAsg = checkpoint(assign(localC).select("id", "cid"),
-      intermediate = false)
-    spark.sparkContext.getPersistentRDDs
-      .filter { case (id, _) => toRelease.contains(id) }
-      .values.foreach(_.unpersist(false))
-    (finalAsg, cents.toDF("cid", "cv"))
+      var r = 0
+      while (r < rounds) {
+        val asg = assign(localC)
+        val updated = foldMeans(asg, "id", "cid", "v")
+          .collect().map(row => row.getLong(0) -> row.getSeq[Double](1)).toMap
+        // a cluster can empty (e.g. duplicate seed vectors: the tie-break
+        // sends both copies to the smaller cid) — keep the previous
+        // centroid then, so fit always returns exactly k centroids
+        cents = cents.map { case (cid, old) => (cid, updated.getOrElse(cid, old)) }
+        r += 1
+      }
+      (assign(localC).select("id", "cid").localCheckpoint(), cents.toDF("cid", "cv"))
+    } finally pins.release()
   }
 
   /** Mean cosine of each vector to its assigned centroid — the

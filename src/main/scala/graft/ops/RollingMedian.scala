@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.DoubleType
 
+import graft.core.Pins
+
 /** Distributed exact rolling median over a fixed trailing row frame —
   * the scalable replacement for
   * `percentile(v, 0.5) OVER (PARTITION BY key ORDER BY ... ROWS BETWEEN
@@ -44,20 +46,19 @@ import org.apache.spark.sql.types.DoubleType
   */
 object RollingMedian {
 
-  /** @return the result plus a RELEASE thunk that unpersists the
-    *         pinned range-sorted RDD. The caller must invoke it only
-    *         once no further consumption of the result's LINEAGE can
-    *         happen (e.g. a `Spill.materialize` finalizer, after the
-    *         result is safely on disk): a post-release recompute would
-    *         re-sample the range-partitioner bounds and re-pair phase 2
-    *         with phase 1's stale tails. Before r18 the RDD was left
-    *         pinned for the session and only the bench/verify sweep
-    *         released it — a stranded input-sized MEMORY_AND_DISK
-    *         block per invocation in any long-lived session (guide §5).
+  /** The range-sorted RDD both phases read is pinned in `pins`. Release
+    * them only once no further consumption of the result's LINEAGE can
+    * happen (e.g. when the [[graft.core.Spill.scoped]] build the pins
+    * belong to has spilled the result): a post-release recompute would
+    * re-sample the range-partitioner bounds and re-pair phase 2 with
+    * phase 1's stale tails. Before r18 the RDD was left pinned for the
+    * session and only the bench/verify sweep released it — a stranded
+    * input-sized MEMORY_AND_DISK block per invocation in any long-lived
+    * session (guide §5).
     */
   def withRollingMedian(df: DataFrame, keyCol: String, sortCols: Seq[Column],
-      valueCol: String, frame: Int, out: String,
-      numPartitions: Int): (DataFrame, () => Unit) = {
+      valueCol: String, frame: Int, out: String, numPartitions: Int,
+      pins: Pins): DataFrame = {
     require(frame >= 1, s"frame must be >= 1, got $frame")
     val spark = df.sparkSession
     val keyed = (org.apache.spark.sql.functions.col(keyCol) +: sortCols)
@@ -69,8 +70,7 @@ object RollingMedian {
     // two-job pinning (see GlobalIndex.withRunningTotal): the tails
     // collected in phase 1 are only valid against the exact partition
     // contents phase 2 walks; a recompute could re-sample range bounds
-    val rdd = sorted.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = pins.persist(sorted.rdd)
     val ctxLen = frame - 1
     // phase 1: per partition, the last `frame-1` (key, value) rows —
     // value boxed so a null row still occupies its frame slot. Keys are
@@ -212,7 +212,6 @@ object RollingMedian {
         }
       }
     }
-    (spark.createDataFrame(labeled, schema),
-      () => rdd.unpersist(blocking = false))
+    spark.createDataFrame(labeled, schema)
   }
 }

@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, GraftBridge, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery,
+  StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types._
 
 /** The reference streaming job (`spark_streaming_kafka.py`,
@@ -172,9 +173,11 @@ object Ingest {
     *    bodies plan their batch work at the same count.
     *  - `rocksDb`: the RocksDB state store provider.
     *
-    * The child's memory-sink views die with it (Spark keeps each
-    * session's small streaming listener bus registered for the life of
-    * the SparkContext). `checkpoint` defaults to a fresh directory.
+    * The child's memory-sink views die with it. Once the query's end
+    * has reached the caller's listeners, the child's streaming listener
+    * bus is unregistered from the SparkContext, which would otherwise
+    * keep one per drain for its whole life. `checkpoint` defaults to a
+    * fresh directory.
     */
   def drain(df: DataFrame, mode: String = "append",
       checkpoint: String = newCheckpointDir(),
@@ -192,13 +195,27 @@ object Ingest {
       child.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.streams.listListeners().foreach(child.streams.addListener)
-    val q = sink(GraftBridge.ofRows(child, GraftBridge.logicalPlan(df)).writeStream)
-      .outputMode(mode)
-      .option("checkpointLocation", checkpoint)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    q
+    // added last, so the caller's listeners have seen the end when it fires
+    val ended = new java.util.concurrent.CountDownLatch(1)
+    child.streams.addListener(new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        ended.countDown()
+    })
+    var q: StreamingQuery = null
+    try {
+      q = sink(GraftBridge.ofRows(child, GraftBridge.logicalPlan(df)).writeStream)
+        .outputMode(mode)
+        .option("checkpointLocation", checkpoint)
+        .trigger(Trigger.AvailableNow())
+        .start()
+      q.awaitTermination()
+      q
+    } finally {
+      if (q != null) ended.await(10, java.util.concurrent.TimeUnit.SECONDS)
+      GraftBridge.dropStreamingListenerBus(child)
+    }
   }
 
   /** [[drain]] through `foreachBatch`: `f` gets each micro-batch and

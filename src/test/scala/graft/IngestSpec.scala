@@ -55,4 +55,27 @@ class IngestSpec extends AnyFunSuite {
     val bad = rows.find(r => r.isNullAt(r.fieldIndex("value"))).get
     assert(bad.isNullAt(bad.fieldIndex("ts_us")))
   }
+
+  test("each drain unregisters its child session's listener bus; parent listeners still see it end") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val terminated = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        terminated.incrementAndGet()
+    }
+    // the parent's own bus exists from its first `streams` use on
+    spark.streams.addListener(listener)
+    try {
+      val sc = spark.sparkContext
+      val buses = org.apache.spark.GraftTestBridge.streamingListenerBuses(sc)
+      (1 to 3).foreach { i =>
+        Ingest.runToMemory(Ingest.decodeJsonWire(streamOf(s"""{"event_id":$i}""")))
+      }
+      assert(org.apache.spark.GraftTestBridge.streamingListenerBuses(sc) == buses)
+      assert(terminated.get == 3)
+    } finally spark.streams.removeListener(listener)
+  }
 }

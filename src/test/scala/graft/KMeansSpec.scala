@@ -51,4 +51,18 @@ class KMeansSpec extends AnyFunSuite {
     }
     assert(got.values.toSet.size == 3)
   }
+
+  test("fit releases its corpus checkpoint and nothing else") {
+    val sc = spark.sparkContext
+    val earlier = spark.range(500).toDF().localCheckpoint()
+    val pinned = sc.getPersistentRDDs.keySet
+    val (asg, _) = KMeans.fit(corpus(), "id", "v", k = 3, rounds = 2)
+    val asgIds = asg.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+    }.toSet
+    // the one RDD fit leaves pinned is the assignments' own checkpoint
+    assert(sc.getPersistentRDDs.keySet -- pinned == asgIds)
+    assert(earlier.count() == 500)
+    assert(asg.count() == 90)
+  }
 }

@@ -23,19 +23,22 @@ class RollingMedianSpec extends AnyFunSuite {
   }
 
   private def twoPhase(df: org.apache.spark.sql.DataFrame, frame: Int,
-      parts: Int) =
-    graft.ops.RollingMedian
+      parts: Int) = {
+    val pins = new graft.core.Pins
+    try graft.ops.RollingMedian
       .withRollingMedian(df, "k", Seq(col("o"), col("o2")), "v", frame,
-        "med", parts)
-      ._1 // the spec re-collects the frame; the session sweep releases
+        "med", parts, pins)
       .select(col("k"), col("o"), col("o2"), col("med"))
+      .collect()
+    finally pins.release()
+  }
 
   private def assertIdentical(df: org.apache.spark.sql.DataFrame,
       frame: Int, parts: Int): Unit = {
     val a = windowForm(df, frame).collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
         (if (r.isNullAt(3)) null else r.getDouble(3))).toMap
-    val b = twoPhase(df, frame, parts).collect()
+    val b = twoPhase(df, frame, parts)
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)) ->
         (if (r.isNullAt(3)) null else r.getDouble(3)))
     assert(b.length == a.size, "row count drift")
@@ -77,7 +80,7 @@ class RollingMedianSpec extends AnyFunSuite {
     val df = (0 until 50)
       .map(i => ("x", i.toLong, i.toLong, null: java.lang.Double))
       .toDF("k", "o", "o2", "v")
-    val out = twoPhase(df, 10, 4).collect()
+    val out = twoPhase(df, 10, 4)
     assert(out.length == 50 && out.forall(_.isNullAt(3)))
   }
 }
