@@ -1064,8 +1064,10 @@ object Curation {
         .repartition(nParts, col("doc_id"))
         .select(col("doc_id"),
           size(Text.tokens(col("text"))).cast("long").as("n_toks"))
+      // a result-lifetime pin: the returned frame reads it, so this
+      // scope is never released here (graft.core.Spill)
       val cum = graft.ops.GlobalIndex.withRunningTotal(
-        t, Seq(col("doc_id")), "n_toks", "g_start", nParts)
+        t, Seq(col("doc_id")), "n_toks", "g_start", new Pins, nParts)
       val x = cum.withColumn("g_end", col("g_start") + col("n_toks"))
         .select(col("doc_id"), col("g_start"), col("g_end"),
           explode(when(col("g_end") > col("g_start"), sequence(
@@ -1259,7 +1261,7 @@ object Curation {
     val kept = dd.join(canon.select("doc_id"), Seq("doc_id"), "left_semi")
       .select("doc_id", "n_tokens")
     val cum = graft.ops.GlobalIndex.withRunningTotal(
-      kept.filter(col("n_tokens") > 0), Seq(col("doc_id")), "n_tokens", "g_start")
+      kept.filter(col("n_tokens") > 0), Seq(col("doc_id")), "n_tokens", "g_start", pins)
     val seg = cum.withColumn("g_end", col("g_start") + col("n_tokens"))
       .select(col("doc_id"), col("g_start"), col("g_end"),
         explode(sequence(

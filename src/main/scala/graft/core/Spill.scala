@@ -11,7 +11,9 @@ import org.apache.spark.storage.StorageLevel
   * makes to reuse an intermediate goes through here, and [[release]]
   * unpersists exactly those, never another query's. A builder gets its
   * `Pins` from [[Spill.scoped]]; a helper that pins on its caller's
-  * behalf takes the caller's `Pins`.
+  * behalf takes the caller's `Pins`. [[graft.replay.Replay.run]] holds
+  * a wire frame it publishes more than once in its own `Pins` and
+  * releases it when the publish returns.
   */
 final class Pins {
   private val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
@@ -74,7 +76,8 @@ final class Pins {
   * itself reads the pinned RDD, so the pin cannot be dropped before
   * the consumer has read the result. They are `GlobalIndex`'s three
   * methods (q_global_rownum, q_shard_balance, q_pack_sequences,
-  * q_token_budget, q_training_export), the assignments `KMeans.fit`
+  * q_token_budget; q_training_export spills its result, so its
+  * running-total pin goes with its scope), the assignments `KMeans.fit`
   * returns (q_kmeans_fit, q_semantic_dedup), `bpeMergeStep`'s
   * checkpoint (q_bpe_merge_round, q_bpe_merge_round2) and
   * q_perplexity_buckets' bucket checkpoint. [[graft.Session.sweep]]

@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.types.LongType
 
+import graft.core.Pins
+
 /** Total-order global row numbering that stays distributed.
   *
   * `row_number() OVER (ORDER BY ...)` declares an empty window partition,
@@ -49,7 +51,7 @@ object GlobalIndex {
     * order are partition-agnostic.
     */
   def withRunningTotal(df: DataFrame, sortCols: Seq[Column], valueCol: String,
-      out: String, numPartitions: Int = -1): DataFrame = {
+      out: String, pins: Pins, numPartitions: Int = -1): DataFrame = {
     val spark = df.sparkSession
     // numPartitions > 0 pins the range-sort width to an input-sized
     // count (Tables.scaledPartitions) instead of the session default —
@@ -66,12 +68,12 @@ object GlobalIndex {
     // offsets collected in phase 1 are only valid against the exact
     // partition contents phase 2 labels, and a recompute (speculation,
     // executor loss, non-deterministic upstream) can re-sample range
-    // bounds. Persisted for the result's lifetime (a result-lifetime
-    // pin, graft.core.Spill): Session.sweep releases it after the
-    // consumer's write; elsewhere ContextCleaner reclaims the blocks
-    // when the returned frame's lineage is GC'd.
-    val rdd = sorted.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // bounds. Held in the caller's `pins`, which must outlive every
+    // read of the returned frame: a scoped build releases it after its
+    // spill; a result-lifetime pin (graft.core.Spill) is left to
+    // Session.sweep, or to ContextCleaner once the frame's lineage is
+    // GC'd.
+    val rdd = pins.persist(sorted.rdd)
     val partSums = rdd.mapPartitionsWithIndex { case (i, it) =>
       var s = 0L
       it.foreach(r => s += r.getLong(idx))

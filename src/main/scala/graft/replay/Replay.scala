@@ -3,7 +3,7 @@ package graft.replay
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Codecs
+import graft.core.{Codecs, Pins}
 
 /** The replay producer (`dataframe_to_kafka.py`; SURVEY.md §3.2) as a
   * Spark job. Mirrors the reference CLI surface
@@ -157,6 +157,14 @@ object Replay {
   }
 
   /** Full replay: read → transform → encode → publish to the exchange.
+    *
+    * A frame published more than once (`repeat > 1`) is encoded once:
+    * the wire frame is held in a [[Pins]] checkpoint, so every
+    * pass writes the same rows, in the same order, without parsing the
+    * source again (a CSV is read twice in all: schema inference, then
+    * the one data pass). The pin is released when the publish returns,
+    * also when it throws.
+    *
     * On the parquet path, the nanos-as-long conf [[readSource]] sets is
     * restored once the publish has materialized every batch, so a
     * borrowed session's later parquet reads keep their normal timestamp
@@ -166,8 +174,13 @@ object Replay {
   def run(spark: SparkSession, cfg: ReplayConfig, exchange: Exchange): Unit = {
     val key = "spark.sql.legacy.parquet.nanosAsLong"
     val prev = spark.conf.getOption(key)
-    try exchange.publish(encode(transform(readSource(spark, cfg), cfg), cfg), cfg)
-    finally if (cfg.extension == "parquet")
-      prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    val pins = new Pins
+    try {
+      val wire = encode(transform(readSource(spark, cfg), cfg), cfg)
+      exchange.publish(if (cfg.repeat > 1) pins.checkpoint(wire) else wire, cfg)
+    } finally {
+      pins.release()
+      if (cfg.extension == "parquet") prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
   }
 }

@@ -328,14 +328,18 @@ final class EsHttpStore(baseUrl: String, index: String, idCol: String,
   /** Auto-id append with per-row dynamic index routing (K4) —
     * at-least-once, same contract as the reference's per-row
     * `es.index(index=f"room-{room}")` loop.
+    *
+    * The JSON encode and the bulk POST run in the batch's own scan
+    * stage, one client per partition, and the batch is planned once.
+    * There is no widening repartition: probing the partition count
+    * (`df.rdd`) planned every micro-batch a second time, and a
+    * kafka-wire batch already has one partition per topic partition
+    * (3 against `room_route_backlog`'s 2 cores).
     */
   def appendRouted(batch: DataFrame, indexCol: String): Unit = {
     val docCols = docSchema.fieldNames.map(col).toSeq
     val url = baseUrl
-    // widen a narrow batch first (no-op once partitions ≥ cores): the
-    // JSON encode + bulk POST run per partition, and a one-split
-    // micro-batch otherwise serializes the whole sink pass on one task
-    graft.ops.Par.widen(batch)
+    batch
       .select(col(indexCol).cast("string").as("_idx"),
         to_json(struct(docCols: _*)).as("_src"))
       .foreachPartition { (rows: Iterator[Row]) =>

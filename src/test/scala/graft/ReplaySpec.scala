@@ -1,11 +1,19 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.funsuite.AnyFunSuite
+import java.util.concurrent.atomic.AtomicLong
 
+import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.apache.spark.sql.{DataFrame, GraftSqlTestBridge, SparkSession}
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
+
+import graft.kafka.{KafkaStubBroker, KafkaWireExchange}
 import graft.replay.Replay
 import graft.replay.Replay.{FileExchange, ReplayConfig}
+import graft.streaming.Service
 
 /** Replay-producer semantics (`dataframe_to_kafka.py` CLI surface):
   * dropna, column exclusion, keyed wire encoding, repeat, shuffle.
@@ -96,5 +104,89 @@ class ReplaySpec extends AnyFunSuite {
     val perBatch = out.groupBy("batch").count().collect()
       .map(_.getAs[Long]("count")).toSet
     assert(perBatch == Set(2L), s"torn/duplicated batch: $perBatch")
+  }
+
+  /** A 34,890-row, 51-room sensor CSV (the reference backlog's shape). */
+  private lazy val backlog = {
+    val rnd = new scala.util.Random(7)
+    val sb = new StringBuilder("ts_min_bignt,room,co2,temp,pir\n")
+    (0 until 34890).foreach { i =>
+      sb ++= s"${1377299040L + 60L * i},${400 + rnd.nextInt(51)},${300 + rnd.nextInt(900)}.0," +
+        s"${20 + rnd.nextInt(500) / 100.0},${rnd.nextInt(31)}.0\n"
+    }
+    val f = Files.createTempFile(Paths.get("target"), "backlog_", ".csv")
+    Files.writeString(f, sb.toString)
+    f.toString
+  }
+
+  /** Records read by stages that scan a file, while `body` runs. */
+  private def fileScanRows(body: => Unit): Long = {
+    val sc = spark.sparkContext
+    val rows = new AtomicLong
+    val listener = new SparkListener {
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (e.stageInfo.rddInfos.exists(_.name.startsWith("FileScanRDD")))
+          rows.addAndGet(e.stageInfo.taskMetrics.inputMetrics.recordsRead)
+    }
+    GraftTestBridge.awaitListeners(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally {
+      GraftTestBridge.awaitListeners(sc)
+      sc.removeSparkListener(listener)
+    }
+    rows.get
+  }
+
+  /** (partition, offset, key, value) of the whole topic, in log order. */
+  private def log(kx: KafkaWireExchange, topic: String): Seq[(Int, Long, String, String)] =
+    kx.read(spark, topic).collect().toSeq
+      .map(r => (r.getAs[Int]("partition"), r.getAs[Long]("offset"),
+        r.getAs[String]("key"), r.getAs[String]("value")))
+      .sortBy(r => (r._1, r._2))
+
+  test("a repeated publish parses its CSV twice, not once per pass, and publishes the same log") {
+    val cfg = ReplayConfig(input = backlog, topic = "rooms", repeat = 2,
+      keyCol = Some("room"), wireFormat = "json")
+    Service.using(new KafkaStubBroker(3), new KafkaStubBroker(3)) { (a, b) =>
+      val pinned = new KafkaWireExchange("127.0.0.1", a.port)
+      val plain = new KafkaWireExchange("127.0.0.1", b.port)
+      val read = fileScanRows(Replay.run(spark, cfg, pinned))
+      // schema inference reads the header line as a record too
+      assert(math.round(read / 34890.0) == 2, s"$read file-scan records")
+      plain.publish(Replay.encode(Replay.transform(Replay.readSource(spark, cfg), cfg), cfg), cfg)
+      val got = log(pinned, cfg.topic)
+      assert(got.size == 2 * 34890)
+      assert(got == log(plain, cfg.topic))
+    }
+  }
+
+  test("a repeated publish leaves no persisted RDD or cached frame, also when it fails") {
+    val sc = spark.sparkContext
+    val cfg = ReplayConfig(input = backlog, repeat = 3, keyCol = Some("room"))
+    val files = new FileExchange(Files.createTempDirectory(Paths.get("target"), "exch_pin_").toString)
+    def check(run: => Unit): Unit = {
+      val (rdds, cached, blocks) =
+        (sc.getPersistentRDDs.keySet, GraftSqlTestBridge.cachedEntries(spark),
+          GraftTestBridge.rddIdsWithBlocks(sc))
+      run
+      assert(sc.getPersistentRDDs.keySet == rdds)
+      assert(GraftSqlTestBridge.cachedEntries(spark) == cached)
+      eventually(timeout(30.seconds), interval(100.millis)) {
+        assert((GraftTestBridge.rddIdsWithBlocks(sc) -- blocks).isEmpty)
+      }
+    }
+    check(Replay.run(spark, cfg, files))
+    assert(files.read(spark, cfg.topic).count() == 3L * 34890)
+    val failing = new Replay.Exchange {
+      def publish(wire: DataFrame, c: ReplayConfig, afterWrite: Int => Unit): Unit =
+        files.publish(wire, c.copy(topic = "failing"),
+          r => if (r == 2) throw new IllegalStateException("kill"))
+      def read(s: SparkSession, topic: String): DataFrame = files.read(s, topic)
+    }
+    check {
+      val e = intercept[IllegalStateException](Replay.run(spark, cfg, failing))
+      assert(e.getMessage == "kill")
+    }
   }
 }

@@ -27,12 +27,14 @@ class SpillSpec extends AnyFunSuite {
 
   /** Build and write `build` to noop while a side thread checkpoints a
     * 1,000-row frame of the same session every 100 ms. Every side frame
-    * must still count afterwards, and no RDD block the build made may
-    * remain, other than those of the RDDs `keep` names in its result.
+    * must still count afterwards, and no RDD the build made may remain
+    * persisted once it is written, nor keep a block, other than the RDDs
+    * `keep` names in its result.
     */
   private def checkAlongside(build: => DataFrame)(keep: DataFrame => Set[Int]): Unit = {
     val sc = spark.sparkContext
     val before = GraftTestBridge.rddIdsWithBlocks(sc)
+    val persisted = sc.getPersistentRDDs.keySet
     val side = ArrayBuffer.empty[DataFrame]
     @volatile var running = true
     val sideThread = new Thread(() =>
@@ -52,9 +54,12 @@ class SpillSpec extends AnyFunSuite {
         sideThread.join()
       }
     try {
+      val sideIds = side.flatMap(checkpointIds).toSet
+      // read before any GC lets ContextCleaner drop a stranded pin
+      val pinned = sc.getPersistentRDDs.keySet -- persisted -- sideIds -- keep(result)
+      assert(pinned.isEmpty, s"RDDs $pinned still persisted")
       val lost = side.count(f => !Try(f.count()).toOption.contains(1000L))
       assert(lost == 0, s"$lost of ${side.size} side frames released")
-      val sideIds = side.flatMap(checkpointIds).toSet
       eventually(timeout(30.seconds), interval(100.millis)) {
         val left = GraftTestBridge.rddIdsWithBlocks(sc) -- before -- sideIds -- keep(result)
         assert(left.isEmpty, s"blocks left of RDDs $left")
@@ -65,7 +70,7 @@ class SpillSpec extends AnyFunSuite {
 
   Seq("q_dedup_clusters", "q_dedup_clusters_twostar", "q_split_leakage_safe",
       "q_corpus_dedup", "q_corpus_dedup_best", "q_pagerank", "q_triangle_count",
-      "q_degree_dist", "q_label_prop", "q_kcore_rounds").foreach { name =>
+      "q_degree_dist", "q_label_prop", "q_kcore_rounds", "q_training_export").foreach { name =>
     test(s"$name releases its own pins and no concurrent query's checkpoints") {
       checkAlongside(SparkEntry.queries(name)(spark, sf))(_ => Set.empty)
     }

@@ -14,6 +14,9 @@ object GraftTestBridge {
       .getMatchingBlockIds(_.isRDD, askStorageEndpoints = true)
       .collect { case RDDBlockId(id, _) => id }.toSet
 
+  /** Wait until every event posted so far has reached the listeners. */
+  def awaitListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
   /** Streaming listener buses registered on the context (one per session
     * that has used `streams`, until it is unregistered).
     */

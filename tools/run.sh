@@ -28,6 +28,9 @@ if [ "${1:-}" = "close-round" ]; then
   fi
   exit 0
 fi
+# the checkout this script lives in: its compiled classes and its
+# resources (core-site.xml) are the ones that run
+ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do
@@ -40,5 +43,5 @@ exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-48g}" \
-  -cp "${GRAFT_CLASSES:-/root/repo/target/scala-2.13/classes}:/root/repo/src/main/resources:/opt/spark/jars/*" \
+  -cp "${GRAFT_CLASSES:-$ROOT/target/scala-2.13/classes}:$ROOT/src/main/resources:/opt/spark/jars/*" \
   "$@"
