@@ -3,10 +3,8 @@ package graft.core
 import java.nio.file.{Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermission
 
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, PathFilter, RawLocalFileSystem}
+import org.apache.hadoop.fs.{LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileManager, FileSystemBasedCheckpointFileManager}
 
 /** `file:` without process forks.
   *
@@ -16,11 +14,17 @@ import org.apache.spark.sql.execution.streaming.checkpointing.{CheckpointFileMan
   * streaming checkpoint commit creates and renames two small files per
   * trigger, so those forks were most of walCommit and commitOffsets.
   *
-  * `src/main/resources/core-site.xml` registers the two classes here:
-  * `fs.file.impl` = [[NoForkLocalFileSystem]] and
-  * `spark.sql.streaming.checkpointFileManagerClass` =
-  * [[LocalCheckpointFileManager]]. A session conf set to another manager
-  * still wins, since Spark copies SQL confs over the Hadoop conf.
+  * `src/main/resources/core-site.xml` registers `fs.file.impl` =
+  * [[NoForkLocalFileSystem]] and sets
+  * `spark.sql.streaming.checkpointFileManagerClass` to Spark's
+  * `FileSystemBasedCheckpointFileManager`. Spark's default manager goes
+  * through `FileContext`, which reaches Hadoop's `RawLocalFs`: that class
+  * builds its own `RawLocalFileSystem` (not `fs.file.impl`) and forks
+  * `readlink` four times per rename. The FileSystem API reaches
+  * `fs.file.impl` instead, whose rename of the temp file is one
+  * `File.renameTo` of the data and one of its `.crc`. A session conf set
+  * to another manager still wins, since Spark copies SQL confs over the
+  * Hadoop conf.
   */
 final class NoForkRawLocalFileSystem extends RawLocalFileSystem {
 
@@ -45,41 +49,3 @@ final class NoForkRawLocalFileSystem extends RawLocalFileSystem {
   * verified) over [[NoForkRawLocalFileSystem]].
   */
 final class NoForkLocalFileSystem extends LocalFileSystem(new NoForkRawLocalFileSystem)
-
-/** Spark's FileSystem-API checkpoint manager for `file:` checkpoints;
-  * every other scheme gets what Spark's default choice gives.
-  *
-  * Spark's default manager goes through `FileContext`, which reaches
-  * Hadoop's `RawLocalFs`. That class builds its own `RawLocalFileSystem`
-  * (not `fs.file.impl`) and forks `readlink` four times per rename. The
-  * FileSystem API reaches `fs.file.impl` instead, whose `rename` of the
-  * temp file is one `File.renameTo` of the data and one of its `.crc`.
-  */
-final class LocalCheckpointFileManager(path: Path, conf: Configuration)
-    extends CheckpointFileManager {
-
-  private val m: CheckpointFileManager = {
-    val scheme = Option(path.toUri.getScheme).getOrElse(FileSystem.getDefaultUri(conf).getScheme)
-    if (scheme == "file") new FileSystemBasedCheckpointFileManager(path, conf)
-    else {
-      val default = new Configuration(conf)
-      default.unset(LocalCheckpointFileManager.Key)
-      CheckpointFileManager.create(path, default)
-    }
-  }
-
-  override def createAtomic(p: Path, overwriteIfPossible: Boolean)
-      : CheckpointFileManager.CancellableFSDataOutputStream = m.createAtomic(p, overwriteIfPossible)
-  override def open(p: Path) = m.open(p)
-  override def list(p: Path, filter: PathFilter) = m.list(p, filter)
-  override def mkdirs(p: Path): Unit = m.mkdirs(p)
-  override def exists(p: Path): Boolean = m.exists(p)
-  override def delete(p: Path): Unit = m.delete(p)
-  override def isLocal: Boolean = m.isLocal
-  override def createCheckpointDirectory(): Path = m.createCheckpointDirectory()
-  override def close(): Unit = m.close()
-}
-
-object LocalCheckpointFileManager {
-  val Key = "spark.sql.streaming.checkpointFileManagerClass"
-}

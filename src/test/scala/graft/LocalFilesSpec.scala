@@ -13,7 +13,6 @@ import org.apache.spark.sql.{Dataset, Row, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.core.LocalCheckpointFileManager
 import graft.kafka.{KafkaStubBroker, KafkaWireClient}
 import graft.streaming.Service
 
@@ -25,6 +24,7 @@ import graft.streaming.Service
 class LocalFilesSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val SparkDefaultManager =
     "org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager"
 
@@ -130,18 +130,18 @@ class LocalFilesSpec extends AnyFunSuite {
     }
   }
 
-  test("a checkpoint written by Spark's default manager resumes under the local one") {
+  test("a checkpoint written by Spark's default manager resumes under the FileSystem-API one") {
     Service.using(new KafkaStubBroker(3)) { broker =>
       val chk = tmp("chk_resume_")
       produce(broker, 0, 200)
       val child = spark.newSession()
-      child.conf.set(LocalCheckpointFileManager.Key, SparkDefaultManager)
+      child.conf.set(ManagerKey, SparkDefaultManager)
       var first = 0L
       // the recording sees what it is there for: the default manager forks
       assert(hadoopForks { first = drain(child, broker, chk) }.nonEmpty)
       assert(first == 200)
       produce(broker, 200, 150)
-      assert(spark.conf.getOption(LocalCheckpointFileManager.Key).isEmpty)
+      assert(spark.conf.getOption(ManagerKey).isEmpty)
       assert(drain(spark, broker, chk) == 150)
       assert(batchFiles(new File(chk, "commits")).size == 4)
     }

@@ -29,7 +29,9 @@ if [ "${1:-}" = "close-round" ]; then
   exit 0
 fi
 # the checkout this script lives in: its compiled classes and its
-# resources (core-site.xml) are the ones that run
+# resources (core-site.xml) are the ones that run. The resources come
+# first, so a stale core-site.xml that an sbt test run copied into the
+# classes directory cannot shadow the source's.
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
@@ -43,5 +45,5 @@ exec java $ADD_OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-48g}" \
-  -cp "${GRAFT_CLASSES:-$ROOT/target/scala-2.13/classes}:$ROOT/src/main/resources:/opt/spark/jars/*" \
+  -cp "$ROOT/src/main/resources:${GRAFT_CLASSES:-$ROOT/target/scala-2.13/classes}:/opt/spark/jars/*" \
   "$@"
