@@ -132,29 +132,28 @@ object Bench {
     val entries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) =>
         only.fold(!SparkEntry.auditOnly(name))(_.contains(name)) }
-    def runOne(name: String, fn: (SparkSession, String) =>
-        org.apache.spark.sql.DataFrame): (Double, Boolean) = {
+    def runOne(name: String, q: core.QueryDef): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok =
-        try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }
+        try { q.run(spark, sfDir)(_.write.format("noop").mode("overwrite").save()); true }
         catch {
           case e: Throwable =>
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
             false
         }
       val elapsed = (System.nanoTime() - t0) / 1e9
-      Session.sweep(spark) // outside the timed region
+      Session.sweep() // outside the timed region
       (elapsed, ok)
     }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val okMap = scala.collection.mutable.Map.empty[String, Boolean]
-    entries.foreach { case (name, fn) =>
-      val (t, ok) = runOne(name, fn)
+    entries.foreach { case (name, q) =>
+      val (t, ok) = runOne(name, q)
       samples(name) = List(t)
       okMap(name) = ok
     }
     def minOf(name: String): Double = samples(name).min
-    def flagged: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)] =
+    def flagged: Seq[(String, core.QueryDef)] =
       entries.filter { case (name, _) =>
         okMap(name) && (only.isDefined ||
           baseline.get(name).forall(b => minOf(name) > 1.5 * b))
@@ -166,8 +165,8 @@ object Bench {
         println(s"[bench] pass $pass: re-running ${rerun.size} " +
           s"flagged queries: ${rerun.map(_._1).mkString(",")}")
       val ordered = if (pass % 2 == 0) rerun.reverse else rerun
-      ordered.foreach { case (name, fn) =>
-        val (t, ok) = runOne(name, fn)
+      ordered.foreach { case (name, q) =>
+        val (t, ok) = runOne(name, q)
         // a FAILED re-run keeps its TIMING sample out of the min (a
         // fail-fast attempt's artificially small elapsed time must not
         // beat a real pass-1 measurement) but still FLIPS the ok bit:

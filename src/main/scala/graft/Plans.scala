@@ -15,10 +15,9 @@ object Plans {
         "q_simhash60", "q_hash_split", "q_range_join_bucketed",
         "q_contamination", "q_grouping_sets", "q_gap_fill")
     Session.run("graft-plans") { spark =>
-      // Many builders materialize intermediates (Spill.materialize, CC
-      // rounds), so the RETURNED DataFrame's plan is just a spill scan.
-      // SPARK_GRAFT_PLANS_EXEC=1 additionally prints every plan the
-      // builder executed, via a listener — the real evidence for those.
+      // The returned plan starts where the build's eager work ended (a
+      // checkpoint scan, a spill scan). SPARK_GRAFT_PLANS_EXEC=1 also
+      // prints every plan the builder executed, via a listener.
       val dumpExecuted = sys.env.get("SPARK_GRAFT_PLANS_EXEC").contains("1")
       val listener = new org.apache.spark.sql.util.QueryExecutionListener {
         override def onSuccess(funcName: String,
@@ -35,12 +34,13 @@ object Plans {
       if (dumpExecuted) spark.listenerManager.register(listener)
       try SparkEntry.catalog.filter(q => names.contains(q.name)).foreach { q =>
         println(s"\n======== ${q.name} ========")
-        val df = q.build(spark, sfDir)
-        // listener events are async; settle before the final explain so
-        // executed plans stay inside this query's banner
-        if (dumpExecuted) Thread.sleep(1500)
-        df.explain("formatted")
-        if (dumpExecuted) Thread.sleep(1500)
+        q.run(spark, sfDir) { df =>
+          // listener events are async; settle before the final explain
+          // so executed plans stay inside this query's banner
+          if (dumpExecuted) Thread.sleep(1500)
+          df.explain("formatted")
+          if (dumpExecuted) Thread.sleep(1500)
+        }
       } finally spark.listenerManager.unregister(listener)
     }
   }

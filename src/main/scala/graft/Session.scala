@@ -43,27 +43,13 @@ object Session {
         }
     }
 
-  /** Drop every cached Dataset and persisted RDD, then let a GC run.
-    *
-    * Mains that run many queries in one session call this between
-    * queries, outside any timed region. The round-10 full bench showed
-    * two queries 3.8x slower in-session than the same binary isolated
-    * on the same boot (BENCH_AB_r11.json: q_approx_quantiles_bound
-    * 2.27 s in the 260-query session against 0.60 s alone). A scoped
-    * build ([[core.Spill.scoped]]) releases its own pins, when it fails
-    * too; what the sweep still finds are the result-lifetime pins listed
-    * in [[core.Spill]] (the assignments `KMeans.fit` returns,
-    * GlobalIndex's sorted-corpus RDDs), which the consumer's write read,
-    * and 260 queries of such residue turn one query's GC debt into its
-    * successor's wall clock. `clearCache` drops only CacheManager
-    * (`Dataset.persist`) entries; RDD-level persists live in a
-    * different registry, so those are unpersisted too. Sweeping charges
-    * each query for its own work only, which is what a per-job cluster
-    * deployment would see.
+  /** Let a GC run between queries, outside any timed region, so each
+    * query pays for its own garbage only, as in a per-job deployment.
+    * The round-10 full bench showed two queries 3.8x slower in-session
+    * than isolated on the same boot (BENCH_AB_r11.json:
+    * q_approx_quantiles_bound 2.27 s in the 260-query session against
+    * 0.60 s alone). Nothing is left to unpersist: [[core.QueryDef.run]]
+    * releases a query's pins once its consumer returns.
     */
-  def sweep(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    System.gc()
-  }
+  def sweep(): Unit = System.gc()
 }

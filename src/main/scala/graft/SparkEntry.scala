@@ -52,9 +52,10 @@ object SparkEntry {
       .agg(count(lit(1)).as("n"), avg(col("value")).as("avg_value"))
   }
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    catalog.map(q => q.name -> q.build).toMap
+  /** One entry per implemented operator from SURVEY.md §2; callers
+    * build through [[graft.core.QueryDef.run]]. */
+  def queries: Map[String, QueryDef] =
+    catalog.map(q => q.name -> q).toMap
 
   /** Correctness-gated exact forms whose plan shape is deliberately not
     * the 100 TB path (each has a scale twin in the catalog); the bench

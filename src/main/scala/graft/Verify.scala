@@ -13,20 +13,16 @@ object Verify {
         .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
       SparkEntry.queries
         .filter { case (name, _) => only.forall(_.contains(name)) }
-        .foreach { case (name, fn) =>
-        var built: org.apache.spark.sql.DataFrame = null
-        try {
-          built = fn(spark, sfDir)
-          built.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
-        } catch { case e: Throwable =>
+        .foreach { case (name, q) =>
+        try q.run(spark, sfDir)(
+          _.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name"))
+        catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
-        // what the query still pins after its write (the registry is
-        // weak, so the built frame is held until the count is taken)
+        // what the query still pins once `run` has released its pins
         val left = spark.sparkContext.getPersistentRDDs.size
         if (left > 0) System.err.println(s"[verify] $name left $left pinned RDD(s)")
-        java.lang.ref.Reference.reachabilityFence(built)
-        Session.sweep(spark)
+        Session.sweep()
       }
       // JSON string escape: backslash, quote, and ALL control chars (<0x20)
       // — a tab or CR in builder-authored SQL would otherwise make the

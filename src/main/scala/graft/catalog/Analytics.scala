@@ -682,10 +682,10 @@ object Analytics {
         // micros long, not Timestamp: same total order, no per-row
         // java.sql.Timestamp boxing through the RDD phases
         unix_micros(col("ts")).as("__tsu"))
-    // spill-then-release (r18, guide §5 hygiene): the pinned
-    // range-sorted RDD is dropped as soon as the result is on disk,
-    // instead of stranding an input-sized MEMORY_AND_DISK block until
-    // the harness sweep (VERDICT r17 item 7)
+    // the pinned range-sorted RDD is held in the query's pins and
+    // dropped as soon as the consumer has read the result, instead of
+    // stranding an input-sized MEMORY_AND_DISK block until the harness
+    // sweep (VERDICT r17 item 7)
     graft.ops.RollingMedian.withRollingMedian(
       base, "event_type", Seq(col("__tsu"), col("event_id")), "value",
       100, "__med", Tables.scaledPartitions(s, dir, "events"), pins)

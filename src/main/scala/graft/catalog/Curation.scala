@@ -136,9 +136,9 @@ object Curation {
        |SELECT src AS doc_id, MIN(dst) AS cluster_id,
        |  CAST(src = MIN(dst) AS INT) AS is_canonical
        |FROM reach GROUP BY src ORDER BY doc_id""".stripMargin) { (s, dir, pins) =>
-    // the scope spills the result (distributed, never a driver collect —
-    // one row per near-dup doc, cluster-sized at 100 TB) before it
-    // drops the iteration checkpoints
+    // the consumer reads the result (distributed, never a driver
+    // collect — one row per near-dup doc, cluster-sized at 100 TB)
+    // before QueryDef.run drops the iteration checkpoints
     ccLabels(jaccardPairs(s, dir, pins), pins)
       .select(col("doc").as("doc_id"), col("lbl").as("cluster_id"),
         (col("doc") === col("lbl")).cast("int").as("is_canonical"))
@@ -838,7 +838,7 @@ object Curation {
   // ops.GlobalIndex (range-sort + per-partition offsets), NEVER a
   // ROW_NUMBER over an empty window partition — that funnels the corpus
   // through one task, the classic 100 TB cliff.
-  val shardBalance: QueryDef = QueryDef.sql("q_shard_balance")(
+  val shardBalance: QueryDef = QueryDef.pinned("q_shard_balance")(
     """WITH r AS (SELECT doc_id, n_chars,
       |    ROW_NUMBER() OVER (ORDER BY n_chars DESC, doc_id) AS rn
       |  FROM documents),
@@ -849,10 +849,10 @@ object Curation {
       |SELECT CAST(shard AS BIGINT) AS shard,
       |  CAST(COUNT(*) AS BIGINT) AS n_docs,
       |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
-      |FROM a GROUP BY shard ORDER BY shard""".stripMargin) { (s, dir) =>
+      |FROM a GROUP BY shard ORDER BY shard""".stripMargin) { (s, dir, pins) =>
     val ranked = graft.ops.GlobalIndex.withRowNumber(
       Tables.documents(s, dir).select(col("doc_id"), col("n_chars")),
-      Seq(col("n_chars").desc, col("doc_id").asc), "rn")
+      Seq(col("n_chars").desc, col("doc_id").asc), "rn", pins)
     ranked
       .select(col("doc_id"), col("n_chars"),
         when(expr("((rn - 1) div 8) % 2 = 0"), expr("(rn - 1) % 8"))
@@ -1034,7 +1034,7 @@ object Curation {
   // hash-matched.
   val packSequences: QueryDef = {
     val L = 256
-    QueryDef.sql("q_pack_sequences")(
+    QueryDef.pinned("q_pack_sequences")(
       s"""WITH t AS (SELECT doc_id, CAST(len($toksSql) AS BIGINT) AS n_toks
          |           FROM documents),
          |c AS (SELECT doc_id, n_toks,
@@ -1048,7 +1048,7 @@ object Curation {
          |  greatest(g_start, seq_id * $L) - seq_id * $L AS pos_in_seq,
          |  least(g_end, (seq_id + 1) * $L) - greatest(g_start, seq_id * $L)
          |    AS n_toks_in_seq
-         |FROM x ORDER BY seq_id, doc_id""".stripMargin) { (s, dir) =>
+         |FROM x ORDER BY seq_id, doc_id""".stripMargin) { (s, dir, pins) =>
       // input-sized partitions for the tokenize pass, the prefix-sum
       // range sort, and the (seq, doc)-grain final sort — per-task
       // volume stays constant as the corpus grows
@@ -1064,10 +1064,8 @@ object Curation {
         .repartition(nParts, col("doc_id"))
         .select(col("doc_id"),
           size(Text.tokens(col("text"))).cast("long").as("n_toks"))
-      // a result-lifetime pin: the returned frame reads it, so this
-      // scope is never released here (graft.core.Spill)
       val cum = graft.ops.GlobalIndex.withRunningTotal(
-        t, Seq(col("doc_id")), "n_toks", "g_start", new Pins, nParts)
+        t, Seq(col("doc_id")), "n_toks", "g_start", pins, nParts)
       val x = cum.withColumn("g_end", col("g_start") + col("n_toks"))
         .select(col("doc_id"), col("g_start"), col("g_end"),
           explode(when(col("g_end") > col("g_start"), sequence(
@@ -1095,7 +1093,7 @@ object Curation {
   // 10k domains parallelize across the cluster.
   val tokenBudget: QueryDef = {
     val budget = 600L
-    QueryDef.sql("q_token_budget")(
+    QueryDef.pinned("q_token_budget")(
       s"""WITH t AS (SELECT source, doc_id, len($toksSql) AS n_toks
          |           FROM documents),
          |w AS (SELECT source, doc_id, n_toks,
@@ -1107,7 +1105,7 @@ object Curation {
          |      FROM t)
          |SELECT source, rnk, doc_id, n_toks, cum_toks
          |FROM w WHERE cum_toks <= $budget
-         |ORDER BY source, rnk""".stripMargin) { (s, dir) =>
+         |ORDER BY source, rnk""".stripMargin) { (s, dir, pins) =>
       // source cardinality is a catalog constant while per-source
       // slices grow ∝ corpus, so a PARTITION BY source window puts a
       // whole source on one task — rank + running total instead run
@@ -1120,7 +1118,7 @@ object Curation {
           size(Text.tokens(col("text"))).cast("long").as("n_toks"))
       graft.ops.GlobalIndex.withKeyedRankAndTotal(
           t, "source", Seq(col("n_toks").desc, col("doc_id")), "n_toks",
-          "rnk", "cum_toks", nParts)
+          "rnk", "cum_toks", nParts, pins)
         .filter(col("cum_toks") <= budget)
         .select("source", "rnk", "doc_id", "n_toks", "cum_toks")
         .orderBy("source", "rnk")

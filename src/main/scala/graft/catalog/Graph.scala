@@ -77,7 +77,7 @@ object Graph {
           .select(col("node"),
             (lit(150000L) + expr("(85 * coalesce(s, 0)) div 100")).as("r"))
       }
-      // spilled by the scope, never a driver collect: the result is one
+      // read by the consumer, never a driver collect: the result is one
       // row per node — cluster-sized at 100 TB
       r.select(col("node"), col("r").as("rank_u")).orderBy("node")
     }

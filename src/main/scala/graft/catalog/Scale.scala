@@ -22,13 +22,13 @@ object Scale {
   // offset labeling (ops.GlobalIndex), which has no single-task funnel.
   // Tie-break on o_orderkey makes the total order unique, so the two
   // shapes agree row-for-row.
-  val globalRownum: QueryDef = QueryDef.sql("q_global_rownum")(
+  val globalRownum: QueryDef = QueryDef.pinned("q_global_rownum")(
     """SELECT o_orderkey, o_totalprice,
       |  ROW_NUMBER() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn
-      |FROM orders ORDER BY rn""".stripMargin) { (s, dir) =>
+      |FROM orders ORDER BY rn""".stripMargin) { (s, dir, pins) =>
     GlobalIndex.withRowNumber(
         Tables.orders(s, dir).select("o_orderkey", "o_totalprice"),
-        Seq(col("o_totalprice").desc, col("o_orderkey").asc), "rn")
+        Seq(col("o_totalprice").desc, col("o_orderkey").asc), "rn", pins)
       .orderBy("rn")
   }
 

@@ -724,7 +724,7 @@ object SimilaritySearch {
   // bit-unchanged.
   // Recall vs the exact all-pairs baseline (q_embed_neardup) is the
   // deliberate trade: pairs split across clusters are missed.
-  val semanticDedup: QueryDef = QueryDef.sql("q_semantic_dedup")(
+  val semanticDedup: QueryDef = QueryDef.pinned("q_semantic_dedup")(
     s"""${Sketches.kmeansAssignCte},
        |mem AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_members
        |        FROM nbf GROUP BY cid),
@@ -738,11 +738,11 @@ object SimilaritySearch {
        |  COALESCE(agg.n_pairs, CAST(0 AS BIGINT)) AS n_pairs,
        |  COALESCE(agg.n_dups, CAST(0 AS BIGINT)) AS n_dups
        |FROM mem LEFT JOIN agg ON mem.cid = agg.cid
-       |ORDER BY mem.cid""".stripMargin) { (s, dir) =>
+       |ORDER BY mem.cid""".stripMargin) { (s, dir, pins) =>
     val vecs = normed(s, dir)
     val (asg, _) = graft.ops.KMeans.fit(
       vecs.select("vec_id", "v"), "vec_id", "v",
-      k = graft.ops.KMeans.adaptiveK(vecs.count()), rounds = 3)
+      k = graft.ops.KMeans.adaptiveK(vecs.count()), rounds = 3, pins)
     val members = asg.join(vecs, asg("id") === vecs("vec_id"))
       .select(col("cid"), col("vec_id"), col("v"), col("nrm"))
     val mem = members.groupBy("cid").agg(count(lit(1)).as("n_members"))

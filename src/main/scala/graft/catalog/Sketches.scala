@@ -146,13 +146,13 @@ object Sketches {
        |    (a, b) -> a + b) AS wcss
        |FROM sq GROUP BY cid ORDER BY cid""".stripMargin
 
-  val kmeansFit: QueryDef = QueryDef.sql("q_kmeans_fit")(kmeansOracle) { (s, dir) =>
+  val kmeansFit: QueryDef = QueryDef.pinned("q_kmeans_fit")(kmeansOracle) { (s, dir, pins) =>
     graft.ops.Vectors.register(s)
     val vecs = Tables.embeddings(s, dir)
       .repartition(s.sparkContext.defaultParallelism, col("vec_id"))
       .select(col("vec_id"), graft.ops.Vectors.toDouble(col("embedding")).as("v"))
     val (asg, cents) = graft.ops.KMeans.fit(vecs, "vec_id", "v",
-      k = graft.ops.KMeans.adaptiveK(vecs.count()), rounds = 3)
+      k = graft.ops.KMeans.adaptiveK(vecs.count()), rounds = 3, pins)
     asg.join(vecs, asg("id") === vecs("vec_id"))
       .join(cents, "cid")
       .select(col("cid"), col("id"),

@@ -853,7 +853,7 @@ object TextAnalysis {
   // not a better plan — is what shrinks this query at 100 TB: hence
   // the ed ≤ 6 twin below is the BENCHED form (its output is
   // near-linear in the corpus) and both ed ≤ 18 forms are auditOnly.
-  private def edJoinPlan(s: SparkSession, dir: String, k: Int): DataFrame = Spill.scoped { pins =>
+  private def edJoinPlan(s: SparkSession, dir: String, k: Int, pins: Pins): DataFrame = {
     val q = 2              // bigrams
     val pfx = k * q + 1    // prefix length |X| − T + 1 ≤ k·q + 1
     val minLong = k * q + 2 // T ≥ 1 ⇔ max(len) ≥ k·q + 2
@@ -908,8 +908,8 @@ object TextAnalysis {
   }
 
   val levenshteinPairsBanded: QueryDef =
-    QueryDef.sql("q_levenshtein_pairs_banded")(levenshteinOracle(18))(
-      edJoinPlan(_, _, 18))
+    QueryDef.pinned("q_levenshtein_pairs_banded")(levenshteinOracle(18))(
+      edJoinPlan(_, _, 18, _))
 
   // The benched edit-distance query: SAME ED-Join machinery, ed ≤ 8
   // (prefix k·q+1 = 17) — a threshold whose output is near-linear in
@@ -920,8 +920,8 @@ object TextAnalysis {
   // corpus has its nearest non-identical pair at distance 8 — ≤ 6
   // would hash-match a 0-row oracle and gate nothing.
   val levenshteinPairsTight: QueryDef =
-    QueryDef.sql("q_levenshtein_pairs_tight")(levenshteinOracle(8))(
-      edJoinPlan(_, _, 8))
+    QueryDef.pinned("q_levenshtein_pairs_tight")(levenshteinOracle(8))(
+      edJoinPlan(_, _, 8, _))
 
   // MinHash-as-ESTIMATOR: jaccard_est = matching signature components
   // / K for every LSH candidate pair — the sketch answer that stands in
@@ -1101,7 +1101,7 @@ object TextAnalysis {
     * left-to-right non-overlapping merge via consecutive-match islands
     * (i − row_number) + offset parity, consumed-successor drop.
     */
-  private def bpeMergeStep(seq: DataFrame): DataFrame = {
+  private def bpeMergeStep(seq: DataFrame, pins: Pins): DataFrame = {
     val wDoc = Window.partitionBy("doc_id").orderBy("i")
     // localCheckpoint: p feeds the argmax AND the merge rewrite; left
     // lazy, each branch re-derived the whole upstream chain — and in
@@ -1109,10 +1109,11 @@ object TextAnalysis {
     // re-ran round 1's two branches: 16 Window nodes in the r16 plan).
     // Checkpointing per round is exactly what a real vocab-build loop
     // does (see q_bpe_merge_round2's scaladoc). The returned frame reads
-    // the checkpoint, so it is a result-lifetime pin (graft.core.Spill):
-    // Session.sweep releases it after the consumer's write.
-    val p = seq.withColumn("tn", lead(col("t"), 1).over(wDoc))
-      .localCheckpoint()
+    // this round's checkpoint; the eager checkpoint has cut the lineage
+    // to the previous round's, which `seq` reads, so that one goes now
+    // and a two-round build holds one checkpoint, not two.
+    val p = pins.checkpoint(seq.withColumn("tn", lead(col("t"), 1).over(wDoc)))
+    pins.releaseCheckpoints(seq)
     val cnt = p.filter(col("tn").isNotNull)
       .groupBy(concat(col("t"), lit(" "), col("tn")).as("pair"))
       .agg(count(lit(1)).as("n"))
@@ -1151,11 +1152,11 @@ object TextAnalysis {
       .orderBy(col("n").desc, col("pair")).limit(20)
   }
 
-  val bpeMergeRound: QueryDef = QueryDef.sql("q_bpe_merge_round")(
+  val bpeMergeRound: QueryDef = QueryDef.pinned("q_bpe_merge_round")(
     s"""WITH $bpePosSql,
        |${bpeRoundSql(1, "seq1", "seq2")},
-       |${bpeFinalSql("seq2")}""".stripMargin) { (s, dir) =>
-    bpeTopPairs(bpeMergeStep(bpePos(s, dir)))
+       |${bpeFinalSql("seq2")}""".stripMargin) { (s, dir, pins) =>
+    bpeTopPairs(bpeMergeStep(bpePos(s, dir), pins))
   }
 
   // TWO unrolled merge rounds — the tokenizer-training DRIVER LOOP made
@@ -1164,12 +1165,12 @@ object TextAnalysis {
   // exactly like the unrolled 3-round Lloyd / PageRank oracles. A real
   // vocab build is `Iterator.iterate(pos)(bpeMergeStep)` with a
   // localCheckpoint per round.
-  val bpeMergeRound2: QueryDef = QueryDef.sql("q_bpe_merge_round2")(
+  val bpeMergeRound2: QueryDef = QueryDef.pinned("q_bpe_merge_round2")(
     s"""WITH $bpePosSql,
        |${bpeRoundSql(1, "seq1", "seq2")},
        |${bpeRoundSql(2, "seq2", "seq3")},
-       |${bpeFinalSql("seq3")}""".stripMargin) { (s, dir) =>
-    bpeTopPairs(bpeMergeStep(bpeMergeStep(bpePos(s, dir))))
+       |${bpeFinalSql("seq3")}""".stripMargin) { (s, dir, pins) =>
+    bpeTopPairs(bpeMergeStep(bpeMergeStep(bpePos(s, dir), pins), pins))
   }
 
   // Incremental dedup — the continuous-training-data shape: a small
@@ -1348,7 +1349,7 @@ object TextAnalysis {
     */
   private val SubL = 16
 
-  private[graft] def substringSpans(d: DataFrame, L: Int): DataFrame = Spill.scoped { pins =>
+  private[graft] def substringSpans(d: DataFrame, L: Int, pins: Pins): DataFrame = {
     graft.functions.ShingleHash60.register(d.sparkSession)
     val h = pins.persist(d
       .select(col("doc_id"), Text.tokens(col("text")).as("toks"))
@@ -1370,7 +1371,7 @@ object TextAnalysis {
       .orderBy("doc_id", "span_start")
   }
 
-  val substringDedup: QueryDef = QueryDef.sql("q_substring_dedup")(
+  val substringDedup: QueryDef = QueryDef.pinned("q_substring_dedup")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |long AS (SELECT doc_id, toks FROM base WHERE len(toks) >= $SubL),
        |g AS (SELECT doc_id,
@@ -1390,8 +1391,8 @@ object TextAnalysis {
        |  MAX(pos) + ${SubL - 1} AS span_end,
        |  MAX(pos) + ${SubL - 1} - MIN(pos) + 1 AS span_len
        |FROM r GROUP BY doc_id, run
-       |ORDER BY doc_id, span_start""".stripMargin) { (s, dir) =>
-    substringSpans(docs(s, dir), SubL)
+       |ORDER BY doc_id, span_start""".stripMargin) { (s, dir, pins) =>
+    substringSpans(docs(s, dir), SubL, pins)
   }
 
   // Scrub twin of q_substring_dedup — the Lee et al. pipeline's actual
@@ -1413,7 +1414,7 @@ object TextAnalysis {
   // document-length, so expanding them would rescan the corpus).
   // 100 TB shape: everything downstream of the shared span relation
   // shuffles (doc_id, int64, int64) triples; output is one row per doc.
-  val substringDedupScrub: QueryDef = QueryDef.sql("q_substring_dedup_scrub")(
+  val substringDedupScrub: QueryDef = QueryDef.pinned("q_substring_dedup_scrub")(
     s"""WITH base AS (SELECT doc_id, $toksSql AS toks FROM documents),
        |long AS (SELECT doc_id, toks FROM base WHERE len(toks) >= $SubL),
        |g AS (SELECT doc_id,
@@ -1448,12 +1449,12 @@ object TextAnalysis {
        |  CAST(t.n_toks - COALESCE(r2.n_removed, 0) AS DOUBLE) / t.n_toks
        |    AS retention
        |FROM tot t LEFT JOIN rem r2 ON t.doc_id = r2.doc_id
-       |ORDER BY t.doc_id""".stripMargin) { (s, dir) =>
-    substringScrubRetention(docs(s, dir), SubL)
+       |ORDER BY t.doc_id""".stripMargin) { (s, dir, pins) =>
+    substringScrubRetention(docs(s, dir), SubL, pins)
   }
 
-  private[graft] def substringScrubRetention(d: DataFrame, L: Int): DataFrame = {
-    val spans = substringSpans(d, L)
+  private[graft] def substringScrubRetention(d: DataFrame, L: Int, pins: Pins): DataFrame = {
+    val spans = substringSpans(d, L, pins)
     val w = Window.partitionBy("doc_id").orderBy("span_start")
     val isl = spans
       .withColumn("prev_e",
@@ -1861,7 +1862,7 @@ object TextAnalysis {
   // per-doc work is then a broadcast join on the bin value. Bucket
   // boundaries are bin-granular (docs sharing a bin share a bucket),
   // the documented trade for never sorting the corpus globally.
-  val perplexityBuckets: QueryDef = QueryDef.sql("q_perplexity_buckets")(
+  val perplexityBuckets: QueryDef = QueryDef.pinned("q_perplexity_buckets")(
     s"""$bigramScoredCte,
        |b AS MATERIALIZED (SELECT doc_id, n_bigrams, round(avg_logprob, 2) AS bin FROM scored),
        |h AS (SELECT bin, CAST(COUNT(*) AS BIGINT) AS n FROM b GROUP BY bin),
@@ -1875,14 +1876,12 @@ object TextAnalysis {
        |  min(b.bin) AS lo, max(b.bin) AS hi,
        |  CAST(SUM(b.n_bigrams) AS BIGINT) AS n_bigrams
        |FROM b JOIN t ON b.bin = t.bin
-       |GROUP BY t.bucket ORDER BY t.bucket""".stripMargin) { (s, dir) =>
+       |GROUP BY t.bucket ORDER BY t.bucket""".stripMargin) { (s, dir, pins) =>
     // localCheckpoint: b feeds the histogram AND the final bucket join;
     // left lazy each reference re-ran the whole bigram-LM pipeline
-    // (tokenize → explode → model joins). Doc-grain rows — tiny. The
-    // result reads b: a result-lifetime pin (graft.core.Spill).
-    val b = bigramScored(s, dir)
-      .select(col("doc_id"), col("n_bigrams"), round(col("avg_logprob"), 2).as("bin"))
-      .localCheckpoint()
+    // (tokenize → explode → model joins). Doc-grain rows — tiny.
+    val b = pins.checkpoint(bigramScored(s, dir)
+      .select(col("doc_id"), col("n_bigrams"), round(col("avg_logprob"), 2).as("bin")))
     val h = b.groupBy("bin").agg(count(lit(1)).as("n"))
     // exclusive cumulative count over the BIN table only — bounded by
     // the number of distinct 2-decimal bins, safe in one window task
@@ -2249,12 +2248,10 @@ object TextAnalysis {
     s"""WITH $containmentCteSql
        |SELECT doc_a, doc_b, n_a, inter, inter / n_a AS containment
        |FROM qual ORDER BY doc_a, doc_b""".stripMargin) { (s, dir) =>
-    val qual = containmentQual(s, dir)
-    val res = qual
+    containmentQual(s, dir)
       .select(col("doc_a"), col("doc_b"), col("n_a"), col("inter"),
         (col("inter") / col("n_a")).as("containment"))
       .orderBy("doc_a", "doc_b")
-    Spill.materialize(res)
   }
 
   // The scrub twin: drop every doc that is ≥0.8-contained in an
@@ -2271,10 +2268,9 @@ object TextAnalysis {
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     val qual = containmentQual(s, dir)
     val contained = qual.select(col("doc_a").as("doc_id")).distinct()
-    val res = docs(s, dir).select("doc_id")
+    docs(s, dir).select("doc_id")
       .join(contained, Seq("doc_id"), "left_anti")
       .orderBy("doc_id")
-    Spill.materialize(res)
   }
 
   // Tokenizer-vocabulary coverage: per-doc out-of-vocabulary rate

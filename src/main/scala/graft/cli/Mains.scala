@@ -199,8 +199,8 @@ object CurateMain {
     val (inDir, outDir) = (args(0), args(1))
     Session.run("graft-curate") { spark =>
       val nIn = graft.core.Tables.documents(spark, inDir).count()
-      val kept = graft.catalog.Curation.corpusDedup.build(spark, inDir)
-      kept.write.mode("overwrite").parquet(s"$outDir/kept")
+      graft.catalog.Curation.corpusDedup.run(spark, inDir)(
+        _.write.mode("overwrite").parquet(s"$outDir/kept"))
       val out = spark.read.parquet(s"$outDir/kept")
       val nKept = out.count()
       val nCanonical = out.filter(org.apache.spark.sql.functions

@@ -27,8 +27,9 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkList
   * and out. The floor fix differs by bucket: task_ms → shuffle work;
   * gap/pre → fewer jobs and leaner plans; codegen → expression reuse;
   * a superlinear scale ratio is only actionable once the growing stage
-  * is named. Several queries share one JVM and one warm-up (Bench's),
-  * and every pass ends with [[graft.Session.sweep]].
+  * is named. Several queries share one JVM and one warm-up (Bench's);
+  * each pass runs through `QueryDef.run` and ends with
+  * [[graft.Session.sweep]].
   *
   * Usage: QueryProfile <sfDir> <q1>[,<q2>...] [passes=2]
   */
@@ -91,13 +92,15 @@ object QueryProfile {
         graft.Bench.warmUp(spark, sfDir)
         rec.settle()
         for (qname <- names.split(",").map(_.trim).filter(_.nonEmpty); p <- 1 to passes) {
-          val fn = graft.SparkEntry.queries(qname)
+          val q = graft.SparkEntry.queries(qname)
           rec.clear()
           val cg0 = codegenMs()
           val t0 = System.nanoTime()
-          val df = fn(spark, sfDir)
-          val tBuilt = System.nanoTime()
-          df.write.format("noop").mode("overwrite").save()
+          var tBuilt = 0L
+          q.run(spark, sfDir) { df =>
+            tBuilt = System.nanoTime()
+            df.write.format("noop").mode("overwrite").save()
+          }
           val t1 = System.nanoTime()
           rec.settle()
           val (js, stages) = rec.snapshot
@@ -116,7 +119,7 @@ object QueryProfile {
           stages.sortBy(-_.taskMs).take(12).foreach { s =>
             println(f"""  stage ${s.id}%4d task ${s.taskMs / 1000.0}%8.1fs wall ${s.wallMs / 1000.0}%7.1fs shufR ${s.shufReadMB}%8.1fMB shufW ${s.shufWriteMB}%8.1fMB inRec ${s.inRecords}%12d outRec ${s.outRecords}%12d  ${s.name}%s""")
           }
-          graft.Session.sweep(spark)
+          graft.Session.sweep()
         }
       } finally spark.sparkContext.removeSparkListener(rec)
     }

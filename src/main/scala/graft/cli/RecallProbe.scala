@@ -83,10 +83,11 @@ object RecallProbe {
         "/root/repo/target/sf10")
     graft.Session.run("graft-recall-probe") { spark =>
       def measure(d: String, regime: String): Unit = {
-        val exact = topSets(graft.SparkEntry.queries("q_ann_topk_refine")(spark, d), 3)
+        def top3(name: String) = graft.SparkEntry.queries(name).run(spark, d)(topSets(_, 3))
+        val exact = top3("q_ann_topk_refine")
         require(exact.nonEmpty, s"no exact top-k rows for $d")
         val recalls = Variants.map { name =>
-          val approx = topSets(graft.SparkEntry.queries(name)(spark, d), 3)
+          val approx = top3(name)
           val r = exact.map { case (q, ex) =>
             approx.getOrElse(q, Set.empty).intersect(ex).size / 3.0
           }.sum / exact.size
@@ -94,7 +95,6 @@ object RecallProbe {
         }
         val qs = recalls.map { case (k, v) => f""""$k":$v%.3f""" }.mkString(",")
         println(s"""{"dir":"$d","regime":"$regime","n_queries":${exact.size},"recall@3":{$qs}}""")
-        spark.catalog.clearCache()
       }
       dirs.foreach(measure(_, "uniform"))
       // clustered corpora at the same three cardinalities as the sf dirs

@@ -101,13 +101,11 @@ object ScaleGen {
       // the bytes only within one JVM, because parquet-mr writes each
       // column chunk's `encodings` list in hash-set order. `parts`
       // sizes the upstream compute stage.
-      val pins = new graft.core.Pins
-      try pins.checkpoint(df.repartition(parts))
+      graft.core.Pins.using(_.checkpoint(df.repartition(parts))
         .repartition(1).sortWithinPartitions(df.columns.map(col): _*)
         .write.mode("overwrite")
         .option("parquet.block.size", (8 * 1024 * 1024).toString)
-        .parquet(tmp)
-      finally pins.release()
+        .parquet(tmp))
       val dir = new java.io.File(tmp)
       val part = dir.listFiles().find(_.getName.endsWith(".parquet"))
         .getOrElse(sys.error(s"no part file under $tmp"))

@@ -3,6 +3,7 @@ package graft.cli
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Pins
 import graft.ops.{KMeans, Vectors}
 
 /** Invariant-export side of the sf10 verification for
@@ -42,10 +43,13 @@ object SemDedupAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val outDir = args(1)
-    graft.Session.run("graft-semdedup-audit")(audit(_, sfDir, outDir))
+    // the assignments read a checkpoint held until every write has read them
+    graft.Session.run("graft-semdedup-audit")(spark =>
+      Pins.using(audit(spark, sfDir, outDir, _)))
   }
 
-  private def audit(spark: SparkSession, sfDir: String, outDir: String): Unit = {
+  private def audit(spark: SparkSession, sfDir: String, outDir: String,
+      pins: Pins): Unit = {
     Vectors.register(spark)
 
     // the catalog query's exact input shape (SimilaritySearch.normed)
@@ -56,7 +60,7 @@ object SemDedupAudit {
 
     val (asg, cents) = KMeans.fit(
       vecs.select("vec_id", "v"), "vec_id", "v",
-      k = KMeans.adaptiveK(vecs.count()), rounds = 3)
+      k = KMeans.adaptiveK(vecs.count()), rounds = 3, pins)
     asg.write.mode("overwrite").parquet(s"$outDir/assign.parquet")
     cents.write.mode("overwrite").parquet(s"$outDir/centroids.parquet")
 
@@ -80,7 +84,7 @@ object SemDedupAudit {
       .write.mode("overwrite").parquet(s"$outDir/dropped.parquet")
 
     // the catalog query itself, as the driver's Verify would run it
-    graft.SparkEntry.queries("q_semantic_dedup")(spark, sfDir)
-      .write.mode("overwrite").parquet(s"$outDir/result.parquet")
+    graft.SparkEntry.queries("q_semantic_dedup").run(spark, sfDir)(
+      _.write.mode("overwrite").parquet(s"$outDir/result.parquet"))
   }
 }

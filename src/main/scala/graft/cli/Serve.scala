@@ -40,11 +40,11 @@ import com.sun.net.httpserver.HttpExchange
   * streaming query's overrides (state-sized shuffle partitions, the
   * RocksDB state store) live on a child session the query owns
   * (`Ingest.drain`) — so concurrent requests plan as they would alone.
-  * Each builder that pins intermediates releases exactly its own pins
-  * (`Spill.scoped`), never the checkpoints a concurrent request is
-  * still reading; the result-lifetime pins listed in `Spill` stay
-  * until ContextCleaner reclaims them. Still a dashboard stand-in, not
-  * a hardened gateway: no admission control or per-request timeout.
+  * Each request runs its query through `QueryDef.run`, which releases
+  * exactly that build's pins once the page is taken, never the
+  * checkpoints a concurrent request is still reading. Still a dashboard
+  * stand-in, not a hardened gateway: no admission control or
+  * per-request timeout.
   */
 final class QueryServer(spark: SparkSession, sfDir: String, bindPort: Int = 0) {
 
@@ -125,20 +125,20 @@ final class QueryServer(spark: SparkSession, sfDir: String, bindPort: Int = 0) {
         graft.SparkEntry.queries.get(name) match {
           case None =>
             respond(ex, 404, s"""{"error":"unknown query","name":${jsonString(name)}}""")
-          case Some(build) =>
+          case Some(q) =>
             val p = params(ex)
-            val limit = limitOf(p)
-            val df = build(spark, sfDir)
-            // ?sort=c1,c2&after=v1,v2 — cursor pagination; without sort
-            // the query's own (deterministic) order is served as-is
-            val page = p.get("sort") match {
-              case Some(cols) => searchAfter(df, cols.split(',').toSeq,
-                p.get("after").map(_.split(',').toSeq))
-              case None => df
+            val rows = q.run(spark, sfDir) { df =>
+              // ?sort=c1,c2&after=v1,v2 — cursor pagination; without
+              // sort the query's own (deterministic) order is served
+              val page = p.get("sort") match {
+                case Some(cols) => searchAfter(df, cols.split(',').toSeq,
+                  p.get("after").map(_.split(',').toSeq))
+                case None => df
+              }
+              // toJSON.take(n): the limit applies before rows reach the
+              // driver; each row arrives as a JSON object string
+              page.toJSON.take(limitOf(p))
             }
-            // toJSON.take(n): the limit applies before rows reach the
-            // driver; each row arrives as a JSON object string
-            val rows = page.toJSON.take(limit)
             respond(ex, 200, rows.mkString("[", ",", "]"))
         }
       case (m, p) => respond(ex, 404, s"""{"error":"no route $m /$p"}""")

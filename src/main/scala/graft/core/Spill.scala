@@ -9,14 +9,18 @@ import org.apache.spark.storage.StorageLevel
 
 /** The pins one build holds: every `persist` or `localCheckpoint` it
   * makes to reuse an intermediate goes through here, and [[release]]
-  * unpersists exactly those, never another query's. A builder gets its
-  * `Pins` from [[Spill.scoped]]; a helper that pins on its caller's
-  * behalf takes the caller's `Pins`. [[graft.replay.Replay.run]] holds
-  * a wire frame it publishes more than once in its own `Pins` and
-  * releases it when the publish returns.
+  * unpersists exactly those, never another query's. A query gets its
+  * `Pins` from [[QueryDef.run]], which releases them once the query's
+  * consumer has returned, so a pin may outlive the build and be read by
+  * the result itself. A helper that pins on its caller's behalf takes
+  * the caller's `Pins`. A local scope that outlives no caller holds its
+  * own, through [[Pins.using]] (`KMeans.fit`'s corpus, `cli.ScaleGen`,
+  * `cli.SemDedupAudit`) or its own `finally`
+  * ([[graft.replay.Replay.run]]).
   */
 final class Pins {
   private val held = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+  private val checkpoints = scala.collection.mutable.LinkedHashMap.empty[Int, RDD[_]]
 
   private def hold(release: () => Unit): Unit = synchronized { held += release }
 
@@ -34,10 +38,21 @@ final class Pins {
   def checkpoint(df: DataFrame): DataFrame = {
     val c = df.localCheckpoint()
     c.queryExecution.logical.foreach {
-      case r: LogicalRDD => hold(() => r.rdd.unpersist(blocking = false))
+      case r: LogicalRDD => synchronized(checkpoints(r.rdd.id) = r.rdd)
       case _ =>
     }
     c
+  }
+
+  /** Release now, before the scope ends, this scope's checkpoints that
+    * `df` reads: for an iteration whose next eager [[checkpoint]] of
+    * `df` has cut the lineage to them.
+    */
+  def releaseCheckpoints(df: DataFrame): Unit = synchronized {
+    df.queryExecution.logical.foreach {
+      case r: LogicalRDD => checkpoints.remove(r.rdd.id).foreach(_.unpersist(blocking = false))
+      case _ =>
+    }
   }
 
   /** `rdd.persist(MEMORY_AND_DISK)`, released with the scope. */
@@ -51,38 +66,35 @@ final class Pins {
   def release(): Unit = synchronized {
     held.foreach(_())
     held.clear()
+    checkpoints.values.foreach(_.unpersist(blocking = false))
+    checkpoints.clear()
   }
 }
 
-/** Materialize a result WITHOUT collecting it to the driver.
+object Pins {
+  /** Run `f` with a fresh [[Pins]], released when `f` returns or throws. */
+  def using[A](f: Pins => A): A = {
+    val pins = new Pins
+    try f(pins) finally pins.release()
+  }
+}
+
+/** Write a result to a temporary parquet and scan it back, WITHOUT
+  * collecting it to the driver (a distributed write: each partition
+  * writes its own file, nothing funnels through the driver).
   *
-  * Iterative catalog queries (connected components, PageRank, the
-  * minhash self-joins) persist/localCheckpoint intermediates; those
-  * pins must be released before the query returns, because queries
-  * share one long-lived session (Bench and Verify run the whole
-  * catalog in one, `ServeMain` runs requests side by side on one).
-  * Releasing them while the result still references their lineage
-  * would force a recompute, or fail outright for a checkpoint, so
-  * [[scoped]] first writes the result to a temporary parquet (a
-  * distributed write: each partition writes its own file, nothing
-  * funnels through the driver), then releases exactly the build's own
-  * [[Pins]], and returns a fresh scan of the spill. The pins are
-  * released when the build or the write throws too. At 100 TB the
-  * result of e.g. PageRank is one row per node — cluster-sized — and
-  * this path never materializes it on any single node, unlike a
-  * `collect()`.
-  *
-  * Result-lifetime pins do not go through a scope: the returned frame
-  * itself reads the pinned RDD, so the pin cannot be dropped before
-  * the consumer has read the result. They are `GlobalIndex`'s three
-  * methods (q_global_rownum, q_shard_balance, q_pack_sequences,
-  * q_token_budget; q_training_export spills its result, so its
-  * running-total pin goes with its scope), the assignments `KMeans.fit`
-  * returns (q_kmeans_fit, q_semantic_dedup), `bpeMergeStep`'s
-  * checkpoint (q_bpe_merge_round, q_bpe_merge_round2) and
-  * q_perplexity_buckets' bucket checkpoint. [[graft.Session.sweep]]
-  * releases those between queries; elsewhere ContextCleaner does once
-  * the result is unreachable.
+  * A query's own pins need no spill: [[QueryDef.run]] holds them until
+  * the consumer is done. A spill is for a result that outlives its
+  * inputs, where the consumer would otherwise read what is already
+  * gone:
+  *  - the streaming queries, whose broker or Elasticsearch stand-in
+  *    stops when `Service.using` returns, before the consumer reads;
+  *  - q_bucketed_join, which drops its bucketed tables;
+  *  - three intermediates, each for the reason its comment gives: the
+  *    containment per-doc shingle arrays (reused without heap
+  *    residency), q_decontaminate's dropped ids (a known tiny size for
+  *    the anti join) and q_ann_topk_refine's candidates (the session
+  *    store).
   *
   * Spill root: `spark.graft.spill.dir` if set, else a per-JVM temp dir.
   * On a multi-host cluster the conf MUST point at storage every executor
@@ -119,16 +131,6 @@ object Spill {
   }
 
   sys.addShutdownHook(cleanup())
-
-  /** Run `build` with a fresh [[Pins]], spill its result, release the
-    * pins (also when the build or the write throws), and return a scan
-    * of the spill.
-    */
-  def scoped(build: Pins => DataFrame): DataFrame = {
-    val pins = new Pins
-    try materialize(build(pins))
-    finally pins.release()
-  }
 
   /** Write `result` to a spill parquet and return a scan of it. */
   def materialize(result: DataFrame): DataFrame = {

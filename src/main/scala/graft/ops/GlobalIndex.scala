@@ -26,14 +26,14 @@ import graft.core.Pins
   */
 object GlobalIndex {
 
-  def withRowNumber(df: DataFrame, sortCols: Seq[Column], out: String): DataFrame = {
+  def withRowNumber(df: DataFrame, sortCols: Seq[Column], out: String,
+      pins: Pins): DataFrame = {
     val spark = df.sparkSession
     val sorted = df.orderBy(sortCols: _*)
     val schema = sorted.schema.add(out, LongType, nullable = false)
     // zipWithIndex runs its own count job before the labeling job —
     // pin the partitioning across both (see withRunningTotal)
-    val rdd = sorted.rdd
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = pins.persist(sorted.rdd)
       .zipWithIndex().map { case (r, i) =>
         Row.fromSeq(r.toSeq :+ (i + 1L))
       }
@@ -69,10 +69,8 @@ object GlobalIndex {
     // partition contents phase 2 labels, and a recompute (speculation,
     // executor loss, non-deterministic upstream) can re-sample range
     // bounds. Held in the caller's `pins`, which must outlive every
-    // read of the returned frame: a scoped build releases it after its
-    // spill; a result-lifetime pin (graft.core.Spill) is left to
-    // Session.sweep, or to ContextCleaner once the frame's lineage is
-    // GC'd.
+    // read of the returned frame (QueryDef.run releases them after the
+    // consumer).
     val rdd = pins.persist(sorted.rdd)
     val partSums = rdd.mapPartitionsWithIndex { case (i, it) =>
       var s = 0L
@@ -107,7 +105,7 @@ object GlobalIndex {
     */
   def withKeyedRankAndTotal(df: DataFrame, keyCol: String,
       sortCols: Seq[Column], valueCol: String, outRank: String,
-      outTotal: String, numPartitions: Int): DataFrame = {
+      outTotal: String, numPartitions: Int, pins: Pins): DataFrame = {
     val spark = df.sparkSession
     val sorted = df
       .repartitionByRange(numPartitions, (org.apache.spark.sql.functions
@@ -121,8 +119,7 @@ object GlobalIndex {
       .add(outTotal, LongType, nullable = false)
     // same two-job pinning as withRunningTotal: phase-2 labeling is only
     // correct against the exact partition contents phase 1 summed
-    val rdd = sorted.rdd.persist(
-      org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val rdd = pins.persist(sorted.rdd)
     // phase 1: per-partition per-key (row count, value sum)
     val partKey = rdd.mapPartitionsWithIndex { case (i, it) =>
       val m = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Long)]

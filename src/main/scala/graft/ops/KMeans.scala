@@ -73,10 +73,11 @@ object KMeans {
     * @param k        centroid count; initial centroids are the k
     *                 smallest-id vectors (deterministic seed)
     * @param rounds   Lloyd rounds to run
+    * @param pins     holds the checkpoint the returned assignments read
     * @return (assignments (id, cid), centroids (cid, cv))
     */
   def fit(vectors: DataFrame, idCol: String, vecCol: String,
-      k: Int, rounds: Int): (DataFrame, DataFrame) = {
+      k: Int, rounds: Int, pins: graft.core.Pins): (DataFrame, DataFrame) = {
     require(rounds >= 1, "kmeans needs at least one Lloyd round")
     val spark = vectors.sparkSession
     import spark.implicits._
@@ -85,10 +86,9 @@ object KMeans {
     // frame whose blocks are dropped cannot be recomputed, so cleanup
     // must release exactly the intermediates and never the returned
     // frames: the corpus checkpoint is held in a local scope, released
-    // before returning; the returned assignments' checkpoint is the
-    // caller's (a result-lifetime pin, see graft.core.Spill)
-    val pins = new graft.core.Pins
-    try {
+    // before returning; the returned assignments' checkpoint is held in
+    // the caller's `pins`
+    graft.core.Pins.using { corpus =>
       // The corpus view is the only distributed round state (consumed by
       // rounds+1 assign passes) — pin it once. The CENTROID table is at
       // most adaptiveK's 4096 rows × 64 doubles (~2 MB): it lives as a
@@ -100,7 +100,7 @@ object KMeans {
       // overhead. Collected doubles round-trip bit-exactly, so the
       // trained run is unchanged (KMeansSpec pins determinism; the
       // kmeans-backed oracles hash-gate it end to end).
-      val n = pins.checkpoint(vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
+      val n = corpus.checkpoint(vectors.select(col(idCol).as("id"), col(vecCol).as("v"))
         .withColumn("nrm", Vectors.norm2(col("v"))))
       var cents: Seq[(Long, Seq[Double])] = n.orderBy("id").limit(k)
         .select(col("id"), col("v")).collect()
@@ -129,8 +129,8 @@ object KMeans {
         cents = cents.map { case (cid, old) => (cid, updated.getOrElse(cid, old)) }
         r += 1
       }
-      (assign(localC).select("id", "cid").localCheckpoint(), cents.toDF("cid", "cv"))
-    } finally pins.release()
+      (pins.checkpoint(assign(localC).select("id", "cid")), cents.toDF("cid", "cv"))
+    }
   }
 
   /** Mean cosine of each vector to its assigned centroid — the

@@ -48,8 +48,8 @@ object RollingMedian {
 
   /** The range-sorted RDD both phases read is pinned in `pins`. Release
     * them only once no further consumption of the result's LINEAGE can
-    * happen (e.g. when the [[graft.core.Spill.scoped]] build the pins
-    * belong to has spilled the result): a post-release recompute would
+    * happen (e.g. when the consumer that [[graft.core.QueryDef.run]]
+    * handed the result to has returned): a post-release recompute would
     * re-sample the range-partitioner bounds and re-pair phase 2 with
     * phase 1's stale tails. Before r18 the RDD was left pinned for the
     * session and only the bench/verify sweep released it — a stranded

@@ -120,9 +120,9 @@ class AdvancedOpsSpec extends AnyFunSuite {
 
   /** Top-20 pair sets of a trajectory query as (ua, ub) tuples. */
   private def topPairs(name: String, dir: String): Seq[(Long, Long)] =
-    SparkEntry.queries(name)(spark, dir)
-      .select(col("ua").cast("long"), col("ub").cast("long"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    SparkEntry.queries(name).run(spark, dir)(
+      _.select(col("ua").cast("long"), col("ub").cast("long")).collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
 
   /** Quality floors for q_trajectory_sim_lsh, mirroring the ANN
     * family's two-regime philosophy (AccuracySpecs.annFloors scaladoc):
@@ -177,8 +177,8 @@ class AdvancedOpsSpec extends AnyFunSuite {
     // --- uniform regime: the sf0.01 testdata ---
     val sf = "/root/testdata/sf0.01"
     def meanTopCos(name: String): Double = {
-      val c = SparkEntry.queries(name)(spark, sf)
-        .select(col("cosine").cast("double")).collect().map(_.getDouble(0))
+      val c = SparkEntry.queries(name).run(spark, sf)(
+        _.select(col("cosine").cast("double")).collect()).map(_.getDouble(0))
       c.sum / c.length
     }
     val exactMean = meanTopCos("q_trajectory_sim")

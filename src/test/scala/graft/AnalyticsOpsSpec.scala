@@ -13,7 +13,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("ewma matches a sequential scala fold over the same event order") {
-    val rows = graft.catalog.Analytics.ewma.build(spark, sf).collect()
+    val rows = graft.catalog.Analytics.ewma.run(spark, sf)(_.collect())
     val events = graft.core.Tables.events(spark, sf)
       .select(col("event_type"), expr("unix_micros(ts) div 86400000000").as("day"),
         unix_micros(col("ts")).as("us"), col("event_id"), col("value"))
@@ -31,7 +31,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   }
 
   test("funnel stages are monotonically non-increasing") {
-    val n = graft.catalog.Analytics.eventFunnel.build(spark, sf).collect()
+    val n = graft.catalog.Analytics.eventFunnel.run(spark, sf)(_.collect())
       .sortBy(_.getAs[Int]("stage")).map(_.getAs[Long]("n_users"))
     assert(n.length == 3)
     assert(n(0) >= n(1) && n(1) >= n(2))
@@ -39,7 +39,7 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   }
 
   test("every cohort is complete at offset zero and never grows") {
-    val rows = graft.catalog.Analytics.cohortRetention.build(spark, sf).collect()
+    val rows = graft.catalog.Analytics.cohortRetention.run(spark, sf)(_.collect())
       .map(r => (r.getAs[Long]("cohort_day"), r.getAs[Long]("day_offset"),
         r.getAs[Long]("n_users")))
     val byCohort = rows.groupBy(_._1)
@@ -59,9 +59,9 @@ class AnalyticsOpsSpec extends AnyFunSuite {
   test("histogram percentiles equal the exact nearest-rank values at bin granularity") {
     // rounding is monotone, so the CDF-selected bin must be exactly
     // round(exact nearest-rank percentile, 2) — not merely close
-    val exact = graft.catalog.Analytics.percentiles.build(spark, sf).collect()
+    val exact = graft.catalog.Analytics.percentiles.run(spark, sf)(_.collect())
       .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getDouble(3))).toMap
-    val hist = graft.catalog.Analytics.percentilesHist.build(spark, sf).collect()
+    val hist = graft.catalog.Analytics.percentilesHist.run(spark, sf)(_.collect())
       .map(r => r.getString(0) -> (r.getDouble(2), r.getDouble(3), r.getDouble(4))).toMap
     assert(hist.keySet == exact.keySet && hist.nonEmpty)
     def r2(x: Double) = BigDecimal(x).setScale(2, BigDecimal.RoundingMode.HALF_UP).toDouble
@@ -74,9 +74,9 @@ class AnalyticsOpsSpec extends AnyFunSuite {
     // bins never split across quartiles, so counts may deviate from
     // exact NTILE by at most one bin's population and each quartile
     // boundary by at most one bin width
-    val exact = graft.catalog.Analytics.valueQuartiles.build(spark, sf).collect()
+    val exact = graft.catalog.Analytics.valueQuartiles.run(spark, sf)(_.collect())
       .map(r => r.getInt(0).toLong -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    val hist = graft.catalog.Analytics.valueQuartilesHist.build(spark, sf).collect()
+    val hist = graft.catalog.Analytics.valueQuartilesHist.run(spark, sf)(_.collect())
       .map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
     assert(hist.keySet == Set(1L, 2L, 3L, 4L) && exact.keySet == hist.keySet)
     // a partition of the corpus: counts sum to the total

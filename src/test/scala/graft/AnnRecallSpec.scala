@@ -68,10 +68,11 @@ class AnnRecallSpec extends AnyFunSuite {
     * serve as the reference here.
     */
   private def checkRegime(d: String, regime: String): Map[String, Double] = {
-    val exact = topSets(SparkEntry.queries("q_ann_topk_refine")(spark, d), 3)
+    def top3(name: String) = SparkEntry.queries(name).run(spark, d)(topSets(_, 3))
+    val exact = top3("q_ann_topk_refine")
     assert(exact.size == 20 && exact.values.forall(_.size == 3))
     def meanRecall(name: String): Double = {
-      val approx = topSets(SparkEntry.queries(name)(spark, d), 3)
+      val approx = top3(name)
       exact.map { case (q, ex) =>
         approx.getOrElse(q, Set.empty).intersect(ex).size / 3.0
       }.sum / exact.size

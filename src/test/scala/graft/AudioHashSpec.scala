@@ -80,8 +80,8 @@ class AudioHashSpec extends AnyFunSuite {
   }
 
   test("catalog query equals brute-force hamming pairs at sf0.001") {
-    val rows = SparkEntry.queries("q_audio_neardup")(spark, "/root/testdata/sf0.001")
-      .collect()
+    val rows = SparkEntry.queries("q_audio_neardup")
+      .run(spark, "/root/testdata/sf0.001")(_.collect())
     // brute-force recompute over the fingerprints: the banded plan must
     // return EXACTLY the hamming ≤ 6 pair set
     val sig = AudioHash.fingerprints(spark,

@@ -16,8 +16,10 @@ class CorpusOpsSpec extends AnyFunSuite {
     val dir = "/root/testdata/sf0.001"
     val docs = graft.core.Tables.documents(spark, dir)
       .select("doc_id", "lang", "n_chars")
-    val clusters = SparkEntry.queries("q_dedup_clusters")(spark, dir)
-      .select(col("doc_id"), col("cluster_id"))
+    import spark.implicits._
+    val clusters = SparkEntry.queries("q_dedup_clusters").run(spark, dir)(
+      _.select(col("doc_id"), col("cluster_id")).as[(Long, Long)].collect())
+      .toSeq.toDF("doc_id", "cluster_id")
     // doc-level reconstruction of the split the aggregate query reports
     def splitOf(c: org.apache.spark.sql.Column) =
       when(graft.ops.Text.hash60(concat(lit("split:"), c.cast("string"))) % 100 < 80, "train")
@@ -27,7 +29,7 @@ class CorpusOpsSpec extends AnyFunSuite {
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
       .withColumn("split", splitOf(col("cluster_id")))
     // 1. the aggregate catalog query equals the doc-level reconstruction
-    val agg = SparkEntry.queries("q_split_leakage_safe")(spark, dir).collect()
+    val agg = SparkEntry.queries("q_split_leakage_safe").run(spark, dir)(_.collect())
       .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     val rebuilt = perDoc.groupBy("split", "lang")
       .agg(count(lit(1)).as("n_docs"), countDistinct(col("cluster_id")).as("n_clusters"),
@@ -52,18 +54,18 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("corpus dedup keeps every unique doc and exactly one canonical per cluster") {
     val total = graft.core.Tables.documents(spark, sf).count()
-    val kept = graft.catalog.Curation.corpusDedup.build(spark, sf)
-    val rows = kept.collect()
+    val rows = graft.catalog.Curation.corpusDedup.run(spark, sf)(_.collect())
     assert(rows.length < total, "near-dup clusters exist at sf0.01, some docs must drop")
     // every kept doc is its own cluster representative
     assert(rows.forall(r => r.getAs[Long]("cluster_id") == r.getAs[Long]("doc_id")))
     // survivors that had duplicates really were cluster members; the
     // pair queries (same LSH+verify definition) must agree on who
-    val verified = graft.catalog.TextAnalysis.minhashVerified.build(spark, sf)
-      .filter(col("jaccard") >= 0.7)
-    val dupMembers = verified.select(col("doc_a").as("d")).
-      unionByName(verified.select(col("doc_b").as("d")))
-      .distinct().collect().map(_.getLong(0)).toSet
+    val dupMembers = graft.catalog.TextAnalysis.minhashVerified.run(spark, sf) { pairs =>
+      val verified = pairs.filter(col("jaccard") >= 0.7)
+      verified.select(col("doc_a").as("d"))
+        .unionByName(verified.select(col("doc_b").as("d")))
+        .distinct().collect().map(_.getLong(0)).toSet
+    }
     val keptDups = rows.filter(_.getAs[Int]("had_dups") == 1).map(_.getAs[Long]("doc_id")).toSet
     assert(keptDups.subsetOf(dupMembers))
     // dropped docs = dup members that are not canonical
@@ -72,8 +74,8 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("weighted sample prefers long documents and is deterministic") {
     val q = graft.catalog.Curation.sampleWeighted
-    val a = q.build(spark, sf).collect()
-    val b = q.build(spark, sf).collect()
+    val a = q.run(spark, sf)(_.collect())
+    val b = q.run(spark, sf)(_.collect())
     assert(a.toSeq == b.toSeq, "salted-hash keys must be partition-invariant")
     assert(a.length == 50)
     val sampleMean = a.map(_.getAs[Long]("n_chars")).sum.toDouble / a.length
@@ -84,7 +86,7 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("bm25 returns 5 ranked hits per query and never the query doc itself") {
-    val rows = graft.catalog.TextAnalysis.bm25Retrieval.build(spark, sf).collect()
+    val rows = graft.catalog.TextAnalysis.bm25Retrieval.run(spark, sf)(_.collect())
     val byQuery = rows.groupBy(_.getAs[Long]("query_id"))
     assert(byQuery.size == 5)
     byQuery.foreach { case (qid, hits) =>
@@ -99,7 +101,7 @@ class CorpusOpsSpec extends AnyFunSuite {
 
   test("sequence packing conserves tokens, fills every non-final sequence exactly") {
     val L = 256L
-    val rows = graft.catalog.Curation.packSequences.build(spark, sf).collect()
+    val rows = graft.catalog.Curation.packSequences.run(spark, sf)(_.collect())
     // offsets stay inside the sequence
     assert(rows.forall { r =>
       val p = r.getAs[Long]("pos_in_seq"); val n = r.getAs[Long]("n_toks_in_seq")
@@ -123,10 +125,10 @@ class CorpusOpsSpec extends AnyFunSuite {
   }
 
   test("bigram-lm bigram counts match token counts and scores are negative log-probs") {
-    val lm = graft.catalog.TextAnalysis.bigramLm.build(spark, sf)
     val toks = graft.core.Tables.documents(spark, sf)
       .select(col("doc_id"), size(graft.ops.Text.tokens(col("text"))).as("n_toks"))
-    val joined = lm.join(toks, "doc_id").collect()
+    val joined = graft.catalog.TextAnalysis.bigramLm.run(spark, sf)(
+      _.join(toks, "doc_id").collect())
     assert(joined.nonEmpty)
     joined.foreach { r =>
       assert(r.getAs[Long]("n_bigrams") == r.getAs[Int]("n_toks") - 1L)

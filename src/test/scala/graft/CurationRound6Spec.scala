@@ -12,7 +12,7 @@ class CurationRound6Spec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.01"
 
   private def run(name: String) =
-    SparkEntry.queries(name)(spark, dir).collect()
+    SparkEntry.queries(name).run(spark, dir)(_.collect())
 
   test("semantic dedup finds a subset of the exact near-dup pairs") {
     // every within-cluster pair with cos >= 0.4 is by definition in the

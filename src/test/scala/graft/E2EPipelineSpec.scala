@@ -78,7 +78,7 @@ class E2EPipelineSpec extends AnyFunSuite {
   test("capstone q_e2e_kafka_es: real-wire topology equals the batch aggregate") {
     val dir = "/root/testdata/sf0.001"
     val viaWire = graft.catalog.Streaming.e2eKafkaEs
-      .build(spark, dir).collect().toSeq
+      .run(spark, dir)(_.collect()).toSeq
     val batch = graft.core.Tables.events(spark, dir)
       .groupBy(unix_timestamp(date_trunc("hour", col("ts"))).as("hour_epoch"),
         col("event_type"))

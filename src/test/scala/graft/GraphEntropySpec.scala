@@ -10,7 +10,7 @@ class GraphEntropySpec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.001"
 
   test("fixed-point pagerank: mass bounded, floor respected, degree ordering") {
-    val r = graft.catalog.Graph.pagerank.build(spark, dir).collect()
+    val r = graft.catalog.Graph.pagerank.run(spark, dir)(_.collect())
     assert(r.nonEmpty)
     val ranks = r.map(_.getAs[Long]("rank_u"))
     // damped floor: every node keeps at least (1-d) of the unit mass
@@ -25,17 +25,17 @@ class GraphEntropySpec extends AnyFunSuite {
   }
 
   test("two-star CC equals pointer-jumping CC") {
-    val pj = graft.catalog.Curation.dedupClusters.build(spark, dir)
-      .collect().map(_.toSeq).toSeq
-    val ts = graft.catalog.Curation.dedupClustersTwoStar.build(spark, dir)
-      .collect().map(_.toSeq).toSeq
+    val pj = graft.catalog.Curation.dedupClusters.run(spark, dir)(_.collect())
+      .map(_.toSeq).toSeq
+    val ts = graft.catalog.Curation.dedupClustersTwoStar.run(spark, dir)(_.collect())
+      .map(_.toSeq).toSeq
     assert(ts == pj)
   }
 
   test("approx quantiles track exact nearest-rank percentiles") {
     import org.apache.spark.sql.functions._
-    val approx = graft.catalog.Sketches.approxQuantiles.build(spark, dir)
-      .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+    val approx = graft.catalog.Sketches.approxQuantiles.run(spark, dir)(_.collect())
+      .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     val exact = graft.core.Tables.events(spark, dir)
       .groupBy("event_type")
       .agg(expr("percentile(value, 0.5)").as("p50"), expr("percentile(value, 0.9)").as("p90"),
@@ -55,8 +55,8 @@ class GraphEntropySpec extends AnyFunSuite {
     val vecs = graft.core.Tables.embeddings(spark, dir)
       .select(col("vec_id"), graft.ops.Vectors.toDouble(col("embedding")).as("v"))
       .localCheckpoint()
-    def wcss(rounds: Int): Double = {
-      val (asg, cents) = graft.ops.KMeans.fit(vecs, "vec_id", "v", k = 8, rounds = rounds)
+    def wcss(rounds: Int): Double = graft.core.Pins.using { pins =>
+      val (asg, cents) = graft.ops.KMeans.fit(vecs, "vec_id", "v", k = 8, rounds, pins)
       asg.join(vecs, asg("id") === vecs("vec_id")).join(cents, "cid")
         .select(aggregate(zip_with(col("v"), col("cv"), (x, c) => (x - c) * (x - c)),
           lit(0.0), (a, x) => a + x).as("sq"))
@@ -68,7 +68,7 @@ class GraphEntropySpec extends AnyFunSuite {
   }
 
   test("token entropy: bounds and exact value on a uniform document") {
-    val rows = graft.catalog.TextAnalysis.tokenEntropy.build(spark, dir).collect()
+    val rows = graft.catalog.TextAnalysis.tokenEntropy.run(spark, dir)(_.collect())
     assert(rows.nonEmpty)
     rows.foreach { row =>
       val h = row.getAs[Double]("entropy")

@@ -97,8 +97,7 @@ class ImageHashSpec extends AnyFunSuite {
   }
 
   test("catalog query equals brute-force 112-bit hamming pairs at sf0.001") {
-    val rows = SparkEntry.queries("q_image_neardup")(spark, "/root/testdata/sf0.001")
-      .collect()
+    val rows = SparkEntry.queries("q_image_neardup").run(spark, "/root/testdata/sf0.001")(_.collect())
     // brute-force recompute over the hashed signatures: the banded plan
     // must return EXACTLY the 112-bit hamming ≤ 6 pair set
     val sig = ImageHash.dhashes(spark,

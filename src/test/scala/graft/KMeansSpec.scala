@@ -28,22 +28,24 @@ class KMeansSpec extends AnyFunSuite {
   }
 
   test("deterministic across runs; objective never decreases with rounds") {
-    val df = corpus()
-    val (a1, c1) = KMeans.fit(df, "id", "v", k = 3, rounds = 1)
-    val (a1b, _) = KMeans.fit(df, "id", "v", k = 3, rounds = 1)
-    assert(a1.orderBy("id").collect().map(_.toSeq).toSeq ==
-      a1b.orderBy("id").collect().map(_.toSeq).toSeq)
+    graft.core.Pins.using { pins =>
+      val df = corpus()
+      val (a1, c1) = KMeans.fit(df, "id", "v", k = 3, rounds = 1, pins)
+      val (a1b, _) = KMeans.fit(df, "id", "v", k = 3, rounds = 1, pins)
+      assert(a1.orderBy("id").collect().map(_.toSeq).toSeq ==
+        a1b.orderBy("id").collect().map(_.toSeq).toSeq)
 
-    val obj1 = KMeans.meanAssignedCosine(df, "id", "v", a1, c1)
-    val (a2, c2) = KMeans.fit(df, "id", "v", k = 3, rounds = 2)
-    val obj2 = KMeans.meanAssignedCosine(df, "id", "v", a2, c2)
-    assert(obj2 >= obj1 - 1e-12, s"objective decreased: $obj1 -> $obj2")
+      val obj1 = KMeans.meanAssignedCosine(df, "id", "v", a1, c1)
+      val (a2, c2) = KMeans.fit(df, "id", "v", k = 3, rounds = 2, pins)
+      val obj2 = KMeans.meanAssignedCosine(df, "id", "v", a2, c2)
+      assert(obj2 >= obj1 - 1e-12, s"objective decreased: $obj1 -> $obj2")
+    }
   }
 
   test("recovers the three separated clusters") {
     val df = corpus()
-    val (asg, _) = KMeans.fit(df, "id", "v", k = 3, rounds = 2)
-    val got = asg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = graft.core.Pins.using(KMeans.fit(df, "id", "v", k = 3, rounds = 2, _)._1.collect())
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // every vector of a true cluster shares one assigned centroid
     (0 until 3).foreach { c =>
       val ids = (0 until 90).filter(_ % 3 == c).map(_.toLong)
@@ -56,13 +58,17 @@ class KMeansSpec extends AnyFunSuite {
     val sc = spark.sparkContext
     val earlier = spark.range(500).toDF().localCheckpoint()
     val pinned = sc.getPersistentRDDs.keySet
-    val (asg, _) = KMeans.fit(corpus(), "id", "v", k = 3, rounds = 2)
-    val asgIds = asg.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
-    }.toSet
-    // the one RDD fit leaves pinned is the assignments' own checkpoint
-    assert(sc.getPersistentRDDs.keySet -- pinned == asgIds)
-    assert(earlier.count() == 500)
-    assert(asg.count() == 90)
+    graft.core.Pins.using { pins =>
+      val (asg, _) = KMeans.fit(corpus(), "id", "v", k = 3, rounds = 2, pins)
+      val asgIds = asg.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id
+      }.toSet
+      // the one RDD fit leaves pinned is the assignments' own
+      // checkpoint, held in the caller's scope
+      assert(sc.getPersistentRDDs.keySet -- pinned == asgIds)
+      assert(earlier.count() == 500)
+      assert(asg.count() == 90)
+    }
+    assert(sc.getPersistentRDDs.keySet -- pinned == Set.empty)
   }
 }

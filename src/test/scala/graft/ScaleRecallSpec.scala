@@ -17,10 +17,10 @@ class ScaleRecallSpec extends AnyFunSuite {
   private val sf10 = "/root/repo/target/sf10"
 
   private def topSets(name: String, d: String): Map[Long, Set[Long]] =
-    SparkEntry.queries(name)(spark, d)
-      .filter(org.apache.spark.sql.functions.col("rnk") <= 3)
-      .select("query_id", "neighbor_id")
-      .collect()
+    SparkEntry.queries(name).run(spark, d)(
+      _.filter(org.apache.spark.sql.functions.col("rnk") <= 3)
+        .select("query_id", "neighbor_id")
+        .collect())
       .groupBy(_.getLong(0))
       .map { case (q, rows) => q -> rows.map(_.getLong(1)).toSet }
 

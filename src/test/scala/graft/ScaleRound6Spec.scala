@@ -13,7 +13,7 @@ class ScaleRound6Spec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.01"
 
   private def run(name: String) =
-    SparkEntry.queries(name)(spark, dir).collect()
+    SparkEntry.queries(name).run(spark, dir)(_.collect())
 
   test("z-order buckets prune the sample box query") {
     val rows = run("q_zorder")
@@ -120,7 +120,7 @@ class ScaleRound6Spec extends AnyFunSuite {
         s"bucketed join still shuffles — bucket pruning lost:\n$plan")
       // and it computes the same rows as the shuffled salted join
       assert(joined.count() ==
-        SparkEntry.queries("q_salted_join")(spark, dir).count())
+        SparkEntry.queries("q_salted_join").run(spark, dir)(_.count()))
     } finally drop()
   }
 

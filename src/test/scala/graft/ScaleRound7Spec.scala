@@ -13,12 +13,11 @@ class ScaleRound7Spec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.01"
 
   test("q_dpp_prune's fact scan carries a dynamicpruning partition filter") {
-    val df = SparkEntry.queries("q_dpp_prune")(spark, dir)
-    val planStr = df.queryExecution.executedPlan.toString
+    val (planStr, rows) = SparkEntry.queries("q_dpp_prune").run(spark, dir)(df =>
+      (df.queryExecution.executedPlan.toString, df.collect()))
     assert(planStr.toLowerCase.contains("dynamicpruning"),
       s"no DynamicPruningSubquery on the fact scan:\n$planStr")
     // and the pruned result is a strict subset of the event types
-    val rows = df.collect()
     assert(rows.nonEmpty, "dim cut selected no event type at sf0.01")
     assert(rows.length < 5,
       "dim cut selected ALL five types — pruning is vacuous at this SF")

@@ -13,23 +13,24 @@ class ScaleRound8Spec extends AnyFunSuite {
   private val dir = "/root/testdata/sf0.01"
 
   test("q_agg_pushdown's scan answers COUNT/MIN/MAX from parquet metadata") {
-    val df = SparkEntry.queries("q_agg_pushdown")(spark, dir)
-    val planStr = df.queryExecution.executedPlan.toString
+    val (planStr, r) = SparkEntry.queries("q_agg_pushdown").run(spark, dir)(df =>
+      (df.queryExecution.executedPlan.toString, df.collect().head))
     assert(planStr.contains("PushedAggregation: [COUNT(*)"),
       s"aggregate did not reach the parquet scan:\n$planStr")
     // and the child session's v2 reader didn't leak into the shared one
     assert(spark.conf.get("spark.sql.parquet.aggregatePushdown") == "false")
-    val r = df.collect().head
     assert(r.getLong(0) == 10000L && r.getLong(1) == 0L)
   }
 
   test("variant_get extractions equal get_json_object over the same docs") {
-    val viaVariant = SparkEntry.queries("q_variant_extract")(spark, dir)
-    val viaString = SparkEntry.queries("q_json_path")(spark, dir)
-    assert(viaVariant.columns.toSeq == viaString.columns.toSeq)
-    assert(viaVariant.exceptAll(viaString).isEmpty &&
-      viaString.exceptAll(viaVariant).isEmpty,
-      "VARIANT and string-path extraction disagree")
+    SparkEntry.queries("q_variant_extract").run(spark, dir) { viaVariant =>
+      SparkEntry.queries("q_json_path").run(spark, dir) { viaString =>
+        assert(viaVariant.columns.toSeq == viaString.columns.toSeq)
+        assert(viaVariant.exceptAll(viaString).isEmpty &&
+          viaString.exceptAll(viaVariant).isEmpty,
+          "VARIANT and string-path extraction disagree")
+      }
+    }
   }
 
   test("a variant round-trips typed values, nulls, and nested access") {

@@ -52,8 +52,8 @@ class ScaleTechniquesSpec extends AnyFunSuite {
 
   test("HLL approx distinct within 5% of exact; CMS estimate upper-bounds exact") {
     val dir = "/root/testdata/sf0.001"
-    val approx = graft.catalog.Sketches.approxDistinct.build(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val approx = graft.catalog.Sketches.approxDistinct.run(spark, dir)(_.collect())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     val exact = graft.core.Tables.events(spark, dir)
       .groupBy("event_type").agg(countDistinct(col("user_id")).as("n"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -62,13 +62,13 @@ class ScaleTechniquesSpec extends AnyFunSuite {
         s"$k: approx ${approx(k)} vs exact $n")
     }
     // benched rsd 0.05 twin: 3x its rsd (15%) — the same 3σ discipline
-    val rsd5 = graft.catalog.Sketches.approxDistinctRsd5.build(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val rsd5 = graft.catalog.Sketches.approxDistinctRsd5.run(spark, dir)(_.collect())
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
     exact.foreach { case (k, n) =>
       assert(math.abs(rsd5(k) - n) <= math.max(1, n * 0.15),
         s"$k: rsd5 approx ${rsd5(k)} vs exact $n")
     }
-    val cms = graft.catalog.Sketches.heavyHitters.build(spark, dir).collect()
+    val cms = graft.catalog.Sketches.heavyHitters.run(spark, dir)(_.collect())
     cms.foreach { r =>
       assert(r.getAs[Long]("estimated_n") >= r.getAs[Long]("exact_n"))
     }
@@ -102,21 +102,21 @@ class ScaleTechniquesSpec extends AnyFunSuite {
     // single partition the way the empty-partition window does
     val coalesceKey = "spark.sql.adaptive.coalescePartitions.enabled"
     val prev = spark.conf.get(coalesceKey)
-    val dist =
+    val viaDist =
       try {
         spark.conf.set(coalesceKey, "false")
-        val d = graft.ops.GlobalIndex
-          .withRowNumber(df, Seq(col("v").desc, col("id").asc), "rn")
-        // stays distributed: no single-partition funnel
-        assert(d.rdd.getNumPartitions > 1)
-        d
+        graft.core.Pins.using { pins =>
+          val d = graft.ops.GlobalIndex
+            .withRowNumber(df, Seq(col("v").desc, col("id").asc), "rn", pins)
+          // stays distributed: no single-partition funnel
+          assert(d.rdd.getNumPartitions > 1)
+          d.orderBy("rn").collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("rn")))
+        }
       } finally spark.conf.set(coalesceKey, prev)
     val viaWindow = df.withColumn("rn",
       row_number().over(org.apache.spark.sql.expressions.Window
         .orderBy(col("v").desc, col("id").asc)))
       .orderBy("rn").collect().map(r => (r.getAs[Long]("id"), r.getAs[Int]("rn").toLong))
-    val viaDist = dist.orderBy("rn").collect()
-      .map(r => (r.getAs[Long]("id"), r.getAs[Long]("rn")))
     assert(viaDist.toSeq == viaWindow.map { case (id, rn) => (id, rn) }.toSeq)
   }
 

@@ -48,6 +48,17 @@ class ServeSpec extends AnyFunSuite {
     }
   }
 
+  test("served requests leave no pinned RDD behind") {
+    val sc = spark.sparkContext
+    val persisted = sc.getPersistentRDDs.keySet
+    withServer { srv =>
+      (1 to 5).foreach { _ =>
+        assert(get(s"${srv.baseUrl}/query/q_global_rownum?limit=3")._1 == 200)
+      }
+    }
+    assert((sc.getPersistentRDDs.keySet -- persisted).isEmpty)
+  }
+
   test("unknown query is a 404, not an exception") {
     withServer { srv =>
       val (st, body) = get(s"${srv.baseUrl}/query/q_nope")

@@ -5,12 +5,10 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions.{col, unix_micros}
 import org.apache.spark.sql.internal.SQLConf
-import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The shared session contract of every main: a live session is used as
-  * it is (not reconfigured, not cleaned up, not stopped), and the
-  * between-query sweep releases what a query left cached.
+  * it is (not reconfigured, not cleaned up, not stopped).
   */
 class SessionSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -63,21 +61,6 @@ class SessionSpec extends AnyFunSuite {
   test("the builder leaves adaptive execution to Spark's defaults, which are on") {
     assert(SQLConf.ADAPTIVE_EXECUTION_ENABLED.defaultValue.contains(true))
     assert(SQLConf.COALESCE_PARTITIONS_ENABLED.defaultValue.contains(true))
-  }
-
-  test("sweep unpersists every persisted RDD and cached Dataset") {
-    val rdd = spark.sparkContext.parallelize(1 to 10).persist()
-    rdd.count()
-    val ds = spark.range(10).cache()
-    ds.count()
-    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sharedState.cacheManager
-    assert(spark.sparkContext.getPersistentRDDs.contains(rdd.id))
-    assert(!cacheManager.isEmpty)
-    Session.sweep(spark)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
-    assert(cacheManager.isEmpty)
-    assert(ds.storageLevel == StorageLevel.NONE)
   }
 
   test("Tables.events sets nanos-as-long only for a TIMESTAMP(NANOS) file") {

@@ -93,12 +93,12 @@ class StreamingPacedSweepSpec extends AnyFunSuite {
     test(s"$name: paced 3-batch run equals single-batch run") {
       val qd = SparkEntry.catalog.find(_.name == name)
         .getOrElse(fail(s"$name not in catalog"))
-      val single = qd.build(spark, sf).collect().map(_.toSeq).toSeq
+      val single = qd.run(spark, sf)(_.collect()).map(_.toSeq).toSeq
       val batches = new BatchCounter
       spark.streams.addListener(batches)
       spark.conf.set("spark.graft.stream.maxFilesPerTrigger", "1")
       val paced =
-        try qd.build(spark, pacedDir).collect().map(_.toSeq).toSeq
+        try qd.run(spark, pacedDir)(_.collect()).map(_.toSeq).toSeq
         finally {
           spark.conf.unset("spark.graft.stream.maxFilesPerTrigger")
           batches.settle()
@@ -127,7 +127,7 @@ class StreamingPacedSweepSpec extends AnyFunSuite {
     poller.start()
     try {
       val qd = SparkEntry.catalog.find(_.name == "q_stream_tws_summary").get
-      qd.build(spark, sf).write.format("noop").mode("overwrite").save()
+      qd.run(spark, sf)(_.write.format("noop").mode("overwrite").save())
     } finally {
       done.set(true)
       poller.join()

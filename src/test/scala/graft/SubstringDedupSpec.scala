@@ -23,8 +23,8 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   private def spans(docs: Seq[(Long, String)]): Seq[(Long, Long, Long, Long)] = {
     import spark.implicits._
-    TextAnalysis.substringSpans(docs.toDF("doc_id", "text"), L)
-      .collect()
+    graft.core.Pins.using(TextAnalysis.substringSpans(docs.toDF("doc_id", "text"), L, _)
+      .collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .toSeq
   }
@@ -66,8 +66,8 @@ class SubstringDedupSpec extends AnyFunSuite {
 
   private def scrub(docs: Seq[(Long, String)]): Seq[(Long, Long, Long, Double)] = {
     import spark.implicits._
-    TextAnalysis.substringScrubRetention(docs.toDF("doc_id", "text"), L)
-      .collect()
+    graft.core.Pins.using(TextAnalysis.substringScrubRetention(docs.toDF("doc_id", "text"), L, _)
+      .collect())
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
       .toSeq
   }

@@ -89,8 +89,7 @@ class VideoHashSpec extends AnyFunSuite {
   }
 
   test("catalog query equals brute-force hamming pairs at sf0.001") {
-    val rows = SparkEntry.queries("q_video_neardup")(spark, "/root/testdata/sf0.001")
-      .collect()
+    val rows = SparkEntry.queries("q_video_neardup").run(spark, "/root/testdata/sf0.001")(_.collect())
     val sig = VideoHash.fingerprints(spark,
         graft.core.Tables.documents(spark, "/root/testdata/sf0.001"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
